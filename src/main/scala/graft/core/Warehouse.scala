@@ -83,6 +83,11 @@ class Warehouse(spark: SparkSession, root: String) {
       .map(e => if (e.startsWith("/") || e.contains("://")) e else s"$dir/$e")
   }
 
+  /** Whether version `v`'s file list is on disk (the metadata-log prune
+    * deletes the lists of retired versions). */
+  def hasVersionLog(schema: String, table: String, v: Long): Boolean =
+    fs.exists(logPath(tableDir(schema, table), v))
+
   def read(schema: String, table: String): DataFrame = {
     val dirs = dataDirs(schema, table)
     require(dirs.nonEmpty, s"no such table $schema.$table")

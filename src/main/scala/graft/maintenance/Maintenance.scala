@@ -16,10 +16,10 @@ import graft.core.Warehouse
   *   - metadata-log prune: keep current-month entries, else the latest
   *     (clean_metadata.py:339-343,367-394, monthly `0 12 L * *`)
   *
-  * The reference fans these out over ThreadPools of 10-20 workers; here each
-  * job is a single Spark action (listing joins are DataFrames) and
-  * multi-table fan-out is a plain Scala loop over listTables() — at cluster
-  * scale the per-table work is already distributed.
+  * Each job here works on one table. The reference fans them out over
+  * ThreadPools of 10-20 workers; Housekeeping's graphs run them one task
+  * per table, `defaultParallelism` tables at a time, which is safe because
+  * no two of them touch the same table.
   */
 object Maintenance {
 
@@ -43,20 +43,42 @@ object Maintenance {
               targetBytes: Long = TargetFileBytes): Long = {
     val bytes = tableBytes(spark, wh, schema, table)
     val parts = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    wh.overwrite(schema, table, wh.read(schema, table).repartition(parts))
+    val dirs = wh.dataDirs(schema, table)
+    if (dirs.size == 1 && dataFileCount(spark, dirs.head) <= parts) -1L
+    else wh.overwrite(schema, table, wh.read(schema, table).repartition(parts))
+  }
+
+  /** Parquet files under a data dir, partition subdirs included (names
+    * starting with `_` or `.` are markers and checksums). */
+  private def dataFileCount(spark: SparkSession, dir: String): Int = {
+    val p = new Path(dir)
+    val it = fsOf(spark, p).listFiles(p, true)
+    var n = 0
+    while (it.hasNext) {
+      val name = it.next().getPath.getName
+      if (!name.startsWith("_") && !name.startsWith(".")) n += 1
+    }
+    n
   }
 
   /** Files on disk MINUS files any retained version references → delete.
     * `retainMs`: only files older than this horizon are deleted (the 30-day
-    * guard). Returns deleted paths (sorted, for the housekeeping log). */
+    * guard). Returns deleted paths (sorted, for the housekeeping log).
+    *
+    * Fails closed: a version below current whose file list is absent was
+    * retired by [[pruneMetadataLog]] and references nothing; any other
+    * version that cannot be read (the current one included) throws before
+    * anything is deleted, since its data would otherwise look orphaned. */
   def orphanSweep(spark: SparkSession, wh: Warehouse, schema: String, table: String,
                   retainMs: Long = 0L, now: Long = System.currentTimeMillis()): Seq[String] = {
     val dir = wh.tableDir(schema, table)
     val dataRoot = new Path(s"$dir/data")
     val fs = fsOf(spark, dataRoot)
     if (!fs.exists(dataRoot)) return Seq.empty
-    val referenced = (1L to wh.currentVersion(schema, table))
-      .flatMap(v => scala.util.Try(wh.dataDirs(schema, table, v)).getOrElse(Seq.empty))
+    val current = wh.currentVersion(schema, table)
+    val referenced = (1L to current)
+      .filter(v => v == current || wh.hasVersionLog(schema, table, v))
+      .flatMap(v => wh.dataDirs(schema, table, v))
       .map(d => new Path(d).toUri.getPath).toSet
     val orphans = fs.listStatus(dataRoot).toSeq
       .filter(st => !referenced.contains(st.getPath.toUri.getPath))

@@ -24,6 +24,10 @@ import graft.workflow.Workflow.{AllDone, TaskSpec}
   * routes to a notification row instead of failing the run — exactly the
   * reference's branch (dag_etlpipeline__staging.py:125-130).
   *
+  * The task graph runs sequentially: every source's tasks append to the
+  * shared `check.*` tables. Inside one vault task the hub, satellite and
+  * link merges run concurrently ([[vaultSource]]).
+  *
   * Schemas: op metadata in `op_metadata`, staged sources in `staging`,
   * vault entities in `raw_vault`, drift + notifications in `check`.
   */
@@ -68,22 +72,27 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     drifted
   }
 
-  /** Build + merge the vault entities for one staged source. */
+  /** Build + merge the vault entities for one staged source. The hub,
+    * satellite and link merges run concurrently: all three read the same
+    * staged frame and each writes its own table. A failed merge is rethrown
+    * only once the others have finished, so the task's retry never overlaps
+    * them. */
   private[pipeline] def vaultSource(src: SourceSpec, etlDate: String): Unit = {
     val staged = wh.read("staging", src.name)
-    val hub = Vault.hub(staged, src.name, src.businessKeys, lit(etlDate), src.name)
-    mergeEntity("raw_vault", s"hub_${src.name}", hub, s"hub_${src.name}_hash_key")
-    val sat = Vault.satellite(
-      staged.withColumn("load_date", lit(etlDate)),
-      src.name, src.businessKeys, src.attrs, "load_date", src.businessKeys)
-    mergeEntity("raw_vault", s"sat_${src.name}", sat,
+    val hub = () => mergeEntity("raw_vault", s"hub_${src.name}",
+      Vault.hub(staged, src.name, src.businessKeys, lit(etlDate), src.name),
+      s"hub_${src.name}_hash_key")
+    val sat = () => mergeEntity("raw_vault", s"sat_${src.name}",
+      Vault.satellite(staged.withColumn("load_date", lit(etlDate)),
+        src.name, src.businessKeys, src.attrs, "load_date", src.businessKeys),
       s"sat_${src.name}_hash_key", extraKeys = Seq("load_date", "hash_diff"))
-    src.linkTo.foreach { case (other, otherKeys) =>
-      val link = Vault.link(staged, s"${src.name}_$other",
-        Seq(src.name -> src.businessKeys, other -> otherKeys), lit(etlDate), src.name)
-      mergeEntity("raw_vault", s"link_${src.name}_$other", link,
+    val link = src.linkTo.map { case (other, otherKeys) =>
+      () => mergeEntity("raw_vault", s"link_${src.name}_$other",
+        Vault.link(staged, s"${src.name}_$other",
+          Seq(src.name -> src.businessKeys, other -> otherKeys), lit(etlDate), src.name),
         s"link_${src.name}_${other}_hash_key")
     }
+    Workflow.fanOut(spark.sparkContext.defaultParallelism)(Seq(hub, sat) ++ link)
   }
 
   private def mergeEntity(schema: String, table: String, df: DataFrame,

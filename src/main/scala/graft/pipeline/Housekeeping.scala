@@ -17,10 +17,15 @@ import graft.workflow.Workflow.{AllDone, TaskSpec}
   *   - unused-file sweep, daily `0 6 * * *` (housekeeping__unused_file):
   *     orphan data dirs older than the retention horizon.
   *
-  * The reference fans each over 10-20 thread pools; here every task body is
-  * one Spark job whose work is already distributed, and the graph gives the
-  * same per-table isolation (one table's failure doesn't stop the rest —
-  * `end` is all_done and the rollup raises afterwards).
+  * The reference fans each over 10-20 thread pools; here the per-table
+  * tasks of these three graphs run concurrently, `defaultParallelism` at a
+  * time (Workflow.run's `parallelism`): each task touches exactly one table,
+  * and one small table's Spark jobs leave most cores idle. The graph gives
+  * the same per-table isolation (one table's failure doesn't stop the rest —
+  * `end` is all_done and the rollup raises afterwards). The ANN and mart
+  * graphs below stay sequential: every ANN task appends to the shared
+  * `ann_gate_log`, and mart refreshes rewrite the shared `graft_mart`
+  * catalog.
   */
 object Housekeeping {
 
@@ -68,7 +73,7 @@ object Housekeeping {
                     targetBytes: Long = Maintenance.TargetFileBytes): Workflow.RunResult =
     Workflow.run(perTableGraph(wh, "compact") { (s, t) =>
       Maintenance.compact(spark, wh, s, t, targetBytes); ()
-    })
+    }, parallelism = spark.sparkContext.defaultParallelism)
 
   /** Monthly metadata prune, gated on whether compaction ran this month
     * (reference clean_metadata.py:206-224 month-bucket existence check). */
@@ -82,7 +87,7 @@ object Housekeeping {
     val gated = Seq(TaskSpec("gate", branch = Some(() =>
       if (compactionRanThisMonth) Seq("start") else Seq.empty))) ++
       work.map(t => t.copy(deps = if (t.id == "start") Seq("gate") else t.deps))
-    Workflow.run(gated)
+    Workflow.run(gated, parallelism = spark.sparkContext.defaultParallelism)
   }
 
   /** Daily orphan sweep with the 30-day retention guard. */
@@ -90,7 +95,7 @@ object Housekeeping {
                      retainMs: Long = OrphanRetentionMs): Workflow.RunResult =
     Workflow.run(perTableGraph(wh, "sweep") { (s, t) =>
       Maintenance.orphanSweep(spark, wh, s, t, retainMs); ()
-    })
+    }, parallelism = spark.sparkContext.defaultParallelism)
 
   /** A bucketed read-side projection of a warehouse table: bucket keys +
     * count (Warehouse.publishBucketedMart / mergeBucketedMart). */

@@ -1,6 +1,12 @@
 package graft.workflow
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
 
 /** Deterministic workflow runner — the engine's control plane replacing the
   * reference's Airflow DAG semantics (SURVEY §2.11): dependencies,
@@ -9,10 +15,15 @@ import scala.collection.mutable
   * end-of-run status rollup that *raises* after the all_done tasks ran
   * (reference utlis/etl_manager.py:471-548 — subtle vs fail-fast).
   *
-  * Tasks execute sequentially in deterministic topological order (input
-  * order breaks ties); at cluster scale the data-plane parallelism lives
-  * inside each task's Spark job, and independent tasks can be dispatched to
-  * Spark scheduler pools — the runner's semantics don't change.
+  * By default tasks execute sequentially in deterministic topological order
+  * (input order breaks ties). With `parallelism > 1` the runner still
+  * decides trigger rules, branches and resume-skips on the calling thread,
+  * then runs each wave of ready non-branch tasks together on a pool of that
+  * many threads ([[fanOut]]) and records every status before the next wave
+  * starts — statuses, attempts, errors and the rollup are the same as the
+  * sequential run's. Only graphs whose concurrent tasks write disjoint
+  * tables may ask for it: the per-table housekeeping fan-outs do; the
+  * pipelines' own graphs, whose tasks append to shared tables, do not.
   */
 object Workflow {
 
@@ -105,9 +116,10 @@ object Workflow {
     * `runTimeoutMs` is the dagrun_timeout (reference 90–360 min,
     * dag_etlpipeline__root.py:27): once the run exceeds it, no further task
     * starts — each remaining runnable task is marked failed with
-    * `dagrun_timeout`, so the end-of-run rollup raises. */
+    * `dagrun_timeout`, so the end-of-run rollup raises. `parallelism`: how
+    * many tasks of one wave may run at once (see the object doc). */
   def run(tasks: Seq[TaskSpec], resumeDone: Set[String] = Set.empty,
-          runTimeoutMs: Option[Long] = None): RunResult = {
+          runTimeoutMs: Option[Long] = None, parallelism: Int = 1): RunResult = {
     val deadline = runTimeoutMs.map(System.currentTimeMillis() + _)
     val byId = tasks.map(t => t.id -> t).toMap
     require(byId.size == tasks.size, "duplicate task ids")
@@ -115,8 +127,9 @@ object Workflow {
       require(byId.contains(d), s"task ${t.id} depends on unknown $d")))
 
     val status = mutable.LinkedHashMap.empty[String, Status]
-    val attempts = mutable.Map.empty[String, Int].withDefaultValue(0)
-    val errors = mutable.Map.empty[String, String]
+    // written by the pooled tasks when parallelism > 1
+    val attempts = TrieMap.empty[String, Int]
+    val errors = TrieMap.empty[String, String]
     // branch selections: dependents of a branch task not chosen get skipped
     val notChosen = mutable.Set.empty[String]
 
@@ -138,20 +151,20 @@ object Workflow {
     }
 
     // one attempt, bounded by the task's execution timeout when set. The
-    // attempt runs on a pooled thread only in the timeout case; on timeout
+    // attempt runs on its own thread only in the timeout case; on timeout
     // the attempt is abandoned (recorded failed — the thread itself cannot
     // be safely killed, same as Airflow's zombie-task reality).
     def attemptOnce(t: TaskSpec, body: () => Unit): Unit = t.timeoutMs match {
       case None => body()
       case Some(ms) =>
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        try Await.result(Future(body()), Duration(ms, "ms"))
+        val pool = Executors.newSingleThreadExecutor(workerThreads)
+        try pool.submit(new Callable[Unit] { def call(): Unit = body() })
+          .get(ms, TimeUnit.MILLISECONDS)
         catch {
-          case _: java.util.concurrent.TimeoutException =>
+          case _: TimeoutException =>
             throw new IllegalStateException(s"task ${t.id} exceeded ${ms}ms execution timeout")
-        }
+          case e: ExecutionException => throw e.getCause
+        } finally pool.shutdown()
     }
 
     def execute(t: TaskSpec): Status = {
@@ -190,12 +203,19 @@ object Workflow {
 
     var progressed = true
     while (progressed) {
-      progressed = false
-      tasks.filter(ready).foreach { t =>
+      val wave = tasks.filter(ready)
+      progressed = wave.nonEmpty
+      // no task of a wave depends on another, so deciding each here and
+      // running the pooled ones after gives the statuses a sequential sweep
+      // gives; with parallelism 1 nothing is pooled
+      val pooled = wave.filter { t =>
         val decided = decide(t)
-        status(t.id) = if (decided != null) decided else execute(t)
-        progressed = true
+        if (decided != null) { status(t.id) = decided; false }
+        else if (parallelism > 1 && t.branch.isEmpty && !resumeDone.contains(t.id)) true
+        else { status(t.id) = execute(t); false }
       }
+      pooled.zip(fanOut(parallelism)(pooled.map(t => () => execute(t))))
+        .foreach { case (t, s) => status(t.id) = s }
     }
     require(status.size == tasks.size, "cycle detected in task graph")
 
@@ -206,7 +226,38 @@ object Workflow {
         case Skipped => "skipped"
         case UpstreamFailed => "upstream_failed"
       }
-      TaskRun(t.id, s, attempts(t.id), errors.get(t.id))
+      TaskRun(t.id, s, attempts.getOrElse(t.id, 0), errors.get(t.id))
     })
+  }
+
+  /** Run every thunk, at most `parallelism` at once, and return the results
+    * in input order. The first failure (in input order) is rethrown only
+    * after every sibling has finished, so a caller's retry never starts
+    * while a sibling is still writing. The pool is created per call: its
+    * threads are started by the calling thread and so inherit its Spark
+    * local properties (job group, description, scheduler pool). With one
+    * thunk or `parallelism` 1 the thunks run on the calling thread. */
+  def fanOut[T](parallelism: Int)(thunks: Seq[() => T]): Seq[T] = {
+    val n = math.min(parallelism, thunks.size)
+    val outcomes: Seq[Try[T]] =
+      if (n <= 1) thunks.map(f => Try(f()))
+      else {
+        val pool = Executors.newFixedThreadPool(n, workerThreads)
+        try pool.invokeAll(thunks.map(f => new Callable[T] { def call(): T = f() }).asJava)
+          .asScala.toSeq.map(r => Try(r.get()).recoverWith {
+            case e: ExecutionException => Failure(e.getCause)
+          })
+        finally pool.shutdown()
+      }
+    outcomes.map(_.get)
+  }
+
+  private val workerThreads: ThreadFactory = new ThreadFactory {
+    private val n = new AtomicInteger
+    def newThread(r: Runnable): Thread = {
+      val t = new Thread(r, s"graft-workflow-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
   }
 }

@@ -85,6 +85,37 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.read("s", "t").as[(Int, String)].collect().toSet === before)
   }
 
+  test("compaction skips a table that is one version in few enough files") {
+    val wh = freshWh()
+    wh.overwrite("s", "t", Seq((1, "a"), (2, "b")).toDF("id", "v").coalesce(1))
+    assert(Maintenance.compact(spark, wh, "s", "t") === -1L)
+    assert(wh.currentVersion("s", "t") === 1L)
+    // one version spread over more files than the target count is rewritten
+    wh.overwrite("s", "u", Seq((1, "a"), (2, "b")).toDF("id", "v").repartition(2))
+    assert(Maintenance.compact(spark, wh, "s", "u") === 2L)
+    assert(Maintenance.compact(spark, wh, "s", "u") === -1L)
+    assert(wh.read("s", "u").as[(Int, String)].collect().toSet === Set((1, "a"), (2, "b")))
+  }
+
+  test("orphan sweep fails closed on an unreadable version list") {
+    import org.apache.hadoop.fs.Path
+    val wh = freshWh()
+    (1 to 3).foreach(i => wh.overwrite("s", "t", Seq((i, i.toString)).toDF("id", "v")))
+    val dir = wh.tableDir("s", "t")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dataDirs() = fs.listStatus(new Path(s"$dir/data")).map(_.getPath.getName).toSet
+    // a retained version whose list is unreadable (here a directory)
+    fs.delete(new Path(s"$dir/_log/v1.list"), false)
+    fs.mkdirs(new Path(s"$dir/_log/v1.list"))
+    intercept[Exception](Maintenance.orphanSweep(spark, wh, "s", "t"))
+    assert(dataDirs() === Set("v1", "v2", "v3"))
+    // the current version's list is absent
+    fs.delete(new Path(s"$dir/_log/v1.list"), true)
+    fs.delete(new Path(s"$dir/_log/v3.list"), false)
+    intercept[Exception](Maintenance.orphanSweep(spark, wh, "s", "t"))
+    assert(dataDirs() === Set("v1", "v2", "v3"))
+  }
+
   test("backup manifest restores the catalog after metadata loss") {
     val wh = freshWh()
     wh.overwrite("s", "t", Seq((1, "a"), (2, "b")).toDF("id", "v"))

@@ -26,6 +26,53 @@ class HousekeepingSpec extends SparkSpec {
     assert(wh.dataDirs("s", "a").size === 1) // 3 append dirs → 1
   }
 
+  test("compaction jobs run under the job group of the call that started them") {
+    // three tables appended twice, so every table needs a rewrite
+    def uncompacted(): Warehouse = {
+      val wh = new Warehouse(spark, Files.createTempDirectory("graft_hk_").toString)
+      Seq("a", "b", "c").foreach(t => (1 to 2).foreach(i =>
+        wh.append("s", t, Seq((i, t)).toDF("id", "v"))))
+      wh
+    }
+    val (first, second) = (uncompacted(), uncompacted())
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    // listener events arrive in order, so a marker job's start delimits the
+    // jobs started before it
+    def mark(id: String): Unit = {
+      sc.setJobGroup(id, id, interruptOnCancel = false)
+      spark.range(1).count()
+    }
+    sc.addSparkListener(listener)
+    try {
+      // an earlier call under another group must not leave its group on the
+      // threads of a later call
+      sc.setJobGroup("hk-earlier", "earlier housekeeping", interruptOnCancel = false)
+      Housekeeping.runCompaction(spark, first).assertAllSuccess()
+      mark("hk-marker-1")
+      sc.setJobGroup("hk-compaction", "housekeeping under test", interruptOnCancel = false)
+      Housekeeping.runCompaction(spark, second).assertAllSuccess()
+      mark("hk-marker-2")
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groups.contains("hk-marker-2") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val compaction = groups.toArray.map(_.toString).toSeq
+      .dropWhile(_ != "hk-marker-1").dropWhile(_ == "hk-marker-1")
+      .takeWhile(_ != "hk-marker-2")
+    assert(compaction.size >= 3, s"one rewrite job per table at least: $compaction")
+    assert(compaction.forall(_ == "hk-compaction"), compaction)
+    assert(Seq("a", "b", "c").forall(t => second.dataDirs("s", t).size == 1))
+  }
+
   test("metadata prune gate: skips all work when compaction didn't run this month") {
     val wh = whWithTables()
     val skipped = Housekeeping.runMetadataPrune(spark, wh, "1970-01",

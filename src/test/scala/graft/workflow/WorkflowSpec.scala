@@ -149,4 +149,94 @@ class WorkflowSpec extends AnyFunSuite {
     assert(r.runs.find(_.taskId == "late").get.error === Some("dagrun_timeout"))
     intercept[IllegalStateException](r.assertAllSuccess())
   }
+
+  // ---- parallelism > 1 -------------------------------------------------
+
+  test("parallel waves: two independent tasks run at the same time") {
+    val met = new java.util.concurrent.CountDownLatch(2)
+    def meet(id: String) = TaskSpec(id, run = () => {
+      met.countDown()
+      if (!met.await(10, java.util.concurrent.TimeUnit.SECONDS))
+        sys.error(s"$id ran alone")
+    })
+    val r = Workflow.run(Seq(meet("a"), meet("b")), parallelism = 4)
+    r.assertAllSuccess()
+  }
+
+  /** Truth-table, retry, timeout, resume and dagrun-timeout graphs, each
+    * rebuilt for every run (some keep state in closures):
+    * (tasks, resumeDone, runTimeoutMs). */
+  private def graphs: Seq[(String, () => (Seq[TaskSpec], Set[String], Option[Long]))] = Seq(
+    "truth table" -> (() => (Seq(
+      spec("ok"), spec("bad", fail = true),
+      TaskSpec("check", branch = Some(() => Seq("chosen"))),
+      spec("chosen", Seq("check")), spec("unchosen", Seq("check")),
+      spec("s_ok", Seq("ok")), spec("s_bad", Seq("bad")), spec("s_skip", Seq("unchosen")),
+      spec("n_bad", Seq("bad"), rule = NoneSkipped), spec("n_skip", Seq("unchosen"), rule = NoneSkipped),
+      spec("d_all", Seq("bad", "unchosen", "s_bad"), rule = AllDone),
+      spec("end", Seq("s_ok", "s_bad", "s_skip", "n_bad", "n_skip", "d_all"), rule = AllDone)),
+      Set.empty[String], None)),
+    "retries" -> (() => {
+      val calls = new java.util.concurrent.atomic.AtomicInteger
+      (Seq(
+        TaskSpec("flaky", run = () => if (calls.incrementAndGet() < 3) sys.error("flake"), retries = 3),
+        spec("never", fail = true, retries = 2),
+        spec("after", Seq("flaky", "never"), rule = AllDone)), Set.empty[String], None)
+    }),
+    "timeout" -> (() => {
+      val calls = new java.util.concurrent.atomic.AtomicInteger
+      (Seq(
+        TaskSpec("hung", run = () => Thread.sleep(60000), timeoutMs = Some(100L)),
+        TaskSpec("slow_once", run = () => if (calls.incrementAndGet() == 1) Thread.sleep(60000),
+          retries = 1, timeoutMs = Some(100L)),
+        TaskSpec("after", deps = Seq("hung")),
+        TaskSpec("end", deps = Seq("after", "slow_once"), triggerRule = AllDone)),
+        Set.empty[String], None)
+    }),
+    "resume" -> (() => (Seq(
+      spec("a"), spec("b"), spec("c", Seq("a", "b")),
+      TaskSpec("check", branch = Some(() => Seq.empty)), spec("work", Seq("check"))),
+      Set("a", "check"), None)),
+    "dagrun timeout" -> (() => (Seq(
+      TaskSpec("quick"), TaskSpec("slow", run = () => Thread.sleep(150)),
+      TaskSpec("late", deps = Seq("slow", "quick")),
+      TaskSpec("end", deps = Seq("late"), triggerRule = AllDone)),
+      Set.empty[String], Some(50L))))
+
+  graphs.foreach { case (name, build) =>
+    test(s"parallel waves: the $name graph gives the sequential RunResult") {
+      def runAt(p: Int) = {
+        val (tasks, done, timeout) = build()
+        Workflow.run(tasks, resumeDone = done, runTimeoutMs = timeout, parallelism = p)
+      }
+      assert(runAt(4) === runAt(1))
+    }
+  }
+
+  test("parallel waves: a failing sibling does not stop the rest of its wave") {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    def task(id: String, fail: Boolean = false) = TaskSpec(id, run = () => {
+      Thread.sleep(50)
+      ran.add(id)
+      if (fail) sys.error(s"$id boom")
+    })
+    val r = Workflow.run(Seq(task("a", fail = true), task("b"), task("c"),
+      TaskSpec("end", deps = Seq("a", "b", "c"), triggerRule = AllDone)), parallelism = 4)
+    assert(r.status("a") === "failed")
+    assert(Seq("b", "c", "end").map(r.status) === Seq("success", "success", "success"))
+    assert(ran.toArray.toSet === Set("a", "b", "c"))
+  }
+
+  test("fanOut joins every sibling before it rethrows the first failure") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](Workflow.fanOut(4)(Seq(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(200); finished.set(true) })))
+    assert(e.getMessage === "first")
+    assert(finished.get, "the helper threw while a sibling was still running")
+  }
+
+  test("fanOut returns results in input order") {
+    assert(Workflow.fanOut(3)((1 to 5).map(i => () => { Thread.sleep(10L * (5 - i)); i })) === (1 to 5))
+  }
 }
