@@ -62,9 +62,9 @@ object Bench {
       only.forall(_.exists(p => name.startsWith(p)))
     }
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0")
-      selected.foreach { case (_, fn) =>
+      selected.foreach { case (name, fn) =>
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e") }
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         gcIfDiskPressured() // free shuffle files during warmup too
@@ -78,20 +78,17 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       gcIfDiskPressured()
     }
-    // a census-guard refusal (lshCandidatePairs' budget contract, e.g.
-    // q173's documented sf1.0 stance) is a DECLARED skip, not a failure:
-    // it records -2 so one query's scale contract can't read as a broken
-    // sweep (-1 stays "failed"); totals and cross-round compares already
-    // exclude non-positive entries
-    def isGuardRefusal(e: Throwable): Boolean =
-      e.isInstanceOf[IllegalArgumentException] && e.getMessage != null &&
-        e.getMessage.contains("exceed") && e.getMessage.contains("budget")
+    // a census-guard refusal (PairBudgetExceeded, e.g. q173's documented
+    // sf1.0 stance) is a DECLARED skip, not a failure: it records -2 so one
+    // query's scale contract can't read as a broken sweep (-1 stays
+    // "failed"); totals and cross-round compares already exclude
+    // non-positive entries
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       val status =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); 0 }
         catch {
-          case e: Throwable if isGuardRefusal(e) =>
+          case e: graft.operators.PairBudgetExceeded =>
             System.err.println(s"[bench] $name REFUSED by census guard: ${e.getMessage}"); -2
           case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1
         }

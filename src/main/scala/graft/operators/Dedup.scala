@@ -144,21 +144,19 @@ object Dedup {
 
   /** LSH banding: b bands × r rows (k = b*r); band hash = md5 of the band's
     * minhashes. Docs sharing any band hash are near-dup candidates. */
-  def lshBands(sig: DataFrame, idCol: String, b: Int, r: Int): DataFrame = {
+  def lshBands(sig: DataFrame, idCol: String, b: Int, r: Int): DataFrame =
+    bandFrame(sig, Seq(idCol), b, r)
+
+  /** One (keep..., band, band_hash) row per doc and band — the single
+    * band-struct builder behind [[lshBands]] and [[bandRows]]. */
+  private def bandFrame(sig: DataFrame, keep: Seq[String], b: Int, r: Int): DataFrame = {
     val bandStructs = (0 until b).map { j =>
       struct(lit(j).as("band"),
         md5(concat_ws("|", (0 until r).map(i => col(s"mh_${j * r + i}").cast("string")): _*)).as("bh"))
     }
-    sig.select(col(idCol), explode(array(bandStructs: _*)).as("__b"))
-      .select(col(idCol), col("__b.band").as("band"), col("__b.bh").as("band_hash"))
+    sig.select(keep.map(col) :+ explode(array(bandStructs: _*)).as("__b"): _*)
+      .select(keep.map(col) :+ col("__b.band").as("band") :+ col("__b.bh").as("band_hash"): _*)
   }
-
-  /** Default candidate-pair budget for the UNCAPPED LSH path: the census
-    * guard in [[lshCandidatePairs]] refuses above it. 50M pairs ≈ the
-    * verify stage a 32-core box clears in minutes; the sf1.0 probe's
-    * degenerate corpus measured 58.4M — exactly the run the guard exists
-    * to stop. Same budget class as semDedup's pairBudget. */
-  val DefaultCandidatePairBudget: Long = 50_000_000L
 
   /** (id, sz, band, band_hash) band rows hash-partitioned ONCE on the
     * join key — the single exchange the bucket census, the bucket-cap
@@ -170,16 +168,30 @@ object Dedup {
     * action. No explicit partition count: AQE coalesces a kilobyte band
     * frame to one task while a 100 TB corpus keeps the session's full
     * shuffle width. */
-  private def bandRows(sig: DataFrame, idCol: String, b: Int, r: Int): DataFrame = {
-    val bandStructs = (0 until b).map { j =>
-      struct(lit(j).as("band"),
-        md5(concat_ws("|", (0 until r).map(i => col(s"mh_${j * r + i}").cast("string")): _*)).as("bh"))
-    }
-    sig.select(col(idCol), col("sz"), explode(array(bandStructs: _*)).as("__b"))
-      .select(col(idCol), col("sz"),
-        col("__b.band").as("band"), col("__b.bh").as("band_hash"))
-      .repartition(col("band"), col("band_hash"))
-  }
+  private def bandRows(sig: DataFrame, idCol: String, b: Int, r: Int): DataFrame =
+    bandFrame(sig, Seq(idCol, "sz"), b, r).repartition(col("band"), col("band_hash"))
+
+  /** Per-bucket member counts `n` of a band frame (plus `ssz`, the
+    * members' summed set sizes, when the frame carries `sz`). */
+  private def bucketCounts(bands: DataFrame, withSz: Boolean): DataFrame =
+    bands.groupBy(col("band"), col("band_hash"))
+      .agg(count(lit(1)).as("n"), (if (withSz) Seq(sum(col("sz")).as("ssz")) else Nil): _*)
+
+  /** The band rows whose bucket has at most `cap` members. */
+  private def capBuckets(bands: DataFrame, buckets: DataFrame, cap: Int): DataFrame =
+    bands.join(buckets.filter(col("n") <= cap).select(col("band"), col("band_hash")),
+      Seq("band", "band_hash"))
+
+  /** The uncapped LSH refusal, shared by every band-bucket census. */
+  private def lshRefusal(budget: Long)(c: PairCensus): String =
+    s"${c.pairs} band-bucket candidate pairs exceed " +
+      s"the budget $budget (largest bucket: ${c.hottest} " +
+      "members). Low-entropy corpora (boilerplate, templates) make " +
+      "the uncapped pair stage quadratic — pass " +
+      "maxBucketSize = Some(cap) (e.g. Some(24)) to drop degenerate " +
+      "buckets (their mass belongs to the repeated-substring " +
+      "operators), or opt in to uncapped-exact explicitly with " +
+      "candidatePairBudget <= 0."
 
   /** The candidate self-join over (cached, co-partitioned) band rows:
     * exchange-free on both sides — the cache's HashPartitioning(band,
@@ -194,77 +206,61 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
 
+  /** [[candidatePairsWithGate]]'s result: the lazy candidate frame, the
+    * band cache for the caller to release once the candidates are
+    * materialized, and the bucket census. The census sums bound the
+    * verify stage (see [[candidatePairsWithGate]]). */
+  private[graft] final case class LshCandidates(candidates: DataFrame, bands: DataFrame,
+                                                census: PairCensus) {
+    /** Σ n·(n−1)/2 over the KEPT buckets: an upper bound on distinct
+      * candidate pairs (a pair can share several buckets) — the verify
+      * stage's parallelism signal for per-pair-expensive verifiers
+      * (editSimilarityPairs' bounded DP). */
+    def keptPairs: Long = census.sums(0) / 2
+    /** Upper bound on the bytes of the candidate docs' verify sets. */
+    def keptBytes: Long = census.sums(1)
+    /** Bytes of every doc's verify set. */
+    def allBytes: Long = census.sums(2)
+  }
+
   /** The near-dup envelope's fused candidate stage: ONE action (a bucket
     * census over the single-exchange band cache) yields the pair-budget
     * guard integers AND the verify stage's join-strategy gate, so the
     * envelope no longer pays a separate size-gate barrier
     * (jaccardFromSets' stats head — the round-13 action breakdown's
-    * "action 2"). Returns (lazy candidate frame, verify-gate smallness,
-    * all-docs smallness, the bands cache for the caller to release,
-    * kept-bucket pair-count upper bound).
+    * "action 2").
     *
-    * Gate derivation: every doc in a candidate pair sits in ≥1 kept
-    * bucket of ≥2 members, so Σ over those buckets of (8·Σsz + 48·n) is
-    * an upper bound on the scoped verify sets' bytes — a conservative
-    * gate (may choose shuffles where the exact measure would broadcast;
-    * never broadcasts something over budget). The all-docs gate divides
-    * the all-bucket sums by b (each doc contributes b band rows) — the
-    * bound the sampled-curve callers need, where the verify join scopes
-    * to every (sampled) doc rather than LSH candidates.
+    * Gate derivation (a verify set costs 8 bytes per hash + 48 per row):
+    * every doc in a candidate pair sits in ≥1 kept bucket of ≥2 members,
+    * so Σ over those buckets of (8·Σsz + 48·n) upper-bounds the scoped
+    * verify sets' bytes — a conservative gate (may choose shuffles where
+    * the exact measure would broadcast; never broadcasts something over
+    * budget). The all-docs bound sums band 0's buckets (every doc has
+    * exactly one row per band) — the bound the sampled-curve callers
+    * need, where the verify join scopes to every (sampled) doc rather
+    * than LSH candidates.
     *
-    * The refusal contract is byte-identical to [[lshCandidatePairs]]:
-    * same census integers (Σ n·(n−1)/2 over all buckets, hottest
-    * bucket), same message, uncapped+budget>0 only. */
+    * An uncapped call with a positive budget refuses exactly as
+    * [[lshCandidatePairs]] does: the same census, the same refusal. */
   private[graft] def candidatePairsWithGate(
       sig: DataFrame, idCol: String, k: Int, b: Int,
-      maxBucketSize: Option[Int], candidatePairBudget: Long,
-      broadcastBudgetBytes: Long): (DataFrame, Boolean, Boolean, DataFrame, Long) = {
+      maxBucketSize: Option[Int], candidatePairBudget: Long): LshCandidates = {
     import org.apache.spark.storage.StorageLevel
     val bands = bandRows(sig, idCol, b, k / b).persist(StorageLevel.MEMORY_AND_DISK)
-    val bucket = bands.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("n"), sum(col("sz")).as("ssz"))
+    val bucket = bucketCounts(bands, withSz = true)
     // kept = the buckets whose members reach the pair stage
     val inPair = maxBucketSize
       .map(cap => col("n") <= cap).getOrElse(lit(true)) && col("n") >= 2
-    val row = bucket.agg(
-      coalesce(sum(col("n") * (col("n") - 1)), lit(0L)).cast("long"),
-      coalesce(max(col("n")), lit(0L)).cast("long"),
-      coalesce(sum(when(inPair, col("ssz")).otherwise(lit(0L))), lit(0L)).cast("long"),
-      coalesce(sum(when(inPair, col("n")).otherwise(lit(0L))), lit(0L)).cast("long"),
-      coalesce(sum(col("ssz")), lit(0L)).cast("long"),
-      coalesce(sum(col("n")), lit(0L)).cast("long"),
-      coalesce(sum(when(inPair, col("n") * (col("n") - 1)).otherwise(lit(0L))),
-        lit(0L)).cast("long")).head()
-    val nPairs = row.getLong(0) / 2
-    val maxBucket = row.getLong(1)
-    if (maxBucketSize.isEmpty && candidatePairBudget > 0 &&
-        nPairs > candidatePairBudget) {
-      bands.unpersist()
-      throw new IllegalArgumentException(
-        s"lshCandidatePairs: $nPairs band-bucket candidate pairs exceed " +
-          s"the budget $candidatePairBudget (largest bucket: $maxBucket " +
-          "members). Low-entropy corpora (boilerplate, templates) make " +
-          "the uncapped pair stage quadratic — pass " +
-          "maxBucketSize = Some(cap) (e.g. Some(24)) to drop degenerate " +
-          "buckets (their mass belongs to the repeated-substring " +
-          "operators), or opt in to uncapped-exact explicitly with " +
-          "candidatePairBudget <= 0.")
-    }
-    val small = row.getLong(2) * 8L + row.getLong(3) * 48L <= broadcastBudgetBytes
-    val bb = math.max(1, b).toLong
-    val allSmall =
-      (row.getLong(4) / bb) * 8L + (row.getLong(5) / bb) * 48L <= broadcastBudgetBytes
-    val kept = maxBucketSize match {
-      case Some(cap) =>
-        bands.join(bucket.filter(col("n") <= cap)
-          .select(col("band"), col("band_hash")), Seq("band", "band_hash"))
-      case None => bands
-    }
-    // Σ n·(n−1)/2 over the KEPT buckets: an upper bound on distinct
-    // candidate pairs (a pair can share several buckets), free from the
-    // same census action — the verify stage's parallelism signal for
-    // per-pair-expensive verifiers (editSimilarityPairs' bounded DP)
-    (pairJoin(kept, idCol), small, allSmall, bands, row.getLong(6) / 2)
+    val bytes = col("ssz") * 8L + col("n") * 48L
+    val census = PairCensus(bucket, "n",
+      when(inPair, col("n") * (col("n") - 1)).otherwise(lit(0L)),
+      when(inPair, bytes).otherwise(lit(0L)),
+      when(col("band") === 0, bytes).otherwise(lit(0L)))
+    if (maxBucketSize.isEmpty)
+      census.enforce("lshCandidatePairs", candidatePairBudget,
+        () => bands.unpersist())(lshRefusal(candidatePairBudget))
+    val kept = maxBucketSize.fold(bands)(capBuckets(bands, bucket, _))
+    LshCandidates(pairJoin(kept, idCol), bands, census)
   }
 
   /** Candidate pairs (a_id < b_id) sharing ≥1 LSH band. The only join in the
@@ -283,53 +279,29 @@ object Dedup {
     * deterministic function of the bucket census (count ≤ cap), so capped
     * results stay oracle-expressible (HAVING count(*) <= cap).
     *
-    * GUARDED BY DEFAULT: with no cap, one cheap (band, band_hash) census
-    * aggregate runs at call time and the call REFUSES — naming the
-    * observed pair count, the largest bucket, and `maxBucketSize` as the
-    * fix — when Σ n·(n−1)/2 exceeds `candidatePairBudget`. A 100 TB
-    * caller cannot silently summon quadratic work (the sf1.0 probe
-    * measured 58.4M band pairs, 20× time at 10× data, on a low-entropy
-    * corpus). Uncapped-EXACT stays available as the explicit opt-in
-    * `candidatePairBudget <= 0` (the oracle-pinned q20/q111 formulations
-    * use it). A capped call skips the census: its pair count is already
-    * bounded by buckets · cap². */
+    * GUARDED BY DEFAULT: with no cap, one cheap [[PairCensus]] over the
+    * (band, band_hash) buckets runs at call time and the call REFUSES
+    * ([[PairBudgetExceeded]], naming the observed pair count, the largest
+    * bucket, and `maxBucketSize` as the fix) when Σ n·(n−1)/2 exceeds
+    * `candidatePairBudget`. A 100 TB caller cannot silently summon
+    * quadratic work (the sf1.0 probe measured 58.4M band pairs, 20× time
+    * at 10× data, on a low-entropy corpus). Uncapped-EXACT stays
+    * available as the explicit opt-in `candidatePairBudget <= 0`, which
+    * skips the census (the oracle-pinned q20/q111 formulations use it). A
+    * capped call skips the census: its pair count is already bounded by
+    * buckets · cap². */
   def lshCandidatePairs(bands: DataFrame, idCol: String,
                         maxBucketSize: Option[Int] = None,
-                        candidatePairBudget: Long = DefaultCandidatePairBudget): DataFrame = {
+                        candidatePairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     val kept = maxBucketSize match {
-      case Some(cap) =>
-        val ok = bands.groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") <= cap)
-          .select(col("band"), col("band_hash"))
-        bands.join(ok, Seq("band", "band_hash"))
+      case Some(cap) => capBuckets(bands, bucketCounts(bands, withSz = false), cap)
       case None =>
-        if (candidatePairBudget > 0) {
-          val census = bands.groupBy(col("band"), col("band_hash"))
-            .agg(count(lit(1)).as("n"))
-            .agg(coalesce(sum(col("n") * (col("n") - 1)), lit(0L)).cast("long"),
-              coalesce(max(col("n")), lit(0L)).cast("long"))
-            .head()
-          val nPairs = census.getLong(0) / 2
-          val maxBucket = census.getLong(1)
-          if (nPairs > candidatePairBudget)
-            throw new IllegalArgumentException(
-              s"lshCandidatePairs: $nPairs band-bucket candidate pairs exceed " +
-                s"the budget $candidatePairBudget (largest bucket: $maxBucket " +
-                "members). Low-entropy corpora (boilerplate, templates) make " +
-                "the uncapped pair stage quadratic — pass " +
-                "maxBucketSize = Some(cap) (e.g. Some(24)) to drop degenerate " +
-                "buckets (their mass belongs to the repeated-substring " +
-                "operators), or opt in to uncapped-exact explicitly with " +
-                "candidatePairBudget <= 0.")
-        }
+        if (candidatePairBudget > 0)
+          PairCensus(bucketCounts(bands, withSz = false), "n")
+            .enforce("lshCandidatePairs", candidatePairBudget)(lshRefusal(candidatePairBudget))
         bands
     }
-    kept.select(col("band"), col("band_hash"), col(idCol).as("a_id"))
-      .join(kept.select(col("band"), col("band_hash"), col(idCol).as("b_id")),
-        Seq("band", "band_hash"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
+    pairJoin(kept, idCol)
   }
 
   /** Exact n-gram Jaccard: |A∩B| via shingle match, jaccard =
@@ -378,7 +350,7 @@ object Dedup {
                    minJaccard: Double = 0.5,
                    verifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes,
                    maxBucketSize: Option[Int] = None,
-                   candidatePairBudget: Long = DefaultCandidatePairBudget): DataFrame = {
+                   candidatePairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val enriched = signatureFrame(df, idCol, textCol, k, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -402,22 +374,22 @@ object Dedup {
                                  minJaccard: Double = 0.5,
                                  verifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes,
                                  maxBucketSize: Option[Int] = None,
-                                 candidatePairBudget: Long = DefaultCandidatePairBudget): DataFrame = {
+                                 candidatePairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // ONE barrier replaces the old census + verify-size-gate pair: the
     // bucket census over the single-exchange band cache guards the pair
     // budget AND picks the verify join strategy (candidatePairsWithGate)
-    val (cands0, small, _, bands, _) = candidatePairsWithGate(sig, idCol, k, b,
-      maxBucketSize, candidatePairBudget, verifyBroadcastBytes)
-    val cands = cands0.persist(StorageLevel.MEMORY_AND_DISK)
+    val stage = candidatePairsWithGate(sig, idCol, k, b,
+      maxBucketSize, candidatePairBudget)
+    val cands = stage.candidates.persist(StorageLevel.MEMORY_AND_DISK)
     val pairs = jaccardFromSets(
       sig.select(col(idCol), col("shs"), col("sz")), idCol, minJaccard,
-      cands, verifyBroadcastBytes, smallHint = Some(small))
+      cands, verifyBroadcastBytes, smallHint = Some(stage.keptBytes <= verifyBroadcastBytes))
     // pairs are O(candidates) — tiny next to the inputs; checkpointing them
     // lets the heavyweight caches go before the caller even runs an action
     val out = pairs.localCheckpoint(true)
     cands.unpersist()
-    bands.unpersist()
+    stage.bands.unpersist()
     out
   }
 
@@ -464,7 +436,7 @@ object Dedup {
                               k: Int = 16, b: Int = 4, shingleN: Int = 5,
                               minJaccard: Double = 0.5,
                               verifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes,
-                              candidatePairBudget: Long = DefaultCandidatePairBudget):
+                              candidatePairBudget: Long = PairCensus.DefaultBudget):
       (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
     val newSig = signatureFrame(newDocs, idCol, textCol, k, shingleN)
@@ -487,7 +459,7 @@ object Dedup {
                                             k: Int = 16, b: Int = 4,
                                             minJaccard: Double = 0.5,
                                             verifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes,
-                                            candidatePairBudget: Long = DefaultCandidatePairBudget):
+                                            candidatePairBudget: Long = PairCensus.DefaultBudget):
       (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
     // defensive re-sort: the verify intersect is a sorted two-pointer merge
@@ -532,43 +504,26 @@ object Dedup {
           coalesce(col("np"), lit(0L)).as("np"),
           coalesce(col("sszn"), lit(0L)).as("sszn"),
           coalesce(col("sszp"), lit(0L)).as("sszp"))
-      val row = jb.agg(
-        coalesce(sum(col("nn") * (col("nn") - 1)), lit(0L)).cast("long"),
-        coalesce(max(col("nn")), lit(0L)).cast("long"),
-        coalesce(sum(col("nn") * col("np")), lit(0L)).cast("long"),
-        (coalesce(sum(when(col("nn") >= 2 || col("np") >= 1, col("sszn"))
-            .otherwise(lit(0L))), lit(0L)) +
-          coalesce(sum(when(col("nn") >= 1, col("sszp")).otherwise(lit(0L))),
-            lit(0L))).cast("long"),
-        (coalesce(sum(when(col("nn") >= 2 || col("np") >= 1, col("nn"))
-            .otherwise(lit(0L))), lit(0L)) +
-          coalesce(sum(when(col("nn") >= 1, col("np")).otherwise(lit(0L))),
-            lit(0L))).cast("long")).head()
-      val nNew = row.getLong(0) / 2
-      if (nNew > candidatePairBudget) {
-        releaseBands()
-        throw new IllegalArgumentException(
-          s"lshCandidatePairs: $nNew band-bucket candidate pairs exceed " +
-            s"the budget $candidatePairBudget (largest bucket: ${row.getLong(1)} " +
-            "members). Low-entropy corpora (boilerplate, templates) make " +
-            "the uncapped pair stage quadratic — pass " +
-            "maxBucketSize = Some(cap) (e.g. Some(24)) to drop degenerate " +
-            "buckets (their mass belongs to the repeated-substring " +
-            "operators), or opt in to uncapped-exact explicitly with " +
-            "candidatePairBudget <= 0.")
-      }
-      val nCross = row.getLong(2)
+      val census = PairCensus(jb, "nn",
+        col("nn") * col("np"),
+        when(col("nn") >= 2 || col("np") >= 1, col("sszn") * 8L + col("nn") * 48L)
+          .otherwise(lit(0L)) +
+          when(col("nn") >= 1, col("sszp") * 8L + col("np") * 48L).otherwise(lit(0L)))
+      census.enforce("lshCandidatePairs", candidatePairBudget,
+        () => releaseBands())(lshRefusal(candidatePairBudget))
+      val nCross = census.sums(0)
       if (nCross > candidatePairBudget) {
         releaseBands()
-        throw new IllegalArgumentException(
-          s"nearDupPairsIncremental: $nCross new×prior band-bucket candidate " +
+        throw new PairBudgetExceeded("nearDupPairsIncremental", nCross,
+          candidatePairBudget, census.hottest,
+          s"$nCross new×prior band-bucket candidate " +
             s"pairs exceed the budget $candidatePairBudget — a degenerate " +
             "bucket in the stored corpus is colliding with the whole batch. " +
             "Strip boilerplate (repeated-substring operators) before " +
             "signing, or opt in to uncapped-exact with " +
             "candidatePairBudget <= 0.")
       }
-      Some(row.getLong(3) * 8L + row.getLong(4) * 48L <= verifyBroadcastBytes)
+      Some(census.sums(1) <= verifyBroadcastBytes)
     } else None
     val newNew = pairJoin(newBands, idCol)
     // new×prior collisions, normalized to the a_id < b_id convention
@@ -1006,8 +961,7 @@ object Dedup {
     // exactly once (into the band cache) instead of once per pair-join
     // side and once under the bucket-cap census, and the O(capped pairs)
     // candidate frame releases the cache before the DP verify runs
-    val (cands0, _, _, bands, pairsUB) = candidatePairsWithGate(sig, idCol, k, b,
-      Some(maxBucketSize), 0L, DefaultVerifyBroadcastBytes)
+    val stage = candidatePairsWithGate(sig, idCol, k, b, Some(maxBucketSize), 0L)
     // The bounded DP is the expensive verifier of the family (~ms per pair
     // at kB-scale docs vs µs for the sorted intersect), and both text
     // joins broadcast into the candidate frame — so the DP stage runs at
@@ -1018,10 +972,10 @@ object Dedup {
     // knob — so a 100 TB run keeps its full width and pays nothing new).
     val cap = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val dpParts = math.max(1L, math.min(cap.toLong,
-      (pairsUB + EditDpPairsPerTask - 1) / EditDpPairsPerTask)).toInt
-    val cand = (if (dpParts > 1) cands0.repartition(dpParts) else cands0)
+      (stage.keptPairs + EditDpPairsPerTask - 1) / EditDpPairsPerTask)).toInt
+    val cand = (if (dpParts > 1) stage.candidates.repartition(dpParts) else stage.candidates)
       .localCheckpoint(true)
-    bands.unpersist()
+    stage.bands.unpersist()
     val txt = df.select(col(idCol), col(textCol))
     val paired = cand
       .join(txt.select(col(idCol).as("a_id"), col(textCol).as("__ta")), Seq("a_id"))
@@ -1093,11 +1047,10 @@ object Dedup {
     // one census action serves both the candidate stage's budget guard
     // and the exact side's verify gate (the universe scopes to EVERY
     // sampled doc, so the all-docs bound is the right one)
-    val (caught0, _, allSmall, bands, _) = candidatePairsWithGate(sig, idCol,
-      k, b, None, DefaultCandidatePairBudget, DefaultVerifyBroadcastBytes)
+    val stage = candidatePairsWithGate(sig, idCol, k, b, None, PairCensus.DefaultBudget)
     val scored = jaccardFromSets(sig, idCol, minJaccard = 0.0, universe,
-      smallHint = Some(allSmall))
-    val caught = caught0.withColumn("__caught", lit(1L))
+      smallHint = Some(stage.allBytes <= DefaultVerifyBroadcastBytes))
+    val caught = stage.candidates.withColumn("__caught", lit(1L))
     val nBins = 10000 / binWidthE4
     val out = scored
       .join(caught, Seq("a_id", "b_id"), "left_outer")
@@ -1110,7 +1063,7 @@ object Dedup {
         expr("n_caught * 10000L div n_pairs").as("catch_e4"))
       .localCheckpoint(true)
     sig.unpersist()
-    bands.unpersist()
+    stage.bands.unpersist()
     out
   }
 
@@ -1308,7 +1261,7 @@ object Dedup {
   def bandingPlanBudgeted(df: DataFrame, idCol: String, textCol: String,
                           hashBudget: Int, tausE4: Seq[Long],
                           shingleN: Int = 5, sampleMod: Int = 4,
-                          pairBudget: Long = DefaultCandidatePairBudget,
+                          pairBudget: Long = PairCensus.DefaultBudget,
                           gridStepE4: Int = 250): DataFrame =
     planFromCensus(df.sparkSession,
       bandingCensus(df, idCol, textCol, hashBudget, shingleN, sampleMod),
@@ -1321,7 +1274,7 @@ object Dedup {
   def bandingPlanBudgetedFromSignatures(sig: DataFrame, idCol: String,
                                         hashBudget: Int, tausE4: Seq[Long],
                                         sampleMod: Int = 4,
-                                        pairBudget: Long = DefaultCandidatePairBudget,
+                                        pairBudget: Long = PairCensus.DefaultBudget,
                                         gridStepE4: Int = 250): DataFrame =
     planFromCensus(sig.sparkSession,
       bandingCensusFromSignatures(sig, idCol, hashBudget, sampleMod),

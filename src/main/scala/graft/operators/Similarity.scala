@@ -828,8 +828,9 @@ object Similarity {
     * it), keeping per-cluster work constant as data grows. `pairBudget`
     * backstops miscalibration: the candidate pair count is measured on
     * the (cached) assignment before the quadratic stage runs, and the
-    * call refuses — naming the observed count and the k that would fix
-    * it — rather than launching a job that cannot finish.
+    * call refuses ([[PairBudgetExceeded]], naming the observed count and
+    * the k that would fix it) rather than launching a job that cannot
+    * finish. `pairBudget <= 0` opts out and skips the census.
     *
     * EAGER: unlike most operators here, this call runs Spark jobs at
     * call time (the k-means fit, the budget probe, and the final
@@ -838,32 +839,24 @@ object Similarity {
     * result cannot stay lazy. */
   def semDedup(corpus: DataFrame, k: Int, iters: Int, tauE4: Long,
                idCol: String = "vec_id", embCol: String = "embedding",
-               pairBudget: Long = 50_000_000L): DataFrame = {
+               pairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     val cent = kmeansCentroids(corpus, k, iters, idCol, embCol)
     val assigned = ivfAssign(corpus, cent, probes = 1, idCol, embCol)
       .persist()
-    // one cheap agg over the cached assignment: Σ s·(s−1)/2 candidate
-    // pairs (the sums are NULL on an empty corpus — treat as zero, the
-    // pipeline below lazily yields an empty frame exactly as before)
-    val budgetRow = assigned.groupBy(col("label"))
-      .agg(count(lit(1)).as("s"))
-      .agg(sum(col("s")).cast("long"), sum(col("s") * (col("s") - 1)).cast("long"))
-      .head()
-    val nRows = if (budgetRow.isNullAt(0)) 0L else budgetRow.getLong(0)
-    val nPairs = if (budgetRow.isNullAt(1)) 0L else budgetRow.getLong(1) / 2
-    if (nPairs > pairBudget) {
-      // release the corpus-sized cache before refusing — a long-lived
-      // session must not pin one cached frame per rejected call
-      assigned.unpersist()
-      // uniform clusters give ~k·(n/k)²/2 = n²/(2k) pairs, so the k that
-      // lands under budget is ⌈n² / (2·budget)⌉
-      val kFix = math.ceil(nRows.toDouble * nRows.toDouble / (2.0 * pairBudget)).toLong
-      throw new IllegalArgumentException(
-        s"semDedup: $nPairs within-cluster candidate pairs exceed the " +
-          s"pair budget $pairBudget (corpus $nRows rows, k=$k). Raise k to " +
-          s"~$kFix (or call semDedupAuto, which derives k from a target " +
-          "cluster size) instead of running a quadratic stage this large.")
-    }
+    // one cheap census over the cached assignment (an empty corpus counts
+    // zero pairs; the pipeline below lazily yields an empty frame)
+    if (pairBudget > 0)
+      PairCensus(assigned.groupBy(col("label")).agg(count(lit(1)).as("s")), "s", col("s"))
+        .enforce("semDedup", pairBudget, () => assigned.unpersist()) { c =>
+          val nRows = c.sums(0)
+          // uniform clusters give ~k·(n/k)²/2 = n²/(2k) pairs, so the k
+          // that lands under budget is ⌈n² / (2·budget)⌉
+          val kFix = math.ceil(nRows.toDouble * nRows.toDouble / (2.0 * pairBudget)).toLong
+          s"${c.pairs} within-cluster candidate pairs exceed the " +
+            s"pair budget $pairBudget (corpus $nRows rows, k=$k). Raise k to " +
+            s"~$kFix (or call semDedupAuto, which derives k from a target " +
+            "cluster size) instead of running a quadratic stage this large."
+        }
     // the assignment cache must release on EVERY exit — a failure in the
     // pair join / components / checkpoint below would otherwise pin a
     // corpus-sized cache for the life of the session
@@ -900,7 +893,7 @@ object Similarity {
   def semDedupAuto(corpus: DataFrame, targetClusterSize: Long, iters: Int,
                    tauE4: Long, idCol: String = "vec_id",
                    embCol: String = "embedding",
-                   pairBudget: Long = 50_000_000L): DataFrame = {
+                   pairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     require(targetClusterSize > 0, "semDedupAuto: targetClusterSize must be positive")
     val n = corpus.count()
     val kLong = math.max(1L, (n + targetClusterSize - 1) / targetClusterSize)
@@ -1170,7 +1163,7 @@ object Similarity {
     * targetListSize regardless. */
   def knnDensityAuto(df: DataFrame, targetListSize: Long, iters: Int, k: Int,
                      idCol: String = "vec_id", embCol: String = "embedding",
-                     pairBudget: Long = 50_000_000L): DataFrame = {
+                     pairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     require(targetListSize > 0, "knnDensityAuto: targetListSize must be positive")
     val n = df.count()
     val listsLong = math.max(1L, (n + targetListSize - 1) / targetListSize)
@@ -1183,27 +1176,21 @@ object Similarity {
 
   def knnDensity(df: DataFrame, centroids: DataFrame, k: Int,
                  idCol: String = "vec_id", embCol: String = "embedding",
-                 pairBudget: Long = 50_000_000L): DataFrame = {
+                 pairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(k >= 1, "k must be >= 1")
     val lists = ivfAssign(df, centroids, probes = 1, idCol, embCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sizes = lists.groupBy(col("label")).agg(count(lit(1)).as("n_list"))
-    if (pairBudget > 0) {
-      val census = sizes
-        .agg(coalesce(sum(col("n_list") * (col("n_list") - 1)), lit(0L)).cast("long"),
-          coalesce(max(col("n_list")), lit(0L)).cast("long")).head()
-      val nPairs = census.getLong(0) / 2
-      if (nPairs > pairBudget) {
-        lists.unpersist()
-        throw new IllegalArgumentException(
-          s"knnDensity: $nPairs within-list pairs exceed the budget " +
-            s"$pairBudget (largest list: ${census.getLong(1)} members). " +
-            "The pair stage is Σ|list|² — pass MORE centroids (the IVF " +
-            "contract: lists per corpus size; kmeansCentroids learns them) " +
-            "or opt in explicitly with pairBudget <= 0.")
+    if (pairBudget > 0)
+      PairCensus(sizes, "n_list").enforce("knnDensity", pairBudget,
+        () => lists.unpersist()) { c =>
+        s"${c.pairs} within-list pairs exceed the budget " +
+          s"$pairBudget (largest list: ${c.hottest} members). " +
+          "The pair stage is Σ|list|² — pass MORE centroids (the IVF " +
+          "contract: lists per corpus size; kmeansCentroids learns them) " +
+          "or opt in explicitly with pairBudget <= 0."
       }
-    }
     val a = lists.select(col("label"), col(idCol).as("a_id"),
       col("__qe").as("a_emb"), col("__n").as("a_n"))
     val b = lists.select(col("label"), col(idCol).as("b_id"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, PairCensus}
 
 /** Near-duplicate detection queries over `documents`: the MinHash→LSH→
   * Jaccard-verify pipeline and banded SimHash. Oracles recompute the same
@@ -748,7 +748,7 @@ object DedupQueries {
     // bucket census ×16 (mod 4), argmin over feasible (b, r) only
     "q181_budgeted_banding_plan" ->
       raw"""WITH ${budgetedPlanCtes(K, Seq(3000L, 5000L, 8000L), 4,
-             Dedup.DefaultCandidatePairBudget)}
+             PairCensus.DefaultBudget)}
          SELECT tau_e4, b AS bands, r AS rows_per_band, total_err,
            projected_pairs
          FROM ch ORDER BY tau_e4""",
@@ -758,7 +758,7 @@ object DedupQueries {
     // so a drifted pick hash-fails the gate
     "q182_budget_auto_near_dup" ->
       raw"""WITH ${budgetedPlanCtes(K, Seq(5000L), 4,
-             Dedup.DefaultCandidatePairBudget)},
+             PairCensus.DefaultBudget)},
          d AS (SELECT doc_id, CASE WHEN len(text) >= $N
            THEN list_distinct([substr(text, i, $N) for i in range(1, len(text)-${N - 2})])
            ELSE [text] END AS shs0 FROM documents),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.operators.PairCensus
 
 /** Statistics / mining surface: market-basket pair mining, importance-
   * weighted data selection (DSIR-style), fuzzy entity matching, and
@@ -66,11 +67,6 @@ object StatsQueries {
       .limit(50)
   }
 
-  /** Default candidate-pair budget for [[setOverlapPairs]] — the same
-    * figure as `Dedup.DefaultCandidatePairBudget`: pair stages refuse, not
-    * silently explode, past 50M candidates. */
-  val DefaultPairBudget: Long = 50L * 1000 * 1000
-
   /** GUARDED set-overlap pair stage over an inverted index — the engine
     * behind [[q114SupplierOverlap]], exposed so the guard is testable on
     * adversarial frames. Input: distinct (`s` member, `p` key) rows;
@@ -79,14 +75,14 @@ object StatsQueries {
     * Pair work is bounded by Σ_key C(members_per_key, 2) — data-bounded,
     * never corpus², but quadratic in members-per-key: ONE promiscuous key
     * ("everyone supplies this part") summons the blow-up LSH banding's
-    * census guard exists to refuse (`Dedup.lshCandidatePairs` — this is
-    * the same contract applied to the relational family, the r12-verdict
-    * fix: q114 was the codebase's one unguarded pair stage).
+    * census guard exists to refuse (the r12-verdict fix: q114 was the
+    * codebase's one unguarded pair stage).
     *
-    * GUARDED BY DEFAULT: an array-free members-per-key census (counts
-    * only — it can never OOM on the hot key it exists to detect) runs at
-    * call time and REFUSES when the pair count exceeds `pairBudget`,
-    * naming the largest key and `maxMembersPerKey` as the fix. A capped
+    * GUARDED BY DEFAULT: an array-free members-per-key [[PairCensus]]
+    * (counts only — it can never OOM on the hot key it exists to detect)
+    * runs at call time and REFUSES (`PairBudgetExceeded`) when the pair
+    * count exceeds `pairBudget`, naming the largest key and
+    * `maxMembersPerKey` as the fix. A capped
     * call drops over-cap keys WHOLESALE before pairing (the doc-freq cut:
     * a key shared by everyone carries no similarity signal) and skips the
     * census — its pair mass is bounded by keys · cap². Capped Jaccard is
@@ -108,7 +104,7 @@ object StatsQueries {
     * TakeOrdered. */
   def setOverlapPairs(pairs: DataFrame, topK: Int,
                       maxMembersPerKey: Option[Int] = None,
-                      pairBudget: Long = DefaultPairBudget): DataFrame = {
+                      pairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     // Cached once; when the caller hands the relation already hash-
     // partitioned by `p` (supplierParts does — its dedup rides the same
     // exchange), the census, the cap filter, and both pair-join sides all
@@ -123,23 +119,16 @@ object StatsQueries {
         // over-cap keys are dropped wholesale with their members
         sp.join(counts.filter(col("n") <= cap).select(col("p")), Seq("p"))
       case None =>
-        if (pairBudget > 0) {
-          val census = counts
-            .agg(coalesce(sum(col("n") * (col("n") - 1)), lit(0L)).cast("long"),
-              coalesce(max(col("n")), lit(0L)).cast("long"))
-            .head()
-          val nPairs = census.getLong(0) / 2
-          if (nPairs > pairBudget) {
-            sp.unpersist()
-            throw new IllegalArgumentException(
-              s"setOverlapPairs: $nPairs inverted-index candidate pairs exceed " +
-                s"the budget $pairBudget (largest key: ${census.getLong(1)} " +
-                "members). A promiscuous key (a part everyone supplies) makes " +
-                "the pair stage quadratic — pass maxMembersPerKey = Some(cap) " +
-                "to drop degenerate keys (they carry no overlap signal), or " +
-                "opt in to uncapped-exact explicitly with pairBudget <= 0.")
+        if (pairBudget > 0)
+          PairCensus(counts, "n").enforce("setOverlapPairs", pairBudget,
+            () => sp.unpersist()) { c =>
+            s"${c.pairs} inverted-index candidate pairs exceed " +
+              s"the budget $pairBudget (largest key: ${c.hottest} " +
+              "members). A promiscuous key (a part everyone supplies) makes " +
+              "the pair stage quadratic — pass maxMembersPerKey = Some(cap) " +
+              "to drop degenerate keys (they carry no overlap signal), or " +
+              "opt in to uncapped-exact explicitly with pairBudget <= 0."
           }
-        }
         sp
     }
     val sizes = kept.groupBy(col("s")).agg(count(lit(1)).as("sz"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.core.Warehouse
-import graft.operators.Dedup
+import graft.operators.{Dedup, PairCensus}
 
 /** Streaming near-duplicate ingest into a persistent signature store —
   * the MinHash analog of the streaming ANN/theta ingests: document
@@ -53,7 +53,7 @@ object StreamingNearDup {
                   idCol: String, textCol: String,
                   k: Int = 16, b: Int = 4, shingleN: Int = 5,
                   minJaccard: Double = 0.5,
-                  candidatePairBudget: Long = Dedup.DefaultCandidatePairBudget): DataFrame = {
+                  candidatePairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     if (batch.isEmpty) return emptyPairs(batch)
     if (!wh.exists(schema, sigTable(name))) {
       import org.apache.spark.storage.StorageLevel
@@ -100,7 +100,7 @@ object StreamingNearDup {
                             batch: DataFrame, idCol: String, textCol: String,
                             k: Int = 16, b: Int = 4, shingleN: Int = 5,
                             minJaccard: Double = 0.5,
-                            candidatePairBudget: Long = Dedup.DefaultCandidatePairBudget): Unit = {
+                            candidatePairBudget: Long = PairCensus.DefaultBudget): Unit = {
     val newPairs = ingestBatch(wh, schema, name, batch, idCol, textCol,
       k, b, shingleN, minJaccard, candidatePairBudget)
     if (newPairs.isEmpty) return

@@ -5,13 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.core.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, PairBudgetExceeded, Similarity}
 
 /** Unit semantics for dedup + similarity operators on hand-built data —
   * the invariants the fixtures can't pin (exact survivors, known near-dups,
   * recall of the LSH paths vs brute force). */
 class DedupSimSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The integers a refusal message names, in order. */
+  private def ints(e: PairBudgetExceeded): Seq[Long] =
+    "\\d+".r.findAllIn(e.getMessage).map(_.toLong).toSeq
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -153,12 +157,24 @@ class DedupSimSpec extends SparkSpec {
         s"misty morning park while cat number ${i % 2} watches the fence"))
       .toDF("doc_id", "text")
     val sig = Dedup.signDocuments(base, "doc_id", "text", k = 16, shingleN = 5)
-    val (cands, _, _, bands, ub) = Dedup.candidatePairsWithGate(
-      sig, "doc_id", 16, 8, Some(24), 0L, Dedup.DefaultVerifyBroadcastBytes)
-    val n = cands.count()
-    bands.unpersist()
+    val stage = Dedup.candidatePairsWithGate(sig, "doc_id", 16, 8, Some(24), 0L)
+    val n = stage.candidates.count()
+    stage.bands.unpersist()
     assert(n > 0, "fixture must produce candidates")
-    assert(ub >= n, s"census UB $ub must bound distinct candidates $n")
+    assert(stage.keptPairs >= n,
+      s"census UB ${stage.keptPairs} must bound distinct candidates $n")
+    // replay: bucket (members, Σ set sizes) from the public band frame
+    val sz = sig.select($"doc_id", $"sz").as[(Long, Long)].collect().toMap
+    val buckets = Dedup.lshBands(sig, "doc_id", b = 8, r = 2)
+      .select($"band", $"band_hash", $"doc_id").as[(Int, String, Long)].collect()
+      .groupBy(t => (t._1, t._2)).values
+      .map(ms => (ms.length.toLong, ms.map(m => sz(m._3)).sum)).toSeq
+    val kept = buckets.filter(b => b._1 >= 2 && b._1 <= 24)
+    assert(stage.census.hottest === buckets.map(_._1).max)
+    assert(stage.census.pairs === buckets.map(b => b._1 * (b._1 - 1) / 2).sum)
+    assert(stage.keptPairs === kept.map(b => b._1 * (b._1 - 1) / 2).sum)
+    assert(stage.keptBytes === kept.map(b => 8L * b._2 + 48L * b._1).sum)
+    assert(stage.allBytes === 8L * sz.values.sum + 48L * sz.size)
   }
 
   test("containmentPairs: embedded quote scores near-full on the quote side, " +
@@ -201,9 +217,12 @@ class DedupSimSpec extends SparkSpec {
       .map(i => (i, "the big data table scans the data fast and well"))
       .toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[PairBudgetExceeded](
       Dedup.nearDupPairs(df, "doc_id", "text", minJaccard = 0.5,
         candidatePairBudget = 100L))
+    assert((e.operator, e.pairs, e.budget, e.hottest) ===
+      (("lshCandidatePairs", 1740L, 100L, 30L)))
+    assert(ints(e).take(3) === Seq(e.pairs, e.budget, e.hottest), e.getMessage)
     assert(e.getMessage.contains("maxBucketSize"), e.getMessage)
     assert(e.getMessage.contains("candidatePairBudget"), e.getMessage)
     // the refusal releases its caches (nearDupPairs discipline holds on
@@ -227,14 +246,36 @@ class DedupSimSpec extends SparkSpec {
     val batch = Seq((101L, "the big data table scans the data fast and well"))
       .toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[PairBudgetExceeded](
       Dedup.nearDupPairsIncremental(batch, "doc_id", "text", prior,
         candidatePairBudget = 10L))
+    // 4 bands × 1 batch member × 40 prior members; the batch's largest
+    // bucket holds its one doc
+    assert((e.operator, e.pairs, e.budget, e.hottest) ===
+      (("nearDupPairsIncremental", 160L, 10L, 1L)))
+    assert(ints(e).take(2) === Seq(e.pairs, e.budget), e.getMessage)
     assert(e.getMessage.contains("new×prior"), e.getMessage)
     assert(e.getMessage.contains("candidatePairBudget"), e.getMessage)
     // the failure path must release the new-batch signature cache
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.isEmpty, s"refusal leaked ${added.size} cached RDDs")
+    // a boilerplate BATCH against an unrelated prior: 4·12·11/2 = 264
+    // new×new pairs refuse with the LSH census's own refusal
+    val clean = Dedup.signDocuments(
+      Seq((1L, "vectorized parquet readers prune columns before the scan begins"))
+        .toDF("doc_id", "text"), "doc_id", "text")
+    val boilerBatch = (1L to 12L)
+      .map(i => (100L + i, "the big data table scans the data fast and well"))
+      .toDF("doc_id", "text")
+    val eNew = intercept[PairBudgetExceeded](
+      Dedup.nearDupPairsIncremental(boilerBatch, "doc_id", "text", clean,
+        candidatePairBudget = 100L))
+    assert((eNew.operator, eNew.pairs, eNew.budget, eNew.hottest) ===
+      (("lshCandidatePairs", 264L, 100L, 12L)))
+    assert(ints(eNew).take(3) === Seq(eNew.pairs, eNew.budget, eNew.hottest),
+      eNew.getMessage)
+    val addedNew = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(addedNew.isEmpty, s"refusal leaked ${addedNew.size} cached RDDs")
   }
 
   test("jaccard verify size gate: broadcast under budget, shuffle join above") {
@@ -429,9 +470,11 @@ class DedupSimSpec extends SparkSpec {
       assert(got(id) === ((0, 3L, Some(ns(1)._1))), s"vec $id")
     }
     // 3 within-list pairs exceed a budget of 2 → refuse, naming the knobs
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[PairBudgetExceeded] {
       Similarity.knnDensity(vecs, cent, k = 1, pairBudget = 2L)
     }
+    assert((e.operator, e.pairs, e.budget, e.hottest) === (("knnDensity", 3L, 2L, 3L)))
+    assert(ints(e).take(3) === Seq(e.pairs, e.budget, e.hottest), e.getMessage)
     assert(e.getMessage.contains("pairBudget") &&
       e.getMessage.contains("centroids"))
   }
@@ -456,11 +499,14 @@ class DedupSimSpec extends SparkSpec {
     // over a 100k pair budget at n=1200 — while auto-k derives 40 lists and
     // stays an order of magnitude under it (per-list work ~targetListSize²/2).
     val big = corpus(1200)
-    val fixedK = intercept[IllegalArgumentException] {
+    val fixedK = intercept[PairBudgetExceeded] {
       Similarity.knnDensity(big,
         Similarity.kmeansCentroids(big, k = 4, iters = 2), k = 3,
         pairBudget = 100_000L)
     }
+    assert(fixedK.budget === 100_000L && fixedK.pairs > fixedK.budget)
+    assert(ints(fixedK).take(3) === Seq(fixedK.pairs, fixedK.budget, fixedK.hottest),
+      fixedK.getMessage)
     assert(fixedK.getMessage.contains("pairBudget"))
     val scaled = Similarity.knnDensityAuto(big, targetListSize = 30L, iters = 2,
       k = 3, pairBudget = 100_000L)
@@ -487,8 +533,12 @@ class DedupSimSpec extends SparkSpec {
     val emb = Tables(spark, sf, "embeddings")
     // k=1 puts all 500 vectors in one cluster → ~125k pairs; a 1000-pair
     // budget must refuse before the quadratic join runs
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[PairBudgetExceeded](
       Similarity.semDedup(emb, k = 1, iters = 1, tauE4 = 3500L, pairBudget = 1000L))
+    // one cluster holds every vector
+    assert((e.operator, e.pairs, e.budget, e.hottest) ===
+      (("semDedup", 500L * 499L / 2, 1000L, 500L)))
+    assert(ints(e).take(4) === Seq(e.pairs, e.budget, 500L, 1L), e.getMessage)
     assert(e.getMessage.contains("pair budget"))
     assert(e.getMessage.contains("Raise k"))
     // the suggested k must actually land under the budget: uniform
@@ -497,6 +547,17 @@ class DedupSimSpec extends SparkSpec {
     val n = 500L
     assert(n * n / (2.0 * kFix) <= 1000L,
       s"suggested k=$kFix still yields ~${n * n / (2 * kFix)} pairs over the 1000 budget")
+  }
+
+  test("semDedup pairBudget <= 0 opts out of the census: same result as an " +
+    "unbounded budget") {
+    val emb = Tables(spark, sf, "embeddings")
+    def run(budget: Long) = Similarity.semDedup(emb, k = 8, iters = 2,
+      tauE4 = 3500L, pairBudget = budget)
+      .as[(Long, Long, Long, Boolean)].collect().toSeq.sortBy(_._2)
+    val unbounded = run(Long.MaxValue)
+    assert(unbounded.nonEmpty)
+    assert(run(0L) === unbounded)
   }
 
   test("semDedup on an empty corpus returns an empty frame, not an error") {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.PairBudgetExceeded
 import graft.queries.StatsQueries
 
 /** The census-guarded inverted-index pair stage behind q114
@@ -50,12 +51,17 @@ class SetOverlapSpec extends SparkSpec {
   test("a promiscuous key REFUSES over budget, naming the largest key and " +
     "the cap as the fix (the bench -2 sentinel contract: message carries " +
     "'exceed' and 'budget')") {
-    // one hot key with 60 members: C(60,2) = 1770 pairs > budget 1000
+    // one hot key with 60 members: C(60,2) = 1770 pairs > budget 1000,
+    // plus the small relation's in-budget keys (10..13 hold two members)
     val hot = (1L to 60L).map(s => (s, 777L))
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[PairBudgetExceeded] {
       StatsQueries.setOverlapPairs((small ++ hot).toDF("s", "p"),
         topK = 10, pairBudget = 1000L)
     }
+    assert((e.operator, e.pairs, e.budget, e.hottest) ===
+      (("setOverlapPairs", 1770L + 4L, 1000L, 60L)))
+    assert("\\d+".r.findAllIn(e.getMessage).map(_.toLong).take(3).toSeq ===
+      Seq(e.pairs, e.budget, e.hottest), e.getMessage)
     assert(e.getMessage.contains("exceed") && e.getMessage.contains("budget"))
     assert(e.getMessage.contains("60 members"))
     assert(e.getMessage.contains("maxMembersPerKey"))
