@@ -3,15 +3,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // ContextCleaner frees shuffle files only when the driver GCs their
     // ShuffleDependency refs; at a 64 GB heap GC may never run across a
@@ -33,7 +26,6 @@ object Bench {
     // started; sf1.0 probes trip it exactly between the heavy queries
     // that need it, and after the cleaner frees the debris the delta
     // falls back under budget so the gate DISARMS.
-    // SPARK_GRAFT_BENCH_GC=0 disables, =1 forces every query.
     val shuffleDirs: Seq[java.io.File] = spark.conf
       .getOption("spark.local.dir")
       .getOrElse(System.getProperty("java.io.tmpdir"))
@@ -41,34 +33,11 @@ object Bench {
       .map(new java.io.File(_))
     def minFree(): Long = shuffleDirs.map(_.getUsableSpace).min
     val sweepStartFree: Long = minFree()
-    def gcIfDiskPressured(): Unit = sys.env.get("SPARK_GRAFT_BENCH_GC") match {
-      case Some("0") => ()
-      case Some("1") => System.gc()
-      case _ =>
-        val free = minFree()
-        if (sweepStartFree - free > (24L << 30) || free < (8L << 30))
-          System.gc()
+    def gcIfDiskPressured(): Unit = {
+      val free = minFree()
+      if (sweepStartFree - free > (24L << 30) || free < (8L << 30))
+        System.gc()
     }
-    // untimed warmup: a full pass over every query so JIT, whole-stage
-    // codegen compilation (incl. the custom expressions), parquet footer
-    // reads and broadcast setup all land off the clock. The timed pass
-    // then measures steady-state throughput — the number a long-lived
-    // cluster session actually sees. SPARK_GRAFT_BENCH_WARM=0 disables.
-    // builder-side subset for fast iteration (comma-separated name
-    // prefixes, like Verify's SPARK_GRAFT_ONLY); the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(p => name.startsWith(p)))
-    }
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0")
-      selected.foreach { case (name, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e") }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        gcIfDiskPressured() // free shuffle files during warmup too
-      }
     // clearCache() only drops catalog-cached plans; localCheckpoint blocks
     // (near-dup pair frames, CC rounds) are persistent RDDs that otherwise
     // linger until driver GC — release them eagerly so storage memory never
@@ -77,6 +46,25 @@ object Bench {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       gcIfDiskPressured()
+    }
+    // untimed warmup: a full pass over every query so JIT, whole-stage
+    // codegen compilation (incl. the custom expressions), parquet footer
+    // reads and broadcast setup all land off the clock. The timed pass
+    // then measures steady-state throughput — the number a long-lived
+    // cluster session actually sees.
+    // builder-side subset for fast iteration (comma-separated name
+    // prefixes, like Verify's SPARK_GRAFT_ONLY); the driver never sets it.
+    // Set but empty means the whole registry, as in Verify
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
+      only.forall(_.exists(p => name.startsWith(p)))
+    }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: $e") }
+      releaseAll() // free shuffle files during warmup too
     }
     // a census-guard refusal (PairBudgetExceeded, e.g. q173's documented
     // sf1.0 stance) is a DECLARED skip, not a failure: it records -2 so one

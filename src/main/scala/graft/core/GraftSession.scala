@@ -2,42 +2,26 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the engine.
-  *
-  * Defaults chosen for 100 TB-scale design tested on local[32]:
-  *   - AQE on: runtime shuffle-partition coalescing + skew-join splitting,
-  *     so the same plan survives a 1000-executor cluster.
+/** The one SparkSession factory: Bench, Verify, the tools and the tests all
+  * build through it, so every entry point runs with the same settings.
+  *   - `local[cores]` master and an explicit shuffle-partition count: the
+  *     caller's core budget (Bench and Verify take one partition per core).
   *   - UTC session timezone: deterministic timestamp semantics vs the
-  *     DuckDB oracle and across cluster nodes.
-  *   - shuffle.partitions sized to local cores here; on a real cluster this
-  *     is a submit-time knob (AQE coalesces down from it either way).
+  *     DuckDB oracle and across machines.
+  *   - `parquet.nanosAsLong`: the fixture's event timestamps have arrived
+  *     as TIMESTAMP(NANOS) in some generations; `Tables.normalizeEventTs`
+  *     reads them as longs (harmless for micros).
+  *   - UI off: no entry point serves it, and it costs startup time and a port.
+  * Everything else (AQE, parquet codec) stays at the Spark default.
   */
 object GraftSession {
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(cores: Int, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
+      .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
-
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = builder(s"local[$cores]", math.max(8, cores)).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // native expressions available to spark.sql users out of the box
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
-    // HOF-pattern → codegen'd-kernel rewrites for live sessions (the
-    // spark.sql.extensions path injects the same rule at session build)
-    if (!s.experimental.extraOptimizations.contains(
-        org.apache.spark.sql.graft.GraftKernelRules))
-      s.experimental.extraOptimizations ++=
-        Seq(org.apache.spark.sql.graft.GraftKernelRules)
-    s
-  }
 }

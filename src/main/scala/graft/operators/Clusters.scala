@@ -43,48 +43,33 @@ object Clusters {
   /** (id, cluster) for every node that appears in `edges`; cluster = the
     * minimum node id reachable in the undirected graph.
     *
-    * `method`: "label" = pure min-label propagation (O(diameter) rounds —
-    * the right tool for shallow near-dup clusters; fails loudly past
-    * `maxIters`); "star" = large-star/small-star (O(log n) rounds for ANY
-    * graph, incl. pathological chains); "auto" (default) = a capped
-    * driver-side union-find when the (probed) edge set fits
-    * `DriverEdgeCap` — near-dup graphs AFTER banding+verify are usually
-    * registry-scale even when the corpus is not — then label propagation,
-    * then star as the fallback when the diameter exceeds `maxIters`.
-    * Every path computes the identical (id, min-reachable-id) result;
-    * which one ran is invisible to callers. */
+    * Three paths, tried in order: a capped driver-side union-find when the
+    * (probed) edge set fits `driverEdgeCap` — near-dup graphs AFTER
+    * banding+verify are usually registry-scale even when the corpus is
+    * not — then min-label propagation (O(diameter) rounds, the right tool
+    * for shallow near-dup clusters), then large-star/small-star (O(log n)
+    * rounds for ANY graph, incl. pathological chains) when the diameter
+    * exceeds `maxIters`. Every path computes the identical
+    * (id, min-reachable-id) result; which one ran is invisible to callers. */
   def connectedComponents(edges: DataFrame, aCol: String = "a_id",
                           bCol: String = "b_id", maxIters: Int = 20,
-                          method: String = "auto",
-                          driverEdgeCap: Int = DriverEdgeCap): DataFrame = method match {
-    case "star" => starComponents(edges, aCol, bCol)
-    case "label" =>
-      labelComponents(edges, aCol, bCol, maxIters).getOrElse(
-        // silent partial propagation would split components and elect
-        // several "canonical" docs per real cluster — fail loudly instead
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters rounds " +
-            "(graph diameter exceeds maxIters — raise it, or use method=star)"))
-    case "auto" =>
-      // probe on the RAW frame first: the limit(cap+1) collect early-exits
-      // as soon as cap+1 rows exist, and when the driver path wins (the
-      // common registry-scale case) nothing was materialized at all.
-      // Only a graph that overflows the cap pays a one-time checkpoint —
-      // there the distributed rounds rescan the edge set O(rounds) times,
-      // which is exactly when cutting the pair lineage earns its keep.
-      // (localCheckpoint is executor-memory-resident, not fault-tolerant:
-      // a long-lived cluster deployment that must survive executor loss
-      // should set a reliable spark.checkpoint.dir and swap these for
-      // df.checkpoint — same plan shape, durable blocks.)
-      driverComponents(edges.select(col(aCol), col(bCol)), aCol, bCol,
-          driverEdgeCap).getOrElse {
-        val e = edges.select(col(aCol), col(bCol)).localCheckpoint(true)
-        labelComponents(e, aCol, bCol, maxIters)
-          .getOrElse(starComponents(e, aCol, bCol))
-      }
-    case other =>
-      throw new IllegalArgumentException(s"unknown method '$other' (label|star|auto)")
-  }
+                          driverEdgeCap: Int = DriverEdgeCap): DataFrame =
+    // probe on the RAW frame first: the limit(cap+1) collect early-exits
+    // as soon as cap+1 rows exist, and when the driver path wins (the
+    // common registry-scale case) nothing was materialized at all.
+    // Only a graph that overflows the cap pays a one-time checkpoint —
+    // there the distributed rounds rescan the edge set O(rounds) times,
+    // which is exactly when cutting the pair lineage earns its keep.
+    // (localCheckpoint is executor-memory-resident, not fault-tolerant:
+    // a long-lived cluster deployment that must survive executor loss
+    // should set a reliable spark.checkpoint.dir and swap these for
+    // df.checkpoint — same plan shape, durable blocks.)
+    driverComponents(edges.select(col(aCol), col(bCol)), aCol, bCol,
+        driverEdgeCap).getOrElse {
+      val e = edges.select(col(aCol), col(bCol)).localCheckpoint(true)
+      labelComponents(e, aCol, bCol, maxIters)
+        .getOrElse(starComponents(e, aCol, bCol))
+    }
 
   /** Union-find on the driver for integral-id graphs under `DriverEdgeCap`
     * edges; None when ids aren't integral, any edge id is NULL (the
@@ -131,7 +116,7 @@ object Clusters {
   }
 
   /** Min-label propagation; None when `maxIters` rounds did not converge. */
-  private def labelComponents(edges: DataFrame, aCol: String, bCol: String,
+  private[graft] def labelComponents(edges: DataFrame, aCol: String, bCol: String,
                               maxIters: Int): Option[DataFrame] = {
     // symmetric closure: propagate along both directions of each pair
     val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
@@ -169,7 +154,7 @@ object Clusters {
     * edge frame, lineage-cut per round. Convergence = the oriented edge
     * set reaching a fixed point (then it IS the star forest: every node
     * points at its component minimum). */
-  private[operators] def starComponents(edges: DataFrame, aCol: String,
+  private[graft] def starComponents(edges: DataFrame, aCol: String,
                                         bCol: String): DataFrame = {
     val nodes = edges.select(col(aCol).as("id"))
       .unionByName(edges.select(col(bCol).as("id")))

@@ -42,10 +42,6 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
       attrs: Seq[String],
       linkTo: Option[(String, Seq[String])] = None) // (other hub, its keys)
 
-  private def appendRows(schema: String, table: String, df: DataFrame): Unit =
-    if (wh.exists(schema, table)) wh.append(schema, table, df)
-    else wh.overwrite(schema, table, df)
-
   /** Stage one source: metadata columns + drift detection against the
     * previously registered staging schema. Returns true when drift found. */
   private[pipeline] def stageSource(src: SourceSpec, etlDate: String): Boolean = {
@@ -57,12 +53,12 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
         val registered = wh.read("staging", src.name).schema
         val rows = SchemaDrift.diff(registered, incoming.schema, src.name)
         if (rows.nonEmpty) {
-          appendRows("check", "schemadrift_tablechangedetail",
+          wh.append("check", "schemadrift_tablechangedetail",
             rows.toDF().withColumn("etl_date", lit(etlDate)))
           // table-level summary (reference schemadrift_tablechange,
           // send_email.py:43-56); is_updated=1 — the overwrite below
           // applies the new schema in the same run
-          appendRows("check", "schemadrift_tablechange",
+          wh.append("check", "schemadrift_tablechange",
             Seq((etlDate, src.name, src.name, 1))
               .toDF("etl_date", "table_name", "source_name", "is_updated"))
           true
@@ -124,7 +120,7 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
         (s.name, "vault_missing", Relational.antiJoin(stagedKeys, hubKeys, s.businessKeys)))
     }
     val report = ControlPlane.reconcileCounts(layers)
-    appendRows("check", "record_count", report.withColumn("etl_date", lit(etlDate)))
+    wh.append("check", "record_count", report.withColumn("etl_date", lit(etlDate)))
     report.filter(col("status") === "mismatch")
       .select("source_name").collect().map(_.getString(0)).toSeq
   }
@@ -154,7 +150,7 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
           branch = Some(() =>
             if (drift.getOrElse(s.name, false)) Seq(s"notify_drift_${s.name}") else Seq.empty)),
         TaskSpec(s"notify_drift_${s.name}", deps = Seq(s"drift_check_${s.name}"),
-          run = () => appendRows("check", "email_notification",
+          run = () => wh.append("check", "email_notification",
             Seq((etlDate, s.name, "schema_drift")).toDF("etl_date", "source_name", "template"))),
         TaskSpec(s"vault_${s.name}", deps = Seq(s"staging_${s.name}"),
           run = () => vaultSource(s, etlDate), retries = 1))
@@ -189,12 +185,12 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     val taskRows = result.runs.map(r =>
       (etlDate, taskOwner.getOrElse(r.taskId, "pipeline"), r.taskId, r.status))
       .toDF("etl_date", "source_name", "task_id", "status")
-    appendRows("op_metadata", "task_log", taskRows)
+    wh.append("op_metadata", "task_log", taskRows)
     // failed runs also persist the rendered error-summary report rows
     // (send_email.py:654-667 — the email body's source of truth)
     val errorReport = ControlPlane.renderErrorSummary(taskRows)
     if (!errorReport.isEmpty)
-      appendRows("check", "error_report",
+      wh.append("check", "error_report",
         errorReport.withColumn("etl_date", lit(etlDate)))
     // roll up to run rows and close the date when all sources succeeded.
     // run_id is a fresh uuid and created_at a real timestamp: re-runs of a
@@ -211,7 +207,7 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
       (etlDate, s.name, java.util.UUID.randomUUID().toString, now,
         if (ok) "success" else "failed")
     }.toDF("etl_date", "source_name", "run_id", "created_at", "status")
-    appendRows("op_metadata", "run_log", runRows)
+    wh.append("op_metadata", "run_log", runRows)
     wh.overwrite("op_metadata", "etl_dates",
       ControlPlane.closeEtlDate(wh.read("op_metadata", "etl_dates"),
         wh.read("op_metadata", "run_log"), etlDate))

@@ -47,10 +47,6 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
       attrs: Seq[String],
       waitTimeMs: Long = 0L) // TimeSensor stagger offset (C8)
 
-  private def appendRows(schema: String, table: String, df: DataFrame): Unit =
-    if (wh.exists(schema, table)) wh.append(schema, table, df)
-    else wh.overwrite(schema, table, df)
-
   /** fetch_run_id: triggered runs reuse the orchestrator-assigned id and
     * register nothing; manual runs mint a fresh uuid AND insert their own
     * run row tagged with the dag type that created it. */
@@ -61,7 +57,7 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
       case Some("master_dag") | Some("group") => assigned(source)
       case _ =>
         val runId = java.util.UUID.randomUUID().toString
-        appendRows("op_metadata", "multi_run_log",
+        wh.append("op_metadata", "multi_run_log",
           Seq((etlDate, source, runId, dagType, "running"))
             .toDF("etl_date", "source_name", "run_id", "created_by", "status"))
         runId
@@ -117,7 +113,7 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
     val start = TaskSpec("start", run = () =>
       // the root registers every triggered source's run row up front
       // (insert_into_info_by_sources, dag_etlpipeline__root.py:90-97)
-      appendRows("op_metadata", "multi_run_log",
+      wh.append("op_metadata", "multi_run_log",
         sources.map(s => (etlDate, s.name, assigned(s.name), "root", "running"))
           .toDF("etl_date", "source_name", "run_id", "created_by", "status")),
       retries = 5, retryDelayMs = 0L)
@@ -150,7 +146,7 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
             .forall(id => childResults.get(id).exists(_.allSuccess))
           (etlDate, s.name, assigned(s.name), "root", if (ok) "success" else "failed")
         }
-        appendRows("op_metadata", "multi_run_log",
+        wh.append("op_metadata", "multi_run_log",
           rows.toDF("etl_date", "source_name", "run_id", "created_by", "status"))
       })
 

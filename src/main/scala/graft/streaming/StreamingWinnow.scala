@@ -47,8 +47,7 @@ object StreamingWinnow {
                   n: Int = 5, w: Int = 4): Unit = {
     if (batch.isEmpty) return
     val fps = Dedup.winnowingFingerprintRows(batch, idCol, textCol, n, w)
-    if (wh.exists(schema, fpTable(name))) wh.append(schema, fpTable(name), fps)
-    else wh.overwrite(schema, fpTable(name), fps)
+    wh.append(schema, fpTable(name), fps)
   }
 
   /** The accumulated fingerprint rows (idCol, fp). */

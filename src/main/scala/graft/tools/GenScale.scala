@@ -143,16 +143,12 @@ object GenScale {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val outDir = args.lift(1).getOrElse("target/sf1.0")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = graft.core.GraftSession.builder(cores, cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
-    // 8 output files each: sized so sf1.0 scans parallelize on local[32]
+    // 8 output files each: sized so sf1.0 scans parallelize across cores
     // without thousands of tiny footers
     scaled(docs, factor, docShard).repartition(8)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")

@@ -24,56 +24,28 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * mapPartitions). Lives in the spark.sql namespace for access to the
   * `private[sql]` expression-to-Column bridge.
   */
-case class ArrayLongDot(left: Expression, right: Expression,
-                        strict: Boolean = false)
+case class ArrayLongDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
-  override def nullable: Boolean = strict || super.nullable
   override def prettyName: String = "array_long_dot"
 
-  /** strict = HOF-exact semantics for the optimizer-rule rewrite of
-    * aggregate(zip_with(a,b,*),0,+): zip_with pads the shorter array and a
-    * null product nulls the whole sum, so unequal lengths or any null
-    * element yield NULL. Non-strict (the engine's own call sites, which
-    * guarantee dense equal-length vectors) keeps the branch-free loop. */
+  /** Call sites guarantee dense equal-length vectors, so the loop runs
+    * over the shorter length with no per-element null checks. */
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (strict) {
-      if (x.numElements() != y.numElements()) return null
-      var s = 0L
-      var i = 0
-      while (i < x.numElements()) {
-        if (x.isNullAt(i) || y.isNullAt(i)) return null
-        s += x.getLong(i) * y.getLong(i)
-        i += 1
-      }
-      s
-    } else {
-      val n = math.min(x.numElements(), y.numElements())
-      var s = 0L
-      var i = 0
-      while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-      s
-    }
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+    s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (strict) {
-      val cls = classOf[ArrayLongDot].getName
-      val ref = ctx.addReferenceObj("dotExpr", this, cls)
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a, $b);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = ((Long) $r).longValue(); }
-         """.stripMargin
-      })
-    } else nullSafeCodeGen(ctx, ev, (a, b) => {
+    nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")

@@ -68,66 +68,14 @@ case class MinHashSigs(child: Expression, k: Int, p20: Long, p31: Long,
     copy(child = newChild)
 }
 
-/** Codegen'd |A ∩ B| for two sorted-or-unsorted long-array sets without
-  * materializing the intersection array (array_intersect allocates and
-  * hashes into a new array per pair — pure waste when only the cardinality
-  * is consumed, as in Jaccard verification). Uses a hash set over the
-  * smaller side. */
-case class ArrayLongIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "array_long_intersect_count"
-
-  private def count(a: ArrayData, b: ArrayData): Long = {
-    val (small, big) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
-    val set = new java.util.HashSet[Long](small.numElements() * 2)
-    // null elements participate with SQL array_intersect set semantics:
-    // null appears in the intersection iff present on both sides
-    var smallNull = false
-    var bigNull = false
-    var i = 0
-    while (i < small.numElements()) {
-      if (small.isNullAt(i)) smallNull = true else set.add(small.getLong(i))
-      i += 1
-    }
-    var c = 0L
-    i = 0
-    while (i < big.numElements()) {
-      if (big.isNullAt(i)) bigNull = true
-      else if (set.remove(big.getLong(i))) c += 1 // remove: set semantics w/ dup elems
-      i += 1
-    }
-    if (smallNull && bigNull) c + 1 else c
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = classOf[ArrayLongIntersectCount].getName
-    val ref = ctx.addReferenceObj("intersectCounter", this, cls)
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = (Long) $ref.nullSafeEval($a, $b);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayLongIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
 /** |A∩B| for two SORTED-ascending, distinct, null-free long arrays — a
-  * zero-allocation two-pointer merge. The general ArrayLongIntersectCount
-  * builds a boxed HashSet per row pair (~|small| boxed inserts + |big|
-  * boxed probes); on the near-dup verify that is tens of millions of
-  * allocations per run, which is both the CPU cost and the GC-pressure
-  * profile that collapses first under co-tenant memory pressure. Inputs
-  * are produced by `array_sort(array_distinct(...))` in
-  * Dedup.signatureFrame — this expression is private to that contract and
-  * is NOT registered for SQL (the rule-rewritten general form keeps full
-  * set/null semantics). */
+  * zero-allocation two-pointer merge. `size(array_intersect(a, b))`
+  * allocates and hashes a new array per row pair; on the near-dup verify
+  * that is tens of millions of allocations per run, which is both the CPU
+  * cost and the GC-pressure profile that collapses first under co-tenant
+  * memory pressure. Inputs are produced by `array_sort(array_distinct(...))`
+  * in Dedup.signatureFrame — this expression is private to that contract
+  * (it has no null or duplicate-element handling). */
 case class ArrayLongSortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
@@ -406,10 +354,6 @@ object MinHashExprs {
                   aBase: Long, aStep: Long, bBase: Long, bStep: Long): Column =
     ExpressionUtils.column(MinHashSigs(ExpressionUtils.expression(hs),
       k, p20, p31, aBase, aStep, bBase, bStep))
-
-  def intersectCount(a: Column, b: Column): Column =
-    ExpressionUtils.column(ArrayLongIntersectCount(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
   /** Sorted-merge |A∩B| — both inputs MUST be sorted ascending, distinct,
     * null-free (see ArrayLongSortedIntersectCount). */

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one local JVM SparkSession, UTC, AQE. */
+/** Shared session for all suites — one local JVM SparkSession from the
+  * engine's factory (graft.core.GraftSession). */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = graft.core.GraftSession.builder("local[4]", 8).getOrCreate()
+    val s = graft.core.GraftSession.builder(4, 8).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

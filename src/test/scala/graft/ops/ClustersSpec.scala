@@ -59,7 +59,7 @@ class ClustersSpec extends SparkSpec {
     // instead of failing at maxIters
     val n = 4096L
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val star = Clusters.connectedComponents(edges, method = "star")
+    val star = Clusters.starComponents(edges, "a_id", "b_id")
       .as[(Long, Long)].collect()
     assert(star.length === n && star.forall(_._2 == 0L))
     // driverEdgeCap=0 forces the distributed path, so this still proves
@@ -76,7 +76,7 @@ class ClustersSpec extends SparkSpec {
       .toDF("a_id", "b_id")
     val driver = Clusters.connectedComponents(edges) // auto, under the cap
       .as[(Long, Long)].collect().toMap
-    val lab = Clusters.connectedComponents(edges, method = "label", maxIters = 50)
+    val lab = Clusters.labelComponents(edges, "a_id", "b_id", maxIters = 50).get
       .as[(Long, Long)].collect().toMap
     assert(driver === lab)
     // an over-cap graph silently falls through to the distributed path
@@ -91,9 +91,9 @@ class ClustersSpec extends SparkSpec {
     val edges = Seq.fill(300)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .filter { case (a, b) => a != b }
       .toDF("a_id", "b_id")
-    val lab = Clusters.connectedComponents(edges, method = "label", maxIters = 50)
+    val lab = Clusters.labelComponents(edges, "a_id", "b_id", maxIters = 50).get
       .as[(Long, Long)].collect().toMap
-    val star = Clusters.connectedComponents(edges, method = "star")
+    val star = Clusters.starComponents(edges, "a_id", "b_id")
       .as[(Long, Long)].collect().toMap
     assert(star === lab)
   }

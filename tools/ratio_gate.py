@@ -6,8 +6,8 @@ FAILS (exit 1) when any query is >RATIO_THRESHOLD x slower than an oracle
 that itself takes >= MIN_ORACLE_S seconds AND has no entry in the
 checked-in adjudication file — the structural fix for "the promised
 optimization note does not exist": a >2x row without an adjudication can
-no longer ship silently, because the campaign scripts run this gate and
-their committed artifacts include the ratio table.
+no longer ship silently, because tools/campaign.sh runs this gate and
+its artifacts include the ratio table.
 
 Usage: ratio_gate.py BENCH_JSON[,BENCH_JSON2,...] ORACLE_TIMES_JSON \
            ADJUDICATIONS_JSON \
@@ -74,6 +74,10 @@ def main():
             "adjudicated": name in adjudicated,
         })
 
+    if not rows:
+        print(f"GATE FAILED: no query of {bench_path} has a passing oracle "
+              f"time in {oracle_path}")
+        sys.exit(1)
     rows.sort(key=lambda r: -(r["ratio"] or 0))
     gated = [r for r in rows if r["gated"]]
     unadjudicated = [r for r in gated if not r["adjudicated"]]
