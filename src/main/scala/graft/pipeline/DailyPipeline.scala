@@ -14,9 +14,10 @@ import graft.workflow.Workflow.{AllDone, TaskSpec}
   * by the deterministic workflow runner over the shared SparkSession:
   *
   *   pick etl_date → per source: staging (typing + metadata cols + schema
-  *   drift gate) → raw vault (hub/link/satellite builds merged into the
-  *   warehouse) → end rollup (all_done) → close the date when every
-  *   source's latest run succeeded.
+  *   drift gate) → raw vault (hub and link rows of keys not seen before
+  *   appended, the satellite re-versioned — the [[Vault]] loaders) → end
+  *   rollup (all_done) → close the date when every source's latest run
+  *   succeeded.
   *
   * Every dbt-pod of the reference becomes an in-process Spark job; every
   * embedded Trino SQL is one of the ControlPlane/Vault transforms. Re-runs
@@ -26,7 +27,9 @@ import graft.workflow.Workflow.{AllDone, TaskSpec}
   *
   * The task graph runs sequentially: every source's tasks append to the
   * shared `check.*` tables. Inside one vault task the hub, satellite and
-  * link merges run concurrently ([[vaultSource]]).
+  * link loads run concurrently ([[vaultSource]]). A re-run of a day is
+  * safe: re-sighted hub and link keys keep their first load_date, and a
+  * replayed satellite load adds no version.
   *
   * Schemas: op metadata in `op_metadata`, staged sources in `staging`,
   * vault entities in `raw_vault`, drift + notifications in `check`.
@@ -68,33 +71,24 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     drifted
   }
 
-  /** Build + merge the vault entities for one staged source. The hub,
-    * satellite and link merges run concurrently: all three read the same
-    * staged frame and each writes its own table. A failed merge is rethrown
-    * only once the others have finished, so the task's retry never overlaps
-    * them. */
+  /** Load the vault entities of one staged source through the Vault
+    * loaders: hub and link insert-only, satellite re-versioned. The three
+    * loads run concurrently: all read the same staged frame and each writes
+    * its own table. A failed load is rethrown only once the others have
+    * finished, so the task's retry never overlaps them. */
   private[pipeline] def vaultSource(src: SourceSpec, etlDate: String): Unit = {
     val staged = wh.read("staging", src.name)
-    val hub = () => mergeEntity("raw_vault", s"hub_${src.name}",
-      Vault.hub(staged, src.name, src.businessKeys, lit(etlDate), src.name),
-      s"hub_${src.name}_hash_key")
-    val sat = () => mergeEntity("raw_vault", s"sat_${src.name}",
-      Vault.satellite(staged.withColumn("load_date", lit(etlDate)),
-        src.name, src.businessKeys, src.attrs, "load_date", src.businessKeys),
-      s"sat_${src.name}_hash_key", extraKeys = Seq("load_date", "hash_diff"))
+    val hub = () => Vault.loadNewKeys(wh, s"hub_${src.name}",
+      Vault.hub(staged, src.name, src.businessKeys, lit(etlDate), src.name))
+    val sat = () => Vault.loadSatellite(wh, staged, src.name, src.businessKeys,
+      src.attrs, lit(etlDate))
     val link = src.linkTo.map { case (other, otherKeys) =>
-      () => mergeEntity("raw_vault", s"link_${src.name}_$other",
+      () => Vault.loadNewKeys(wh, s"link_${src.name}_$other",
         Vault.link(staged, s"${src.name}_$other",
-          Seq(src.name -> src.businessKeys, other -> otherKeys), lit(etlDate), src.name),
-        s"link_${src.name}_${other}_hash_key")
+          Seq(src.name -> src.businessKeys, other -> otherKeys), lit(etlDate), src.name))
     }
     Workflow.fanOut(spark.sparkContext.defaultParallelism)(Seq(hub, sat) ++ link)
   }
-
-  private def mergeEntity(schema: String, table: String, df: DataFrame,
-                          hashKey: String, extraKeys: Seq[String] = Nil): Unit =
-    if (wh.exists(schema, table)) wh.merge(schema, table, df, hashKey +: extraKeys)
-    else wh.overwrite(schema, table, df)
 
   /** The root DAG's record-count reconciliation (`check_records`,
     * dag_etlpipeline__root.py:16,55-60): re-count the source, the staged

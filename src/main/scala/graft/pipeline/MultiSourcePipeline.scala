@@ -27,10 +27,16 @@ import graft.workflow.Workflow.{AllDone, RunResult, TaskSpec}
   * MANUALLY-started sub-pipeline mints a fresh uuid and registers its own
   * run row, created_by = the dag type that started it.
   *
-  * Scale: each source's staging+vault is an independent Spark job chain —
-  * on a cluster the 19 chains are embarrassingly parallel (scheduler
-  * pools); the shared-entity merges key on uniform md5 hash keys, so 19
-  * writers' rows coexist without skew and `record_source` keeps lineage.
+  * Shared entities: the hub holds one row per business key, whichever
+  * sources carry it, with the record_source of the first source that
+  * loaded it; the satellite versions every source's rows per hash key.
+  * The vault sub-workflows run one after another (they write the same
+  * tables), each through the [[Vault]] loaders.
+  *
+  * Scale: each source's staging is an independent Spark job chain — on a
+  * cluster the 19 chains are embarrassingly parallel (scheduler pools);
+  * the shared-entity loads key on uniform md5 hash keys, so 19 writers'
+  * rows coexist without skew.
   */
 class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
   import spark.implicits._
@@ -76,26 +82,18 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
     }, retries = 2, retryDelayMs = 0L))
 
   /** Vault sub-workflow for one source: the SHARED `tag:multi_sources`
-    * build — hub and satellite of the shared entity, merged on hash keys;
-    * rows from every source coexist, record_source keeps lineage. */
+    * build through the [[Vault]] loaders — the shared hub gains only
+    * business keys no earlier source sighted (its record_source names the
+    * first source), the shared satellite is re-versioned with this
+    * source's rows. */
   private[pipeline] def vaultGraph(entity: String, src: MultiSource,
                                    etlDate: String): Seq[TaskSpec] = Seq(
     TaskSpec(s"vault_${src.name}", run = () => {
       val staged = wh.read("staging", s"${src.prefix}${src.name}")
-      val hub = Vault.hub(staged, entity, src.businessKeys, lit(etlDate), src.dataSource)
-      mergeEntity(s"hub_$entity", hub, s"hub_${entity}_hash_key",
-        extraKeys = Seq("record_source"))
-      val sat = Vault.satellite(
-        staged.withColumn("load_date", lit(etlDate)),
-        entity, src.businessKeys, src.attrs, "load_date", src.businessKeys)
-      mergeEntity(s"sat_$entity", sat, s"sat_${entity}_hash_key",
-        extraKeys = Seq("load_date", "hash_diff"))
+      Vault.loadNewKeys(wh, s"hub_$entity",
+        Vault.hub(staged, entity, src.businessKeys, lit(etlDate), src.dataSource))
+      Vault.loadSatellite(wh, staged, entity, src.businessKeys, src.attrs, lit(etlDate))
     }, retries = 2))
-
-  private def mergeEntity(table: String, df: DataFrame, hashKey: String,
-                          extraKeys: Seq[String] = Nil): Unit =
-    if (wh.exists("raw_vault", table)) wh.merge("raw_vault", table, df, hashKey +: extraKeys)
-    else wh.overwrite("raw_vault", table, df)
 
   /** The root graph over all sources. Returns (root result, child results
     * by trigger-task id). Child runs carry conf triggered_by='group', so

@@ -10,20 +10,22 @@ import graft.vault.Vault
 
 /** Incremental Data Vault loading: new source files land in a directory;
   * each `Trigger.AvailableNow` run processes exactly the unseen files
-  * (checkpointed file index) and MERGEs the delta into the hub/satellite
-  * tables via `foreachBatch` — the same batch builders, now exactly-once
-  * incremental. This is SURVEY §7's incremental plan: the reference's
-  * daily batch becomes a standing ingest without a second engine.
+  * (checkpointed file index) and loads the delta into `hub_{name}` and
+  * `sat_{name}` via `foreachBatch` through the same [[Vault]] loaders the
+  * daily pipeline uses — now exactly-once incremental. This is SURVEY §7's
+  * incremental plan: the reference's daily batch becomes a standing ingest
+  * without a second engine.
   *
-  * At 100 TB scale each micro-batch is one day/hour of arrivals; the hub
-  * merge shuffles only the delta against the (bucketed) hub on the uniform
-  * hash key, and the satellite append is a partitioned write — no
-  * full-table rewrite is forced by streaming (satellite close-off runs as
-  * the periodic compaction-style job over affected keys).
+  * Each micro-batch is one day/hour of arrivals. The hub load anti-joins
+  * the delta against the stored hash keys and appends only unseen keys. The
+  * satellite load re-versions the stored rows plus the delta and rewrites
+  * the table once per batch, so versions close as the stream runs. A batch
+  * replayed after a crash (side effects written, epoch not committed) adds
+  * no hub row and no satellite version.
   */
 object IncrementalVault {
 
-  /** Stream a source directory into hub + satellite-append tables.
+  /** Stream a source directory into the hub and satellite tables.
     * `businessKeys`/`attrs` as in Vault; blocks until available data is
     * processed. */
   def ingest(spark: SparkSession, wh: Warehouse, sourceDir: String,
@@ -35,56 +37,19 @@ object IncrementalVault {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) mergeDelta(wh, batch, name, businessKeys, attrs, loadDateCol)
+        if (!batch.isEmpty) loadDelta(wh, batch, name, businessKeys, attrs, loadDateCol)
       }
       .start()
     q.awaitTermination()
   }
 
-  /** Merge one delta batch: hub rows merge on hash key (idempotent);
-    * satellite history appends the delta's change rows. */
-  private[streaming] def mergeDelta(wh: Warehouse, batch: DataFrame, name: String,
+  /** Load one delta batch: each new key's earliest sighting into the hub,
+    * the batch's rows into the re-versioned satellite. */
+  private[streaming] def loadDelta(wh: Warehouse, batch: DataFrame, name: String,
                                     businessKeys: Seq[String], attrs: Seq[String],
                                     loadDateCol: String): Unit = {
-    // a delta can carry one business key many times with different load
-    // dates — hubs are append-once per key, keep the earliest sighting
-    val hub = batch.groupBy(businessKeys.map(col): _*)
-      .agg(min(col(loadDateCol)).as("load_date"))
-      .select(Vault.hashKey(businessKeys.map(col)).as(s"hub_${name}_hash_key") +:
-        businessKeys.map(col) :+ col("load_date") :+
-        lit(s"stream_$name").as("record_source"): _*)
-    // hubs are insert-only: a key's first sighting is permanent, so the
-    // delta appends only unseen hash keys (anti-join + append — no rewrite
-    // of the existing hub at all)
-    if (wh.exists("raw_vault", s"hub_$name")) {
-      val existing = wh.read("raw_vault", s"hub_$name")
-      val fresh = graft.ops.Relational.antiJoin(
-        hub.select(existing.columns.map(col): _*), existing, Seq(s"hub_${name}_hash_key"))
-      if (!fresh.isEmpty) wh.append("raw_vault", s"hub_$name", fresh)
-    } else wh.overwrite("raw_vault", s"hub_$name", hub)
-
-    val sat = Vault.satellite(batch, name, businessKeys, attrs, loadDateCol)
-      .drop("load_end_date") // close-off is computed over full history below
-    if (wh.exists("raw_vault", s"sat_${name}_history"))
-      wh.merge("raw_vault", s"sat_${name}_history", sat,
-        Seq(s"sat_${name}_hash_key", "load_date", "hash_diff"))
-    else wh.overwrite("raw_vault", s"sat_${name}_history", sat)
-  }
-
-  /** Periodic close-off over the accumulated history: re-apply change
-    * compression ACROSS batches (a key re-arriving with unchanged attrs in
-    * a later delta must not open a new version) and recompute load_end_date
-    * windows — run like compaction, scoped to keys touched since the last
-    * run at scale. */
-  def closeOff(spark: SparkSession, wh: Warehouse, name: String): Long = {
-    import org.apache.spark.sql.expressions.Window
-    val hk = s"sat_${name}_hash_key"
-    val w = Window.partitionBy(col(hk)).orderBy(col("load_date"))
-    val closed = wh.read("raw_vault", s"sat_${name}_history")
-      .withColumn("__prev", lag(col("hash_diff"), 1).over(w))
-      .filter(col("__prev").isNull || col("__prev") =!= col("hash_diff"))
-      .drop("__prev")
-      .withColumn("load_end_date", lead(col("load_date"), 1).over(w))
-    wh.overwrite("raw_vault", s"sat_$name", closed)
+    Vault.loadNewKeys(wh, s"hub_$name",
+      Vault.hub(batch, name, businessKeys, col(loadDateCol), s"stream_$name"))
+    Vault.loadSatellite(wh, batch, name, businessKeys, attrs, col(loadDateCol))
   }
 }

@@ -57,6 +57,25 @@ class MultiSourcePipelineSpec extends SparkSpec {
     assert(log.filter(col("status") === "success").count() === 19)
   }
 
+  test("sources sharing a business key leave one hub row; a second run adds none") {
+    val (wh, p) = fresh()
+    def src(name: String, keys: Seq[Long]) = p.MultiSource(name, s"ds_$name", "",
+      load = () => keys.map(k => (k, s"n$k", "SEG")).toDF("c_custkey", "c_name", "c_mktsegment"),
+      businessKeys = Seq("c_custkey"), attrs = Seq("c_name", "c_mktsegment"))
+    val sources = Seq(src("a", Seq(1L, 2L)), src("b", Seq(2L, 3L)))
+    p.run("customer", sources, "2024-01-01")._1.assertAllSuccess()
+    val hub = wh.read("raw_vault", "hub_customer")
+    assert(hub.count() === 3)
+    // key 2 keeps the record_source of the first source that loaded it
+    assert(hub.filter(col("c_custkey") === 2L).select("record_source").as[String]
+      .collect().toSeq === Seq("ds_a"))
+    assert(wh.read("raw_vault", "sat_customer").count() === 3)
+    // the same sources on the next date: nothing new, nothing changed
+    p.run("customer", sources, "2024-01-02")._1.assertAllSuccess()
+    assert(wh.read("raw_vault", "hub_customer").count() === 3)
+    assert(wh.read("raw_vault", "sat_customer").count() === 3)
+  }
+
   test("one failing source does not poison the other 18") {
     val (wh, p) = fresh()
     val sources = nineteenSources(p, failing = Set("nhamay5"))

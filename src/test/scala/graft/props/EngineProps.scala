@@ -1,10 +1,13 @@
 package graft.props
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 import graft.SharedSpark
+import graft.core.Warehouse
 import graft.ops.Relational
 import graft.vault.{SchemaDrift, Vault}
 
@@ -66,6 +69,24 @@ object EngineProps extends Properties("engine") {
         }
         oneOpen && chained && compressed
       }
+    }
+
+  property("satellite loader: any split into batches, one replayed, == one satellite call") =
+    forAll(genLoads, Gen.listOfN(3, Gen.choose(1, 8)), Gen.choose(0, 99)) { (loads, cuts, pick) =>
+      val rows = loads.distinctBy(l => (l._1, l._2))
+      def frame(rs: Seq[(Int, Int, String)]) =
+        rs.map(l => (l._1.toString, f"2024-01-0${l._2}%d", l._3)).toDF("bk", "load_date", "status")
+      // batches arrive in load-date order: batch i holds the days up to cut i
+      val bounds = (0 +: cuts.distinct.sorted) :+ 9
+      val batches = bounds.zip(bounds.tail)
+        .map { case (lo, hi) => rows.filter(r => r._2 > lo && r._2 <= hi) }
+        .filter(_.nonEmpty)
+      val wh = new Warehouse(spark, Files.createTempDirectory("graft_prop_sat_").toString)
+      (batches :+ batches(pick % batches.size)).foreach(b =>
+        Vault.loadSatellite(wh, frame(b), "p", Seq("bk"), Seq("status"), col("load_date")))
+      val loaded = wh.read("raw_vault", "sat_p")
+      val whole = Vault.satellite(frame(rows), "p", Seq("bk"), Seq("status"), "load_date")
+      loaded.exceptAll(whole).isEmpty && whole.exceptAll(loaded).isEmpty
     }
 
   property("drift is antisymmetric: diff(a,b) I-rows == diff(b,a) D-rows") =

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.core.Warehouse
 
-/** Incremental vault: two AvailableNow runs over a growing directory merge
+/** Incremental vault: two AvailableNow runs over a growing directory load
   * exactly the delta (checkpoint), idempotently, into hub + satellite. */
 class IncrementalVaultSpec extends SparkSpec {
   import spark.implicits._
@@ -41,7 +41,7 @@ class IncrementalVaultSpec extends SparkSpec {
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, _: Long) =>
         if (!b.isEmpty) {
-          IncrementalVault.mergeDelta(wh, b, "cust", Seq("ck"), Seq("status"), "load_date")
+          IncrementalVault.loadDelta(wh, b, "cust", Seq("ck"), Seq("status"), "load_date")
           throw new RuntimeException("injected crash before epoch commit")
         }
       }
@@ -51,16 +51,17 @@ class IncrementalVaultSpec extends SparkSpec {
     assert(wh.read("raw_vault", "hub_cust").count() === 3)
 
     // restart from the same checkpoint: batch 2 replays on top of its own
-    // partial effects; anti-join hub append + keyed satellite merge absorb
-    // the replay, so the result equals the never-crashed run
+    // partial effects; the anti-join hub append and the satellite
+    // re-versioning absorb the replay, so the result equals the
+    // never-crashed run
     IncrementalVault.ingest(spark, wh, srcDir, schema, "cust",
       Seq("ck"), Seq("status"), "load_date", ckpt)
     val hub = wh.read("raw_vault", "hub_cust")
     assert(hub.count() === 3)
     assert(hub.select("ck").distinct().count() === 3)
-    val hist = wh.read("raw_vault", "sat_cust_history")
-    assert(hist.count() === 4) // k1:A, k1:B, k2:X, k3:N — no replay dups
-    assert(hist.groupBy("sat_cust_hash_key", "load_date", "hash_diff")
+    val sat = wh.read("raw_vault", "sat_cust")
+    assert(sat.count() === 4) // k1:A, k1:B, k2:X, k3:N — no replay dups
+    assert(sat.groupBy("sat_cust_hash_key", "load_date", "hash_diff")
       .count().filter(col("count") > 1).isEmpty)
   }
 
@@ -75,7 +76,7 @@ class IncrementalVaultSpec extends SparkSpec {
     IncrementalVault.ingest(spark, wh, srcDir, schema, "cust",
       Seq("ck"), Seq("status"), "load_date", ckpt)
     assert(wh.read("raw_vault", "hub_cust").count() === 2)
-    assert(wh.read("raw_vault", "sat_cust_history").count() === 2)
+    assert(wh.read("raw_vault", "sat_cust").count() === 2)
 
     // second batch: one new key, one changed key, one unchanged duplicate
     Seq(("k3", "2024-01-02", "N"), ("k1", "2024-01-02", "B"), ("k2", "2024-01-02", "X"))
@@ -89,7 +90,6 @@ class IncrementalVaultSpec extends SparkSpec {
     // k1's hub load_date stays the FIRST sighting
     assert(hub.filter(col("ck") === "k1").select("load_date").as[String].head() === "2024-01-01")
 
-    IncrementalVault.closeOff(spark, wh, "cust")
     val sat = wh.read("raw_vault", "sat_cust")
     // k1: A then B — A's window closes at B's load date, B stays open
     assert(sat.filter(col("status") === "A").select("load_end_date").as[String].head()
