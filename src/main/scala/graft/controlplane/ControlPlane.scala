@@ -1,6 +1,6 @@
 package graft.controlplane
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Relational
@@ -50,21 +50,6 @@ object ControlPlane {
   }
 
   // ---- Run registry (etl_manager.py:72-102,271-301,358-382) ----
-
-  /** New run row per (etl_date, source) with a fresh uuid. */
-  def newRun(spark: SparkSession, etlDate: String, source: String,
-             triggeredBy: String): DataFrame = {
-    import spark.implicits._
-    Seq((etlDate, source, triggeredBy)).toDF("etl_date", "source_name", "triggered_by")
-      .withColumn("run_id", expr("uuid()"))
-      .withColumn("created_at", current_timestamp())
-      .withColumn("status", lit(null).cast("string"))
-  }
-
-  /** Latest run_id per (etl_date, source) — the correlated-MAX subquery
-    * (J7, etl_manager.py:77-88) as a window argmax. */
-  def latestRuns(runs: DataFrame): DataFrame =
-    Relational.latestPerGroup(runs, Seq("etl_date", "source_name"), "created_at", Seq("run_id"))
 
   /** Roll task statuses up to run status: success iff every task row is
     * success/skipped; empty task list counts as success (Python all([])

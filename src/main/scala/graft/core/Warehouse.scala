@@ -3,7 +3,8 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.ops.Relational
 
@@ -25,10 +26,12 @@ import graft.ops.Relational
   * system-table equivalent the housekeeping jobs scan
   * (reference utlis/clean_metadata.py:54-57).
   *
-  * MERGE/UPDATE/DELETE are join-and-rewrite over the current version
-  * (reference executes them in Trino/Iceberg: utlis/etl_manager.py:195-353,
-  * 617-709) — semantics identical for single-writer batch; each rewrite is
-  * one shuffle on the merge keys, same cost class as any MERGE.
+  * This is the engine's only table store. MERGE/UPDATE/DELETE are join-and-
+  * rewrite over the current version (reference executes them in
+  * Trino/Iceberg: utlis/etl_manager.py:195-353, 617-709) — semantics
+  * identical for single-writer batch. `merge` commits
+  * Relational.mergeAsRewrite; UPDATE and DELETE are Relational.updateWhereIn
+  * and Relational.antiJoin over `read`, committed with `overwrite`.
   */
 class Warehouse(spark: SparkSession, root: String) {
 
@@ -168,30 +171,34 @@ class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** Append: new version referencing previous dirs plus the new one — no
-    * data rewrite (the chunked-INSERT path, reference etl_manager.py:131-155). */
+    * data rewrite (the chunked-INSERT path, reference etl_manager.py:131-155).
+    * Appending zero rows to an existing table commits nothing: the empty
+    * data dir is deleted and the current version returned. The first append
+    * creates the table even when empty, so only appends to an existing
+    * table count their rows, as an Observation riding the write (no extra
+    * Spark job). */
   def append(schema: String, table: String, df: DataFrame,
              partitionBy: Seq[String] = Nil): Long = {
     val dir = tableDir(schema, table)
     val parts = resolvePartitioning(schema, table, partitionBy)
-    val v = currentVersion(schema, table) + 1
-    val prev = if (v == 1) Seq.empty else dataDirs(schema, table).map(_.stripPrefix(s"$dir/"))
-    df.write.mode("overwrite").partitionBy(parts: _*).parquet(s"$dir/data/v$v")
-    commit(dir, v, prev :+ s"data/v$v")
-    v
+    val cur = currentVersion(schema, table)
+    val v = cur + 1
+    val prev = if (cur == 0) Seq.empty else dataDirs(schema, table).map(_.stripPrefix(s"$dir/"))
+    val written = Observation()
+    (if (cur == 0) df else df.observe(written, count(lit(1)).as("rows")))
+      .write.mode("overwrite").partitionBy(parts: _*).parquet(s"$dir/data/v$v")
+    if (cur > 0 && written.get("rows") == 0L) {
+      fs.delete(new Path(s"$dir/data/v$v"), true)
+      cur
+    } else {
+      commit(dir, v, prev :+ s"data/v$v")
+      v
+    }
   }
 
   /** MERGE INTO as full-outer join-and-rewrite (Relational.mergeAsRewrite). */
   def merge(schema: String, table: String, source: DataFrame, keys: Seq[String]): Long =
     overwrite(schema, table, Relational.mergeAsRewrite(read(schema, table), source, keys))
-
-  /** UPDATE ... WHERE key IN (keyRows) as read→when→rewrite. */
-  def update(schema: String, table: String, keyRows: DataFrame, keys: Seq[String],
-             assignments: Map[String, org.apache.spark.sql.Column]): Long =
-    overwrite(schema, table, Relational.updateWhereIn(read(schema, table), keyRows, keys, assignments))
-
-  /** DELETE WHERE key IN (keyRows) as anti-join-and-rewrite. */
-  def delete(schema: String, table: String, keyRows: DataFrame, keys: Seq[String]): Long =
-    overwrite(schema, table, Relational.antiJoin(read(schema, table), keyRows.select(keys.map(org.apache.spark.sql.functions.col): _*).distinct(), keys))
 
   /** The metadata-log system table: (version, file) rows, one per log entry
     * — queryable like `"{t}$metadata_log_entries"`. */
@@ -235,69 +242,6 @@ class Warehouse(spark: SparkSession, root: String) {
       registerTable(r.getAs[String]("table_schema"), r.getAs[String]("table_name"),
         r.getAs[scala.collection.Seq[String]]("data_dirs").toSeq)
     }
-
-  /** Publish the table's CURRENT version as a catalog-registered BUCKETED
-    * mart (`graft_mart` database) — the repeated-join layout: two marts
-    * bucketed on the same keys with the same bucket count sort-merge join
-    * with ZERO exchanges (BucketedJoinSpec proves the plan). The versioned
-    * warehouse stays the write-side source of truth; marts are read-
-    * optimized projections a scheduler refreshes after each close
-    * (write once bucketed, join many times shuffle-free — the 100 TB
-    * answer to fact-fact joins that re-shuffle every query).
-    * Returns the catalog table name. */
-  def publishBucketedMart(schema: String, table: String, bucketKeys: Seq[String],
-                          nBuckets: Int): String = {
-    val mart = s"graft_mart.${schema}_$table"
-    spark.sql("CREATE DATABASE IF NOT EXISTS graft_mart")
-    spark.sql(s"DROP TABLE IF EXISTS $mart")
-    read(schema, table).write
-      .bucketBy(nBuckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-      .mode("overwrite")
-      .saveAsTable(mart)
-    mart
-  }
-
-  /** MERGE INTO a bucketed mart with NO target-side shuffle — the repeated-
-    * merge layout for 100 TB facts. The mart's bucket layout (bucketBy keys,
-    * sortBy keys) lets the full-outer merge join read target buckets
-    * directly: the only Exchange in the plan is the source delta (tiny next
-    * to the fact), and the merged result lands back in the same bucket
-    * layout — the SMJ preserves the target's hash partitioning, so the
-    * bucketed write emits one file per bucket with no extra shuffle.
-    * Swap is DROP + RENAME of a fully-written staging table (`__next`);
-    * the merged data is durable before the old mart drops, so the worst
-    * crash window leaves the mart name briefly unbound with `__next`
-    * holding the complete result (re-run the rename to recover). The
-    * versioned warehouse remains the write-side source of truth either
-    * way. BucketedMergeSpec pins the single-exchange plan and the
-    * post-merge shuffle-free join.
-    * Daily cost at scale: scan fact once + shuffle only the delta, versus
-    * `merge()`'s shuffle of BOTH sides every run. */
-  def mergeBucketedMart(schema: String, table: String, source: DataFrame,
-                        keys: Seq[String], nBuckets: Int): String = {
-    val mart = s"graft_mart.${schema}_$table"
-    val next = s"graft_mart.${schema}_${table}__next"
-    // Crash recovery BEFORE touching the staging table: a prior run that
-    // died between DROP(mart) and RENAME left its complete result in
-    // `__next` and no mart — adopt it (then this merge re-applies its
-    // delta, which is idempotent for an upsert). Only when the mart
-    // exists is a leftover `__next` truly stale and safe to clear.
-    val martExists = spark.catalog.tableExists(mart)
-    val nextExists = spark.catalog.tableExists(next)
-    require(martExists || nextExists,
-      s"mergeBucketedMart($schema.$table): no published mart to merge into — " +
-        "run publishBucketedMart first")
-    if (!martExists && nextExists) spark.sql(s"ALTER TABLE $next RENAME TO $mart")
-    else if (nextExists) spark.sql(s"DROP TABLE $next")
-    val merged = Relational.mergeAsRewrite(spark.table(mart), source, keys,
-      nullSafe = false)
-    merged.write.bucketBy(nBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*).mode("overwrite").saveAsTable(next)
-    spark.sql(s"DROP TABLE $mart")
-    spark.sql(s"ALTER TABLE $next RENAME TO $mart")
-    mart
-  }
 
   /** information_schema.tables equivalent: scan the warehouse directory
     * tree for committed tables (reference utlis/clean_data.py:79-81). */

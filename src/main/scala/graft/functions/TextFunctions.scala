@@ -120,10 +120,6 @@ object TextFunctions {
     org.apache.spark.sql.graft.MinHashExprs.winnowMins(hs, w)
   }
 
-  /** Salted portable hash family: hashK(i, s) = md5(i ':' s), compared as
-    * hex strings (lexicographic order == value order for fixed width). */
-  def saltedMd5(i: Int, c: Column): Column = md5(concat(lit(s"$i:"), c))
-
   /** Distinct word n-grams (space-joined token windows); docs with fewer
     * than n tokens yield none. Row-local — the decontamination join key. */
   def wordNgrams(c: Column, n: Int): Column = {

@@ -1,7 +1,5 @@
 package graft.metavault
 
-import scala.io.Source
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,27 +60,10 @@ object ModelRegistry {
   /** The reference's name normalization (etl_manager.py:659,751,889). */
   def normalize(s: String): String = s.replace(" ", "_").toLowerCase
 
-  def loadDir(path: String): Seq[ModelDef] = {
-    val files = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".yml")).sortBy(_.getName)
-    files.toSeq.flatMap { f =>
-      val src = Source.fromFile(f, "UTF-8")
-      try parseModelYaml(src.mkString) finally src.close()
-    }
-  }
-
   def toDF(spark: SparkSession, models: Seq[ModelDef]): DataFrame = {
     import spark.implicits._
     models.map(m => (m.name, m.description, m.entityType, m.columns.map(_.name)))
       .toDF("model_name", "description", "entity_type", "columns")
-  }
-
-  /** (model, column) rows — the satellite-column registry feed
-    * (etl_manager.py:1246-1379 column-history sync). */
-  def columnRows(spark: SparkSession, models: Seq[ModelDef]): DataFrame = {
-    import spark.implicits._
-    models.flatMap(m => m.columns.map(c => (m.name, c.name)))
-      .toDF("model_name", "column_name")
   }
 
   /** Sync the entity registry from freshly-parsed models: MERGE semantics +

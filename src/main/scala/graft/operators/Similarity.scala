@@ -108,15 +108,6 @@ object Similarity {
         lit(1L << p)).otherwise(lit(0L)))
     }
 
-  /** Bucket code per vector: bit p set iff quantized(emb) · plane_p > 0.
-    * One row-local projection (see bucketCol). */
-  def lshBuckets(df: DataFrame, planes: DataFrame,
-                 idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val pl = planesLocal(planes)
-    df.select(col(idCol), quantize(col(embCol)).as("__qe"))
-      .select(col(idCol), bucketCol(col("__qe"), pl).as("bucket"))
-  }
-
   /** withNorm plus the row-local bucket — the one-projection frame every
     * LSH consumer (annTopK, cosineNearDupPairs, semanticContaminated)
     * builds its candidate join from. Takes the COLLECTED planes so an

@@ -78,27 +78,21 @@ object Relational {
     * distinguishes "source row matched" from "source column null", matching
     * MERGE INTO UPDATE SET semantics; plain coalesce would silently keep
     * the target's old value). Unmatched rows keep the target's values;
-    * source-only rows insert. Reference: etl_manager.py:617-635,687-711 (J5).
+    * source-only rows insert. Keys match null-safely (`<=>`), so a NULL-keyed
+    * source row replaces the NULL-keyed target row instead of duplicating
+    * it. Reference: etl_manager.py:617-635,687-711 (J5).
     *
     * At 100 TB this is a single shuffle on the merge keys of both sides —
-    * same cost class as any MERGE implementation; pre-bucketing both tables
-    * on the keys would make it shuffle-free.
+    * same cost class as any MERGE implementation.
     */
-  def mergeAsRewrite(target: DataFrame, source: DataFrame, keys: Seq[String],
-                     nullSafe: Boolean = true): DataFrame = {
+  def mergeAsRewrite(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
     require(source.columns.sorted.sameElements(target.columns.sorted),
       s"merge schema mismatch: ${source.columns.mkString(",")} vs ${target.columns.mkString(",")}")
     // Rename-before-join (not alias-based resolution): target may itself be
     // derived from source, and unique names sidestep self-join ambiguity.
     val s = source.columns.foldLeft(source)((d, c) => d.withColumnRenamed(c, "__s_" + c))
       .withColumn("__s_hit", lit(true)) // non-null iff a source row matched
-    // nullSafe=false is ANSI MERGE `ON t.k = s.k` (NULL keys never match —
-    // what Trino executes for the reference) AND the bucket-aligned form:
-    // `<=>` rewrites the join keys to (coalesce(k), isnull(k)), which a
-    // table bucketed on k cannot satisfy, forcing a target-side Exchange.
-    val cond = keys.map(k =>
-      if (nullSafe) col(k) <=> col("__s_" + k) else col(k) === col("__s_" + k))
-      .reduce(_ && _)
+    val cond = keys.map(k => col(k) <=> col("__s_" + k)).reduce(_ && _)
     target.join(s, cond, "full_outer")
       .select(target.columns.map { c =>
         if (keys.contains(c)) coalesce(col("__s_" + c), col(c)).as(c)
@@ -121,47 +115,6 @@ object Relational {
     val right = build.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1))))
     left.join(right, keys :+ "__salt").drop("__salt")
-  }
-
-  /** Salt factor derived from a measured skew report (Profiler.skewReport
-    * output): enough salts that the hottest key's share lands near
-    * `targetShareE4` per task, clamped to [2, maxSalts]. Returns 0 when
-    * the report marks nothing hot (caller joins plain). */
-  def deriveSalts(report: DataFrame, targetShareE4: Long = 250L,
-                  maxSalts: Int = 256): Int = {
-    val hotShares = report.filter(col("hot")).select(col("share_e4"))
-      .collect().map(_.getLong(0))
-    if (hotShares.isEmpty) 0
-    else math.max(2, math.min(maxSalts,
-      math.ceil(hotShares.max.toDouble / targetShareE4).toInt))
-  }
-
-  /** Measurement-driven skew join: consumes the hot-key verdicts of
-    * `Profiler.skewReport` (keys as strings, share_e4, hot) instead of a
-    * caller-guessed salt constant. Rows with a MEASURED-hot key run
-    * through `saltedJoin` with the derived factor; everything else joins
-    * plain — so the build side replicates only its hot rows, and cold
-    * keys pay nothing. Result ≡ plain inner join (null keys match
-    * nothing in either path, as in any equi-join).
-    *
-    * This is the profile-then-join loop a 100 TB pipeline wants: the
-    * report costs one scan of the probe side's key column (run it on the
-    * ingest that landed the data), and the join plan adapts to the skew
-    * that is actually there rather than to a constant chosen when the
-    * data looked different. */
-  def adaptiveSaltedJoin(skewed: DataFrame, build: DataFrame, key: String,
-                         report: DataFrame, targetShareE4: Long = 250L,
-                         maxSalts: Int = 256): DataFrame = {
-    val salts = deriveSalts(report, targetShareE4, maxSalts)
-    if (salts == 0) skewed.join(build, Seq(key))
-    else {
-      val hotKeys = report.filter(col("hot")).select(col("key"))
-        .collect().map(_.getString(0)).toSeq
-      val isHot = col(key).cast("string").isin(hotKeys: _*)
-      val hot = saltedJoin(skewed.filter(isHot), build.filter(isHot), Seq(key), salts)
-      val cold = skewed.filter(!isHot).join(build, Seq(key))
-      hot.unionByName(cold)
-    }
   }
 
   /** Incremental aggregate maintenance — refresh a stored rollup with a
@@ -187,8 +140,7 @@ object Relational {
 
   /** CDC snapshot diff — classify every key as inserted / deleted /
     * updated between two versions of a table (unchanged rows drop out).
-    * One full-outer join on the key (single shuffle per side; bucket both
-    * snapshots on the key and even that disappears); values compare
+    * One full-outer join on the key (single shuffle per side); values compare
     * null-safely so NULL→NULL is "unchanged" and NULL→value is an update.
     * Output: key columns + `action`. The feed every SCD/merge pipeline
     * wants from upstream when the source can't emit a changelog. */

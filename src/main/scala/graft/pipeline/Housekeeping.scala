@@ -22,10 +22,8 @@ import graft.workflow.Workflow.{AllDone, TaskSpec}
   * time (Workflow.run's `parallelism`): each task touches exactly one table,
   * and one small table's Spark jobs leave most cores idle. The graph gives
   * the same per-table isolation (one table's failure doesn't stop the rest —
-  * `end` is all_done and the rollup raises afterwards). The ANN and mart
-  * graphs below stay sequential: every ANN task appends to the shared
-  * `ann_gate_log`, and mart refreshes rewrite the shared `graft_mart`
-  * catalog.
+  * `end` is all_done and the rollup raises afterwards). The ANN graph below
+  * stays sequential: every ANN task appends to the shared `ann_gate_log`.
   */
 object Housekeeping {
 
@@ -63,7 +61,7 @@ object Housekeeping {
   private def requireUniqueIds(ids: Seq[String], items: Seq[String]): Unit = {
     val dup = ids.zip(items).groupBy(_._1).filter(_._2.size > 1)
     require(dup.isEmpty,
-      s"housekeeping task ids collide (rename the tables or marts): " +
+      s"housekeeping task ids collide (rename the tables or indexes): " +
         dup.map { case (id, xs) => s"$id <- [${xs.map(_._2).mkString(", ")}]" }
           .mkString("; "))
   }
@@ -96,11 +94,6 @@ object Housekeeping {
     Workflow.run(perTableGraph(wh, "sweep") { (s, t) =>
       Maintenance.orphanSweep(spark, wh, s, t, retainMs); ()
     }, parallelism = spark.sparkContext.defaultParallelism)
-
-  /** A bucketed read-side projection of a warehouse table: bucket keys +
-    * count (Warehouse.publishBucketedMart / mergeBucketedMart). */
-  case class MartSpec(schema: String, table: String,
-                      bucketKeys: Seq[String], nBuckets: Int)
 
   /** One serving ANN index under maintenance: where it lives, its
     * source-of-truth corpus table, and the gate's operating point.
@@ -223,20 +216,5 @@ object Housekeeping {
       coalesce(expr("sum(stat) div count(1)"), lit(0L)).as("avg")).head()
     val (mx, avg) = (row.getLong(0), row.getLong(1))
     mx * 10000L / math.max(1L, avg)
-  }
-
-  /** Post-close mart refresh: republish each configured mart from the
-    * versioned warehouse's current version, with the same per-item
-    * isolation contract as the other housekeeping graphs. Write once
-    * bucketed → every downstream fact-fact join runs shuffle-free until
-    * the next refresh. */
-  def runMartRefresh(wh: Warehouse, marts: Seq[MartSpec]): Workflow.RunResult = {
-    val idFor = marts.map(m => s"mart_${m.schema}_${m.table}" -> m)
-    requireUniqueIds(idFor.map(_._1), marts.map(m => s"${m.schema}.${m.table}"))
-    val byId = idFor.toMap
-    Workflow.run(fanOutGraph(idFor.map(_._1)) { id =>
-      val m = byId(id)
-      wh.publishBucketedMart(m.schema, m.table, m.bucketKeys, m.nBuckets); ()
-    })
   }
 }

@@ -1,6 +1,5 @@
 package graft.vault
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Schema-drift detection — the reference pipeline's flagship data-contract
@@ -15,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * was dropped in its old shape and added in its new one).
   *
   * Schema diffing is driver-side metadata work (a schema is not data);
-  * results become a DataFrame so the drift log appends like any table.
+  * callers turn the rows into a DataFrame so the drift log appends like any
+  * table.
   */
 object SchemaDrift {
 
@@ -32,12 +32,6 @@ object SchemaDrift {
       .filter(f => !reg.get(f.name).contains(f.dataType.simpleString))
       .map(f => DriftRow(table, f.name, f.dataType.simpleString, "I"))
     (deleted ++ inserted).sortBy(r => (r.column_name, r.status))
-  }
-
-  def diffDf(spark: SparkSession, registered: StructType, incoming: StructType,
-             table: String): DataFrame = {
-    import spark.implicits._
-    diff(registered, incoming, table).toDF()
   }
 
   /** True when any drift exists — drives the branch that routes to the

@@ -136,7 +136,8 @@ object Vault {
   /** Insert-only load of a hub or link (rows from [[hub]] / [[link]]) into
     * raw_vault.{table}, keyed on `{table}_hash_key`: the first load creates
     * the table; later loads append only the rows whose hash key the table
-    * does not hold yet. Returns the committed version. */
+    * does not hold yet; a load with no new key commits nothing. Returns
+    * the table's current version. */
   def loadNewKeys(wh: Warehouse, table: String, rows: DataFrame): Long = {
     val hk = s"${table}_hash_key"
     wh.append(RawVault, table,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.maintenance.Maintenance
 
-/** Versioned-warehouse semantics: overwrite/append/merge/update/delete,
+/** Versioned-warehouse semantics: overwrite/append/merge,
   * metadata log, catalog listing, compaction, orphan sweep. */
 class WarehouseSpec extends SparkSpec {
   import spark.implicits._
@@ -48,17 +48,6 @@ class WarehouseSpec extends SparkSpec {
     val once = wh.read("s", "t").as[(Int, String)].collect().toSet
     wh.merge("s", "t", src, Seq("id"))
     assert(wh.read("s", "t").as[(Int, String)].collect().toSet === once)
-  }
-
-  test("update and delete rewrite only keyed rows") {
-    val wh = freshWh()
-    wh.overwrite("s", "t", Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
-    wh.update("s", "t", Seq(Tuple1(2)).toDF("id"), Seq("id"), Map("v" -> lit("U")))
-    assert(wh.read("s", "t").as[(Int, String)].collect().toSet ===
-      Set((1, "a"), (2, "U"), (3, "c")))
-    wh.delete("s", "t", Seq(Tuple1(1)).toDF("id"), Seq("id"))
-    assert(wh.read("s", "t").as[(Int, String)].collect().toSet ===
-      Set((2, "U"), (3, "c")))
   }
 
   test("metadata log records one entry per commit; listTables sees the table") {
@@ -166,31 +155,5 @@ class WarehouseSpec extends SparkSpec {
     val plan = wh.read("s", "t").filter(col("etl_date") === "2024-01-01")
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("etl_date"))
-  }
-
-  test("published bucketed marts join with zero exchanges") {
-    import spark.implicits._
-    val wh = freshWh()
-    // clear any leftover managed locations from a crashed prior run
-    val whDir = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:"), "graft_mart.db")
-    if (whDir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(whDir)
-    wh.overwrite("mart", "orders",
-      (1 to 500).map(i => (i.toLong, s"o$i")).toDF("k", "ov"))
-    wh.overwrite("mart", "lineitem",
-      (1 to 1500).map(i => ((i % 500 + 1).toLong, s"l$i")).toDF("k", "lv"))
-    val mo = wh.publishBucketedMart("mart", "orders", Seq("k"), 8)
-    val ml = wh.publishBucketedMart("mart", "lineitem", Seq("k"), 8)
-    // mart content equals the versioned table
-    assert(spark.table(mo).count() === 500)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table(mo).join(spark.table(ml), "k")
-      assert(joined.count() === 1500)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed mart join must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

@@ -61,11 +61,14 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("mergeAsRewrite upserts: update matched, insert new, keep unmatched") {
-    val target = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    val source = Seq((2, "B"), (3, "C")).toDF("k", "v")
+    val target = Seq((Option(1), "a"), (Option(2), "b"), (None, "n")).toDF("k", "v")
+    val source = Seq((Option(2), "B"), (Option(3), "C"), (None, "N")).toDF("k", "v")
     val got = Relational.mergeAsRewrite(target, source, Seq("k"))
-      .collect().map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(got == Set((1, "a"), (2, "B"), (3, "C")))
+      .as[(Option[Int], String)].collect()
+    // keys match null-safely: the NULL-keyed source row replaces the
+    // NULL-keyed target row instead of landing beside it
+    assert(got.length == 4)
+    assert(got.toSet == Set((Some(1), "a"), (Some(2), "B"), (Some(3), "C"), (None, "N")))
   }
 
   test("mergeAsRewrite: a matched source NULL nulls out the target value") {

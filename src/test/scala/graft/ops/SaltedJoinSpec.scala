@@ -19,42 +19,6 @@ class SaltedJoinSpec extends SparkSpec {
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
   }
 
-  test("adaptiveSaltedJoin derives salts from the measured report and spreads the hot key") {
-    // 95% of probe rows share key 1 — the report must flag it hot and the
-    // derived factor must spread those rows over multiple tasks while cold
-    // keys join plain; the result stays row-identical to the plain join
-    val probe = ((1 to 1900).map(i => (1, s"hot_$i")) ++
-      (1 to 100).map(i => (i % 7 + 2, s"cold_$i"))).toDF("k", "tag")
-    val build = (1 to 9).map(i => (i, s"v$i")).toDF("k", "v")
-    val report = graft.ext.Profiler.skewReport(probe, "k", topK = 5)
-    // measured: key 1 holds 9500 e4 of rows → hot; derived salts ≥ 2
-    val salts = Relational.deriveSalts(report, targetShareE4 = 2500L)
-    assert(salts >= 2 && salts <= 256, s"derived salts=$salts")
-    val adaptive = Relational.adaptiveSaltedJoin(probe, build, "k", report,
-      targetShareE4 = 2500L)
-    val plain = probe.join(build, Seq("k"))
-    assert(adaptive.exceptAll(plain).isEmpty && plain.exceptAll(adaptive).isEmpty)
-    // the unsalted plan lands every hot-key row in ONE shuffle partition;
-    // the report-driven plan spreads them across >1 — the actual win
-    val hotSpreadAdaptive = Relational.saltedJoin(
-      probe.filter(col("k") === 1), build.filter(col("k") === 1), Seq("k"), salts)
-      .select(spark_partition_id()).distinct().count()
-    val hotSpreadPlain = probe.filter(col("k") === 1)
-      .repartition(col("k")) // what a hash join does to the probe side
-      .select(spark_partition_id()).distinct().count()
-    assert(hotSpreadPlain === 1L)
-    assert(hotSpreadAdaptive > 1L,
-      s"salted hot key landed in $hotSpreadAdaptive partitions")
-    // a report with no hot keys degrades to the plain join (no salting tax)
-    val uniform = (1 to 900).map(i => (i % 9 + 1, s"u$i")).toDF("k", "tag")
-    val coolReport = graft.ext.Profiler.skewReport(uniform, "k", topK = 3,
-      hotShareE4 = 5000L)
-    assert(Relational.deriveSalts(coolReport) === 0)
-    val cool = Relational.adaptiveSaltedJoin(uniform, build, "k", coolReport)
-    val coolPlain = uniform.join(build, Seq("k"))
-    assert(cool.exceptAll(coolPlain).isEmpty && coolPlain.exceptAll(cool).isEmpty)
-  }
-
   test("partitioned warehouse write prunes partitions on read") {
     import java.nio.file.Files
     val wh = new graft.core.Warehouse(spark, Files.createTempDirectory("graft_part_").toString)

@@ -96,14 +96,6 @@ class HousekeepingSpec extends SparkSpec {
     assert(e.getMessage.contains("collide"))
   }
 
-  test("duplicate mart specs abort instead of duplicating workflow task ids") {
-    val wh = whWithTables()
-    val m = Housekeeping.MartSpec("s", "a", Seq("id"), 4)
-    val e = intercept[IllegalArgumentException](
-      Housekeeping.runMartRefresh(wh, Seq(m, m)))
-    assert(e.getMessage.contains("collide"))
-  }
-
   test("orphan sweep workflow removes stale dirs after compaction") {
     val wh = whWithTables()
     Housekeeping.runCompaction(spark, wh)
@@ -413,29 +405,5 @@ class HousekeepingSpec extends SparkSpec {
     assert(rows.length === 3)
     assert(rows.exists(_.contains("<td>src_a</td>")))
     assert(rows.exists(_.contains("<td>TOTAL</td>")))
-  }
-
-  test("mart refresh publishes a bucketed mart per spec and rolls up") {
-    val wh = whWithTables()
-    // drop catalog entries AND stale directories — a previous JVM's run
-    // leaves managed-table dirs the fresh in-memory catalog doesn't know,
-    // and saveAsTable refuses to create over an existing location
-    val whDir = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "graft_mart.db")
-    Seq("s_a", "s_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_mart.$t")
-      val d = new java.io.File(whDir, t)
-      if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
-    val r = Housekeeping.runMartRefresh(wh, Seq(
-      Housekeeping.MartSpec("s", "a", Seq("id"), 4),
-      Housekeeping.MartSpec("s", "b", Seq("id"), 4)))
-    r.assertAllSuccess()
-    assert(spark.table("graft_mart.s_a").count() === 3)
-    assert(spark.table("graft_mart.s_b").count() === 1)
-    // the published mart is genuinely bucketed (catalog metadata, not luck)
-    val desc = spark.sql("DESCRIBE EXTENDED graft_mart.s_a").collect()
-      .map(_.mkString("|")).mkString("\n")
-    assert(desc.contains("Num Buckets") && desc.contains("4"), desc)
   }
 }

@@ -74,6 +74,20 @@ class VaultSpec extends SparkSpec {
     assert(link.columns.toSeq.contains("hub_a_hash_key"))
   }
 
+  test("loadNewKeys with no new key commits nothing") {
+    val wh = new graft.core.Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft_vault_").toString)
+    val hub = Vault.hub(Seq(Tuple1(1L)).toDF("a_key"), "a", Seq("a_key"),
+      lit("2024-01-01"), "test")
+    assert(Vault.loadNewKeys(wh, "hub_a", hub) === 1L)
+    assert(Vault.loadNewKeys(wh, "hub_a", hub) === 1L)
+    assert(wh.currentVersion("raw_vault", "hub_a") === 1L)
+    assert(wh.dataDirs("raw_vault", "hub_a").size === 1)
+    // the empty second write leaves no data dir behind either
+    assert(new java.io.File(wh.tableDir("raw_vault", "hub_a"), "data").list().length === 1)
+    assert(wh.read("raw_vault", "hub_a").count() === 1L)
+  }
+
   test("schema drift emits I for added, D for removed, D+I for type change") {
     val old = StructType(Seq(
       StructField("id", LongType), StructField("name", StringType),
