@@ -36,7 +36,7 @@ import graft.core.Warehouse
   */
 object AnnIndex {
 
-  private[graft] def centroidsTable(name: String) = s"${name}_centroids"
+  private def centroidsTable(name: String) = s"${name}_centroids"
   private def listsTable(name: String) = s"${name}_lists"
 
   /** Create (or replace) the index: store the centroid table and the
@@ -94,214 +94,6 @@ object AnnIndex {
       excludeSelf)
   }
 
-  /** Measured recall@k of the STORED index against the exact cosine
-    * ranking over `corpus` (the index's source-of-truth table): a
-    * deterministic id-hash sample of ~`nQueries` corpus vectors queries
-    * both sides, recall = |stored top-k ∩ exact top-k| / (|Q|·k). The
-    * number that decides whether the frozen centroids still fit the data
-    * — [[Similarity.centroidDrift]] and [[stats]] explain WHY recall
-    * moved; this is the signal itself, measured on the live store.
-    *
-    * Cost shape: the exact side is one corpus scan against the broadcast
-    * query sample (|Q|·n scores — |Q| is the budget knob); the stored
-    * side is the partition-pruned [[topK]]. Returns (recall_e4,
-    * n_queries). */
-  def storedRecall(wh: Warehouse, schema: String, name: String, corpus: DataFrame,
-                   k: Int, probes: Int = 2, nQueries: Int = 100,
-                   idCol: String = "vec_id", embCol: String = "embedding"): (Long, Long) =
-    measuredRecall(corpus, k, nQueries, idCol, embCol,
-      qs => topK(wh, schema, name, qs, k, probes, idCol, embCol))
-
-  /** One row of ANN-maintenance evidence: what the gate measured and what
-    * it did. Persisted by [[graft.pipeline.Housekeeping.runAnnMaintenance]]
-    * so rebuild decisions are auditable after the fact. */
-  final case class RecallGateReport(
-      schema: String, name: String, nQueries: Long,
-      recallBeforeE4: Long, minRecallE4: Long, rebuilt: Boolean,
-      recallAfterE4: Long, nListsAfter: Long,
-      centroidsVersionBefore: Long, centroidsVersionAfter: Long)
-
-  /** The closed ANN lifecycle loop: measure the stored index's recall@k
-    * against the exact ranking, and if it has drifted below
-    * `minRecallE4`, RE-LEARN the coarse quantizer from the current corpus
-    * (deterministic k-means, nLists = ⌈n / targetListSize⌉ — the
-    * [[Similarity.knnDensityAuto]] scale rule, so list sizes stay bounded
-    * as the corpus grows) and swap the rebuilt index in atomically via
-    * the Warehouse version pointer ([[build]]'s overwrite bumps
-    * `_current`; readers of the old version are undisturbed, `readAt`
-    * still serves it). A healthy index is measured and left alone — the
-    * no-drift run costs one recall probe, no writes.
-    *
-    * This is the piece the monitors feed: appends under the
-    * append-equals-rebuild invariant never corrupt the index, they only
-    * let the data walk away from the frozen centroids; recall is the
-    * one signal that says WHEN re-freezing pays. */
-  def recallGate(wh: Warehouse, schema: String, name: String, corpus: DataFrame,
-                 k: Int, probes: Int = 2, minRecallE4: Long = 9000L,
-                 targetListSize: Long = 10000L, kmeansIters: Int = 5,
-                 nQueries: Int = 100, idCol: String = "vec_id",
-                 embCol: String = "embedding"): RecallGateReport = {
-    require(minRecallE4 >= 0 && minRecallE4 <= 10000, "minRecallE4 in [0, 10000]")
-    require(targetListSize > 0, "targetListSize must be positive")
-    val vBefore = wh.currentVersion(schema, centroidsTable(name))
-    val (before, nq) = storedRecall(wh, schema, name, corpus, k, probes, nQueries,
-      idCol, embCol)
-    if (before >= minRecallE4)
-      return RecallGateReport(schema, name, nq, before, minRecallE4,
-        rebuilt = false, recallAfterE4 = before,
-        nListsAfter = wh.read(schema, centroidsTable(name)).count(),
-        centroidsVersionBefore = vBefore, centroidsVersionAfter = vBefore)
-    val n = corpus.count()
-    val listsLong = math.max(1L, (n + targetListSize - 1) / targetListSize)
-    require(listsLong <= Int.MaxValue,
-      s"recallGate: derived nLists=$listsLong exceeds Int.MaxValue — raise targetListSize")
-    val cents = Similarity.kmeansCentroids(corpus, listsLong.toInt, kmeansIters,
-      idCol, embCol)
-    build(wh, schema, name, corpus, cents, idCol, embCol)
-    val (after, _) = storedRecall(wh, schema, name, corpus, k, probes, nQueries,
-      idCol, embCol)
-    RecallGateReport(schema, name, nq, before, minRecallE4, rebuilt = true,
-      recallAfterE4 = after, nListsAfter = listsLong,
-      centroidsVersionBefore = vBefore,
-      centroidsVersionAfter = wh.currentVersion(schema, centroidsTable(name)))
-  }
-
-  /** [[storedRecall]] for the composed IVF-PQ store: the stored side is
-    * [[topKIvfPq]] (partition-pruned ADC), the exact side the same
-    * brute-force cosine — so the number folds BOTH loss sources a served
-    * IVFADC query pays (coarse-list misses AND code-quantization
-    * distortion) into one serving-recall figure. */
-  def storedRecallIvfPq(wh: Warehouse, schema: String, name: String,
-                        corpus: DataFrame, k: Int, probes: Int = 2,
-                        m: Int = 4, dim: Int = 64, nQueries: Int = 100,
-                        idCol: String = "vec_id",
-                        embCol: String = "embedding"): (Long, Long) =
-    measuredRecall(corpus, k, nQueries, idCol, embCol,
-      qs => topKIvfPq(wh, schema, name, qs, k, probes, m, dim, idCol, embCol))
-
-  /** [[recallGate]] for the composed IVF-PQ store: below-threshold recall
-    * re-learns BOTH frozen models from the current corpus — the coarse
-    * quantizer (k-means at nLists = ⌈n / targetListSize⌉) and the m
-    * per-subspace codebooks — and swaps via [[buildIvfPq]]'s versioned
-    * overwrites. Appends can drift a composed store two ways (data walks
-    * away from the coarse lists, or from the codebook cells); the gate
-    * doesn't need to know which: measured serving recall is the one
-    * signal, and the rebuild re-freezes both. */
-  def recallGateIvfPq(wh: Warehouse, schema: String, name: String,
-                      corpus: DataFrame, k: Int, probes: Int = 2,
-                      m: Int = 4, dim: Int = 64, pqK: Int = 8,
-                      minRecallE4: Long = 9000L, targetListSize: Long = 10000L,
-                      kmeansIters: Int = 5, pqIters: Int = 2,
-                      nQueries: Int = 100, idCol: String = "vec_id",
-                      embCol: String = "embedding"): RecallGateReport = {
-    require(minRecallE4 >= 0 && minRecallE4 <= 10000, "minRecallE4 in [0, 10000]")
-    require(targetListSize > 0, "targetListSize must be positive")
-    val vBefore = wh.currentVersion(schema, centroidsTable(name))
-    val (before, nq) = storedRecallIvfPq(wh, schema, name, corpus, k, probes,
-      m, dim, nQueries, idCol, embCol)
-    if (before >= minRecallE4)
-      return RecallGateReport(schema, name, nq, before, minRecallE4,
-        rebuilt = false, recallAfterE4 = before,
-        nListsAfter = wh.read(schema, centroidsTable(name)).count(),
-        centroidsVersionBefore = vBefore, centroidsVersionAfter = vBefore)
-    val n = corpus.count()
-    val listsLong = math.max(1L, (n + targetListSize - 1) / targetListSize)
-    require(listsLong <= Int.MaxValue,
-      s"recallGateIvfPq: derived nLists=$listsLong exceeds Int.MaxValue — raise targetListSize")
-    val coarse = Similarity.kmeansCentroids(corpus, listsLong.toInt, kmeansIters,
-      idCol, embCol)
-    val books = Similarity.pqCodebooks(corpus, m, pqK, dim, pqIters, idCol, embCol)
-    buildIvfPq(wh, schema, name, corpus, coarse, books, m, dim, idCol, embCol)
-    val (after, _) = storedRecallIvfPq(wh, schema, name, corpus, k, probes,
-      m, dim, nQueries, idCol, embCol)
-    RecallGateReport(schema, name, nq, before, minRecallE4, rebuilt = true,
-      recallAfterE4 = after, nListsAfter = listsLong,
-      centroidsVersionBefore = vBefore,
-      centroidsVersionAfter = wh.currentVersion(schema, centroidsTable(name)))
-  }
-
-  /** [[storedRecall]] for the composed IVF+SQ8 store — the served
-    * recall through [[topKSq8]] (pruned lists of byte codes,
-    * reconstruct-and-score), folding coarse-list misses and scalar-
-    * quantization distortion into one figure. */
-  def storedRecallSq8(wh: Warehouse, schema: String, name: String,
-                      corpus: DataFrame, k: Int, probes: Int = 2,
-                      nQueries: Int = 100, idCol: String = "vec_id",
-                      embCol: String = "embedding"): (Long, Long) =
-    measuredRecall(corpus, k, nQueries, idCol, embCol,
-      qs => topKSq8(wh, schema, name, qs, k, probes, idCol, embCol))
-
-  /** [[recallGate]] for the IVF+SQ8 store: its frozen model is the
-    * (centroids, per-dim bounds) PAIR — appended data can walk away from
-    * either (new regions miss the lists; values outside the frozen
-    * bounds clamp and score wrong) — so a below-threshold rebuild
-    * re-learns both from the current corpus and swaps via
-    * [[buildSq8]]'s versioned overwrites. With this, every store kind
-    * that freezes model state has a closed lifecycle loop: IVF
-    * (centroids), IVF-PQ (centroids + codebooks), IVF-SQ8 (centroids +
-    * bounds); the sign-word store has no frozen state to drift. */
-  def recallGateSq8(wh: Warehouse, schema: String, name: String,
-                    corpus: DataFrame, k: Int, probes: Int = 2,
-                    minRecallE4: Long = 9000L, targetListSize: Long = 10000L,
-                    kmeansIters: Int = 5, nQueries: Int = 100,
-                    idCol: String = "vec_id",
-                    embCol: String = "embedding"): RecallGateReport = {
-    require(minRecallE4 >= 0 && minRecallE4 <= 10000, "minRecallE4 in [0, 10000]")
-    require(targetListSize > 0, "targetListSize must be positive")
-    val vBefore = wh.currentVersion(schema, centroidsTable(name))
-    val (before, nq) = storedRecallSq8(wh, schema, name, corpus, k, probes,
-      nQueries, idCol, embCol)
-    if (before >= minRecallE4)
-      return RecallGateReport(schema, name, nq, before, minRecallE4,
-        rebuilt = false, recallAfterE4 = before,
-        nListsAfter = wh.read(schema, centroidsTable(name)).count(),
-        centroidsVersionBefore = vBefore, centroidsVersionAfter = vBefore)
-    val n = corpus.count()
-    val listsLong = math.max(1L, (n + targetListSize - 1) / targetListSize)
-    require(listsLong <= Int.MaxValue,
-      s"recallGateSq8: derived nLists=$listsLong exceeds Int.MaxValue — raise targetListSize")
-    val cents = Similarity.kmeansCentroids(corpus, listsLong.toInt, kmeansIters,
-      idCol, embCol)
-    buildSq8(wh, schema, name, corpus, cents, Similarity.sq8Bounds(corpus, embCol),
-      idCol, embCol)
-    val (after, _) = storedRecallSq8(wh, schema, name, corpus, k, probes,
-      nQueries, idCol, embCol)
-    RecallGateReport(schema, name, nq, before, minRecallE4, rebuilt = true,
-      recallAfterE4 = after, nListsAfter = listsLong,
-      centroidsVersionBefore = vBefore,
-      centroidsVersionAfter = wh.currentVersion(schema, centroidsTable(name)))
-  }
-
-  /** Shared recall measurement: deterministic id-hash query sample, exact
-    * side one brute-force corpus scan, approx side supplied by the store
-    * kind. Returns (recall_e4, n_queries). */
-  private def measuredRecall(corpus: DataFrame, k: Int, nQueries: Int,
-                             idCol: String, embCol: String,
-                             serve: DataFrame => DataFrame): (Long, Long) = {
-    require(k >= 1, "k must be >= 1")
-    require(nQueries >= 1, "nQueries must be >= 1")
-    val n = corpus.count()
-    val stride = math.max(1L, n / nQueries)
-    val queries = corpus
-      .filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0)
-      .select(col(idCol), col(embCol))
-    val nq = queries.count()
-    if (nq == 0) return (10000L, 0L) // empty store: nothing can be missed
-    val exact = Similarity.bruteForceTopK(queries, corpus, k, idCol, embCol)
-      .select(col("q_id"), col("neighbor_id"))
-      .persist()
-    // denominator = the exact side's ACTUAL row count, not nq*k: a corpus
-    // with n <= k vectors yields fewer than k true neighbors per query,
-    // and dividing by the unattainable nq*k would make a perfect index
-    // fail the gate (and rebuild) forever
-    val attainable = exact.count()
-    if (attainable == 0) { exact.unpersist(); return (10000L, nq) }
-    val approx = serve(queries).select(col("q_id"), col("neighbor_id"))
-    val hits = approx.join(exact, Seq("q_id", "neighbor_id"), "left_semi").count()
-    exact.unpersist()
-    (hits * 10000L / attainable, nq)
-  }
-
   /** Inverted-list occupancy report from the STORED index — the
     * maintenance monitor a serving deployment runs after appends: list
     * sizes, share of the corpus, and skew vs the uniform ideal
@@ -336,15 +128,6 @@ object AnnIndex {
 
   private def codebooksTable(name: String) = s"${name}_codebooks"
   private def codesTable(name: String) = s"${name}_codes"
-
-  /** The store's FROZEN per-subspace codebooks (sub, label, ce) — the
-    * model the distortion pre-gate audits arriving data against
-    * ([[graft.pipeline.Housekeeping.runAnnMaintenance]]): distortion
-    * measured vs the frozen books moves when appends walk away from the
-    * codebook cells, which is exactly the drift the recall gate would
-    * eventually pay an exact side to notice. */
-  def storedCodebooks(wh: Warehouse, schema: String, name: String): DataFrame =
-    wh.read(schema, codebooksTable(name))
 
   /** Store the PQ codebooks and the one-time code assignment of `corpus`.
     * `codebooks` from `Similarity.pqCodebooks` — (sub, label, ce). */

@@ -9,26 +9,11 @@ import org.apache.spark.sql.functions._
   * group. (The reference's dedup surface stops at pairs; any production
   * corpus pipeline needs the component step to actually drop rows.)
   *
-  * Algorithm: iterative min-label propagation. Every node starts labeled
-  * with its own id; each round every node takes the minimum of its label
-  * and its neighbors' labels; converged when a full round changes nothing.
-  * Rounds needed = graph diameter — near-dup clusters are dense and
-  * shallow (a cluster is usually one document plus its variants), so this
-  * terminates in 2-4 rounds in practice; `maxIters` bounds pathological
-  * chains.
-  *
-  * Scale notes (the 100 TB contract):
-  *   - each round is ONE shuffle: edges join labels on src (broadcast-or-
-  *     SMJ picked by AQE from actual sizes), then a groupBy(dst) min.
-  *     Nothing ever funnels through the driver; per-round state is the
-  *     (id, label) frame, linear in |V|.
-  *   - `localCheckpoint(eager)` after each round cuts the lineage so round
-  *     N+1 rescans a materialized frame instead of re-deriving N rounds.
-  *   - convergence test is a `limit(1).count()` on the changed-rows frame —
-  *     an early-exit existence probe, not a full count.
-  *   - the label invariant (label ≤ id, monotonically non-increasing)
-  *     means propagating only labels smaller than the receiving node is
-  *     sound; the oracle's recursive CTE uses the same prune.
+  * Algorithm: a driver-side union-find when the edge set fits
+  * [[Clusters.DriverEdgeCap]] (every registry query's graph does), else
+  * large-star/small-star contraction ([[Clusters.starComponents]]), which
+  * reaches its fixed point in at most 2·log₂ n + 4 rounds whatever the
+  * graph's diameter.
   */
 object Clusters {
 
@@ -37,22 +22,20 @@ object Clusters {
     * class as the Bloom bitmap and BPE merge tables. Below it, an
     * iterative distributed algorithm pays 10+ scheduler round-trips to
     * cluster a registry-scale graph a single core resolves in
-    * milliseconds; above it, the distributed paths take over untouched. */
+    * milliseconds; above it, the distributed path takes over untouched. */
   val DriverEdgeCap: Int = 1 << 20
 
   /** (id, cluster) for every node that appears in `edges`; cluster = the
     * minimum node id reachable in the undirected graph.
     *
-    * Three paths, tried in order: a capped driver-side union-find when the
+    * Two paths, tried in order: a capped driver-side union-find when the
     * (probed) edge set fits `driverEdgeCap` — near-dup graphs AFTER
     * banding+verify are usually registry-scale even when the corpus is
-    * not — then min-label propagation (O(diameter) rounds, the right tool
-    * for shallow near-dup clusters), then large-star/small-star (O(log n)
-    * rounds for ANY graph, incl. pathological chains) when the diameter
-    * exceeds `maxIters`. Every path computes the identical
+    * not — then large-star/small-star (O(log n) rounds for ANY graph,
+    * incl. pathological chains). Both compute the identical
     * (id, min-reachable-id) result; which one ran is invisible to callers. */
   def connectedComponents(edges: DataFrame, aCol: String = "a_id",
-                          bCol: String = "b_id", maxIters: Int = 20,
+                          bCol: String = "b_id",
                           driverEdgeCap: Int = DriverEdgeCap): DataFrame =
     // probe on the RAW frame first: the limit(cap+1) collect early-exits
     // as soon as cap+1 rows exist, and when the driver path wins (the
@@ -66,19 +49,18 @@ object Clusters {
     // df.checkpoint — same plan shape, durable blocks.)
     driverComponents(edges.select(col(aCol), col(bCol)), aCol, bCol,
         driverEdgeCap).getOrElse {
-      val e = edges.select(col(aCol), col(bCol)).localCheckpoint(true)
-      labelComponents(e, aCol, bCol, maxIters)
-        .getOrElse(starComponents(e, aCol, bCol))
+      starComponents(edges.select(col(aCol), col(bCol)).localCheckpoint(true),
+        aCol, bCol)
     }
 
   /** Union-find on the driver for integral-id graphs under `DriverEdgeCap`
     * edges; None when ids aren't integral, any edge id is NULL (the
-    * distributed paths' null semantics apply, whatever they are — this
+    * distributed path's null semantics apply, whatever they are — this
     * path must not invent its own), or the cap probe overflows (the probe
     * is a limit(cap+1) collect straight off the caller's edge lineage —
     * an early-exit scan, never a full count of a huge graph). Cluster = min
     * reachable id, and the output id/cluster columns carry the SAME type
-    * the distributed paths would produce, so which path ran stays
+    * the distributed path would produce, so which path ran stays
     * invisible to schema-sensitive consumers. */
   private def driverComponents(edges: DataFrame, aCol: String,
                                bCol: String, cap: Int): Option[DataFrame] = {
@@ -86,7 +68,7 @@ object Clusters {
     if (cap <= 0) return None
     val inTypes = Seq(aCol, bCol).map(edges.schema(_).dataType)
     if (!inTypes.forall(t => t == LongType || t == IntegerType)) return None
-    // the distributed paths union both id columns → Spark's common type
+    // the distributed path unions both id columns → Spark's common type
     val outType = if (inTypes.contains(LongType)) LongType else IntegerType
     val probe = edges
       .select(col(aCol).cast("long"), col(bCol).cast("long"))
@@ -115,45 +97,15 @@ object Clusters {
       .select(col("id").cast(outType), col("cluster").cast(outType)))
   }
 
-  /** Min-label propagation; None when `maxIters` rounds did not converge. */
-  private[graft] def labelComponents(edges: DataFrame, aCol: String, bCol: String,
-                              maxIters: Int): Option[DataFrame] = {
-    // symmetric closure: propagate along both directions of each pair
-    val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .localCheckpoint(true) // scanned every round — materialize once
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("lab", col("id")).localCheckpoint(true)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      // min neighbor label arriving at each node, one shuffle; the changed
-      // flag rides the same row so the convergence probe is a local filter
-      // over the checkpointed frame, not another join
-      val inbound = sym.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min(col("lab")).as("nlab"))
-      val updated = labels.join(inbound, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("newlab"),
-          (coalesce(col("nlab"), col("lab")) < col("lab")).as("__changed"))
-        .localCheckpoint(true)
-      converged = updated.filter(col("__changed")).limit(1).count() == 0L
-      labels = updated.select(col("id"), col("newlab").as("lab"))
-      it += 1
-    }
-    if (converged) Some(labels.select(col("id"), col("lab").as("cluster")))
-    else None
-  }
-
   /** Large-star/small-star components (Kiveris et al., "Connected
     * Components in MapReduce and Beyond"): edges contract onto component
     * minima in O(log n) alternating rounds REGARDLESS of diameter — a
-    * 10k-node path needs ~2·log₂ n rounds where label propagation needs
-    * 10k. Each round is two grouped aggregations + joins on uniform node
-    * keys (no driver data path); per-round state is the O(|E|) oriented
-    * edge frame, lineage-cut per round. Convergence = the oriented edge
-    * set reaching a fixed point (then it IS the star forest: every node
-    * points at its component minimum). */
+    * 10k-node path needs ~2·log₂ n rounds where min-label propagation
+    * would need 10k. Each round is two grouped aggregations + joins on
+    * uniform node keys (no driver data path); per-round state is the
+    * O(|E|) oriented edge frame, lineage-cut per round. Convergence = the
+    * oriented edge set reaching a fixed point (then it IS the star
+    * forest: every node points at its component minimum). */
   private[graft] def starComponents(edges: DataFrame, aCol: String,
                                         bCol: String): DataFrame = {
     val nodes = edges.select(col(aCol).as("id"))

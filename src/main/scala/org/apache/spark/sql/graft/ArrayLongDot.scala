@@ -23,6 +23,13 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * custom-operator preference order (expression > custom plan node >
   * mapPartitions). Lives in the spark.sql namespace for access to the
   * `private[sql]` expression-to-Column bridge.
+  *
+  * Measured against `aggregate(zip_with(a, b, _*_), 0, _+_)` (4
+  * cores, 15 GB RAM, `local[4]`, sf0.1 fixture, noop sink; one warm rep,
+  * then 9 reps alternating with the built-in, medians, equal outputs; two
+  * passes):
+  * 10.31× / 8.69× on 128k dots of 64-dim quantized vectors (2,000 corpus
+  * vectors × 64 broadcast queries).
   */
 case class ArrayLongDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -22,6 +22,13 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * The HOF spelling — aggregate(transform(slice(...)), ...) — interprets
   * two lambdas per element per row (HOFs don't codegen; PLANS.md); this is
   * a tight codegen'd loop like its siblings ArrayLongDot/MinHashSigs.
+  *
+  * Measured against 32 unrolled `when(get(qe, i) > 0, 1L << j)` terms OR-ed
+  * together (4 cores, 15 GB RAM, `local[4]`, sf0.1 fixture, noop sink; one
+  * warm rep, then 9 reps alternating with the built-in, medians, equal
+  * outputs; two passes): 2.82× / 2.88× on the two-word projection of 2,000
+  * vectors, 3.01× / 2.56× on q124's whole Hamming top-k (10 queries over
+  * those 2,000 vectors).
   */
 case class SignBitsWord(child: Expression, from: Int, count: Int)
     extends UnaryExpression with ExpectsInputTypes {

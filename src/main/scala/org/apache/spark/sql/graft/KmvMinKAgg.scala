@@ -33,6 +33,14 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   *
   * Custom-operator preference order case (b): an aggregate the built-ins
   * can't express without ranking the whole key set.
+  *
+  * Measured against `distinct` + `row_number() <= k` per group (4
+  * cores, 15 GB RAM, `local[4]`, sf0.1 fixture, noop sink; one warm rep,
+  * then 9 reps alternating with the built-in, medians, equal outputs; two
+  * passes):
+  * 1.15× / 1.24× on 100k events (5 groups, k = 256; this aggregate was
+  * faster in 9 of 9 pairs in each pass). It is also the only formulation
+  * `StreamingSketch` can keep as streaming state.
   */
 case class KmvMinKAgg(child: Expression, k: Int,
                       override val mutableAggBufferOffset: Int = 0,

@@ -26,6 +26,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * Per the custom-operator preference order this is case (b): an aggregate
   * function the built-ins can only express via a row-explosion. Buffer is
   * d²·8 bytes (32 KB at d=64) per partial — executor-memory noise.
+  *
+  * Measured against a double `posexplode` + `groupBy(i, j)` sum (4 cores,
+  * 15 GB RAM, `local[4]`, sf0.1 fixture, noop sink; one warm rep, then 9
+  * reps alternating with the built-in, medians, equal outputs; two passes):
+  * 4.34× / 4.19× over 2,000 quantized 64-dim vectors.
   */
 case class LongOuterSumAgg(child: Expression,
                            override val mutableAggBufferOffset: Int = 0,

@@ -52,19 +52,18 @@ class ClustersSpec extends SparkSpec {
   }
 
   test("star components solve a 4096-node path within the 2·log2(n) bound") {
-    // diameter 4095 — label propagation would need 4095 rounds; the
+    // diameter 4095 — min-label propagation would need 4095 rounds; the
     // large-star/small-star path must finish inside its own hard bound of
     // 2·ceil(log2 n)+4 rounds (starComponents THROWS past it, so this
-    // passing IS the round-count proof), and auto must fall back to it
-    // instead of failing at maxIters
+    // passing IS the round-count proof)
     val n = 4096L
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val star = Clusters.starComponents(edges, "a_id", "b_id")
       .as[(Long, Long)].collect()
     assert(star.length === n && star.forall(_._2 == 0L))
-    // driverEdgeCap=0 forces the distributed path, so this still proves
-    // the label→star fallback (not the driver shortcut)
-    val auto = Clusters.connectedComponents(edges, maxIters = 5, driverEdgeCap = 0)
+    // driverEdgeCap=0 forces the distributed path, so auto must reach star
+    // (not the driver shortcut)
+    val auto = Clusters.connectedComponents(edges, driverEdgeCap = 0)
       .as[(Long, Long)].collect()
     assert(auto.length === n && auto.forall(_._2 == 0L))
   }
@@ -76,26 +75,14 @@ class ClustersSpec extends SparkSpec {
       .toDF("a_id", "b_id")
     val driver = Clusters.connectedComponents(edges) // auto, under the cap
       .as[(Long, Long)].collect().toMap
-    val lab = Clusters.labelComponents(edges, "a_id", "b_id", maxIters = 50).get
+    val star = Clusters.starComponents(edges, "a_id", "b_id")
       .as[(Long, Long)].collect().toMap
-    assert(driver === lab)
+    assert(driver === star)
     // an over-cap graph silently falls through to the distributed path
     // and computes the same components
     val overCap = Clusters.connectedComponents(edges, driverEdgeCap = 10)
       .as[(Long, Long)].collect().toMap
-    assert(overCap === lab)
-  }
-
-  test("star components agree with label propagation on a random graph") {
-    val rnd = new scala.util.Random(42)
-    val edges = Seq.fill(300)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
-      .filter { case (a, b) => a != b }
-      .toDF("a_id", "b_id")
-    val lab = Clusters.labelComponents(edges, "a_id", "b_id", maxIters = 50).get
-      .as[(Long, Long)].collect().toMap
-    val star = Clusters.starComponents(edges, "a_id", "b_id")
-      .as[(Long, Long)].collect().toMap
-    assert(star === lab)
+    assert(overCap === star)
   }
 
   test("auto path output schema is identical whichever path ran") {
