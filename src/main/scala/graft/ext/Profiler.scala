@@ -169,18 +169,16 @@ object Profiler {
 
   /** The TV core over an already-built histogram-pair frame
     * `(src, bk, na, nb)` — shared by [[distributionDrift]] (row-level
-    * snapshots), the versioned profile store (histograms persisted per
-    * snapshot, drift replayed WITHOUT re-scanning either corpus), and
-    * the streaming histogram's state snapshots. Missing buckets may
-    * appear as absent rows or zero counts — both are correct (an absent
-    * row contributes |0·N − m·N'| either way). */
+    * snapshots) and the versioned profile store (histograms persisted per
+    * snapshot, drift replayed WITHOUT re-scanning either corpus). Missing
+    * buckets may appear as absent rows or zero counts — both are correct
+    * (an absent row contributes |0·N − m·N'| either way). */
   private[graft] def driftFromCounts(counts: DataFrame,
                                      sliceName: String): DataFrame = {
     // slice totals via a window, not a counts⋈totals self-join — the
     // same ambiguous-self-reference hazard the side-tagged union dodges
-    // upstream (a memory-sink view as `counts` makes the join's attribute
-    // dedup fail outright), and the frame is slices×buckets rows, so one
-    // window shuffle on src is the natural plan anyway
+    // upstream, and the frame is slices×buckets rows, so one window
+    // shuffle on src is the natural plan anyway
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
     counts
       .withColumn("nta", sum(col("na")).over(w))

@@ -10,8 +10,8 @@ import graft.core.Warehouse
   * AirFlow-ETL's recurring jobs re-derive every input every run;
   * dags/elt_pipeline.py re-reads all sources — here the benchmark side is
   * derived once and replayed from storage, the pattern every other graft
-  * family already has: signatures → StreamingNearDup, fingerprints →
-  * StreamingWinnow, sketches → SketchStore).
+  * family already has: fingerprints → StreamingWinnow, sketches →
+  * SketchStore).
   *
   * Why the EVAL side is the stored side: benchmarks are MB-scale and
   * nearly frozen; the corpus is the 100 TB side and keeps arriving. So

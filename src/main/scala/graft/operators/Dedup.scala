@@ -429,128 +429,104 @@ object Dedup {
     * prior×prior pairs were found when the prior batches landed, so the
     * per-batch cost is O(new batch), not O(corpus).
     *
-    * Returns (verified pairs touching ≥1 new doc with a_id < b_id, the
-    * combined signature frame to persist for the next batch). */
+    * Returns the verified pairs touching ≥1 new doc, a_id < b_id, eagerly
+    * checkpointed: the caches this call makes, the batch's signatures
+    * included, are released before it returns or refuses. */
   def nearDupPairsIncremental(newDocs: DataFrame, idCol: String, textCol: String,
                               priorSig: DataFrame,
                               k: Int = 16, b: Int = 4, shingleN: Int = 5,
                               minJaccard: Double = 0.5,
                               verifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes,
-                              candidatePairBudget: Long = PairCensus.DefaultBudget):
-      (DataFrame, DataFrame) = {
+                              candidatePairBudget: Long = PairCensus.DefaultBudget): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val newSig = signatureFrame(newDocs, idCol, textCol, k, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the budget guards can refuse AFTER newSig is cached — release it on
-    // any failure exit (the success path deliberately keeps it: the caller
-    // persists `combined` without re-signing, then unpersists)
-    try nearDupPairsIncrementalFromSignatures(newSig, priorSig, idCol, k, b,
-      minJaccard, verifyBroadcastBytes, candidatePairBudget)
-    catch { case e: Throwable => newSig.unpersist(); throw e }
-  }
-
-  /** [[nearDupPairsIncremental]] from an ALREADY-SIGNED (and ideally
-    * caller-persisted) batch signature frame — the seam a streaming
-    * ingest uses so cache ownership stays with the caller: sign + persist
-    * the batch yourself, call this, write `combined`, unpersist. The
-    * text is never touched here. */
-  def nearDupPairsIncrementalFromSignatures(newSig: DataFrame, priorSig: DataFrame,
-                                            idCol: String,
-                                            k: Int = 16, b: Int = 4,
-                                            minJaccard: Double = 0.5,
-                                            verifyBroadcastBytes: Long = DefaultVerifyBroadcastBytes,
-                                            candidatePairBudget: Long = PairCensus.DefaultBudget):
-      (DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
-    // defensive re-sort: the verify intersect is a sorted two-pointer merge
-    // (signatureFrame sorts shs since round 4), but priorSig may have been
-    // PERSISTED by an older build whose shs was first-occurrence-ordered —
-    // unsorted input would silently undercount Jaccard and drop real
-    // cross-batch dups. array_sort on already-sorted arrays is cheap.
-    val priorSorted = priorSig.withColumn("shs", array_sort(col("shs")))
-    // the batch band frame is shuffled ONCE on the join key and cached —
-    // the new×new census, both new×new pair-join sides, AND the cross
-    // join's new side all read that one exchange's output (the
-    // candidatePairsWithGate shape). The prior side stays LAZY off the
-    // caller-persisted signature cache: for the uncapped-exact opt-in
-    // (budget ≤ 0) it is consumed exactly once (the cross join), so a
-    // second cache would only add materialization cost.
-    val newBands = bandRows(newSig, idCol, b, k / b)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    lazy val priorBandsCached = bandRows(priorSorted, idCol, b, k / b)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val guarded = candidatePairBudget > 0
-    val priorBands =
-      if (guarded) priorBandsCached
-      else lshBands(priorSorted, idCol, b, k / b)
-    def releaseBands(): Unit = {
-      newBands.unpersist()
-      if (guarded) priorBandsCached.unpersist()
-    }
-    // When guarded, ONE action folds the old three barriers (new×new
-    // census, cross census, verify size-gate stats): a full-outer join of
-    // the two bucket censuses yields both pair-budget guards AND the
-    // verify join-strategy gate. Gate UB: a new doc is in a candidate
-    // pair iff its bucket has ≥2 new members or ≥1 prior member; a prior
-    // doc iff its bucket has ≥1 new member. Unguarded callers keep the
-    // old stats-head gate inside jaccardFromSets (same action count).
-    val small: Option[Boolean] = if (guarded) {
-      val bn = newBands.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("nn"), sum(col("sz")).as("sszn"))
-      val bp = priorBands.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("np"), sum(col("sz")).as("sszp"))
-      val jb = bn.join(bp, Seq("band", "band_hash"), "full_outer")
-        .select(coalesce(col("nn"), lit(0L)).as("nn"),
-          coalesce(col("np"), lit(0L)).as("np"),
-          coalesce(col("sszn"), lit(0L)).as("sszn"),
-          coalesce(col("sszp"), lit(0L)).as("sszp"))
-      val census = PairCensus(jb, "nn",
-        col("nn") * col("np"),
-        when(col("nn") >= 2 || col("np") >= 1, col("sszn") * 8L + col("nn") * 48L)
-          .otherwise(lit(0L)) +
-          when(col("nn") >= 1, col("sszp") * 8L + col("np") * 48L).otherwise(lit(0L)))
-      census.enforce("lshCandidatePairs", candidatePairBudget,
-        () => releaseBands())(lshRefusal(candidatePairBudget))
-      val nCross = census.sums(0)
-      if (nCross > candidatePairBudget) {
-        releaseBands()
-        throw new PairBudgetExceeded("nearDupPairsIncremental", nCross,
-          candidatePairBudget, census.hottest,
-          s"$nCross new×prior band-bucket candidate " +
-            s"pairs exceed the budget $candidatePairBudget — a degenerate " +
-            "bucket in the stored corpus is colliding with the whole batch. " +
-            "Strip boilerplate (repeated-substring operators) before " +
-            "signing, or opt in to uncapped-exact with " +
-            "candidatePairBudget <= 0.")
+    try {
+      // defensive re-sort: the verify intersect is a sorted two-pointer merge
+      // (signatureFrame sorts shs since round 4), but priorSig may have been
+      // PERSISTED by an older build whose shs was first-occurrence-ordered —
+      // unsorted input would silently undercount Jaccard and drop real
+      // cross-batch dups. array_sort on already-sorted arrays is cheap.
+      val priorSorted = priorSig.withColumn("shs", array_sort(col("shs")))
+      // the batch band frame is shuffled ONCE on the join key and cached —
+      // the new×new census, both new×new pair-join sides, AND the cross
+      // join's new side all read that one exchange's output (the
+      // candidatePairsWithGate shape). The prior side stays LAZY off the
+      // caller-persisted signature cache: for the uncapped-exact opt-in
+      // (budget ≤ 0) it is consumed exactly once (the cross join), so a
+      // second cache would only add materialization cost.
+      val newBands = bandRows(newSig, idCol, b, k / b)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      lazy val priorBandsCached = bandRows(priorSorted, idCol, b, k / b)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val guarded = candidatePairBudget > 0
+      val priorBands =
+        if (guarded) priorBandsCached
+        else lshBands(priorSorted, idCol, b, k / b)
+      def releaseBands(): Unit = {
+        newBands.unpersist()
+        if (guarded) priorBandsCached.unpersist()
       }
-      Some(census.sums(1) <= verifyBroadcastBytes)
-    } else None
-    val newNew = pairJoin(newBands, idCol)
-    // new×prior collisions, normalized to the a_id < b_id convention
-    val cross = newBands.select(col("band"), col("band_hash"), col(idCol).as("n_id"))
-      .join(priorBands.select(col("band"), col("band_hash"), col(idCol).as("p_id")),
-        Seq("band", "band_hash"))
-      .select(least(col("n_id"), col("p_id")).as("a_id"),
-        greatest(col("n_id"), col("p_id")).as("b_id"))
-      .filter(col("a_id") =!= col("b_id"))
-      .distinct()
-    // persisted: the verify stage references the candidates both directly
-    // and via its id-scoping — without this the band joins recompute ~2×
-    val cands = newNew.unionByName(cross).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sets = priorSorted.select(col(idCol), col("shs"), col("sz"))
-      .unionByName(newSig.select(col(idCol), col("shs"), col("sz")))
-    val pairs = jaccardFromSets(sets, idCol, minJaccard, cands,
-      verifyBroadcastBytes, smallHint = small)
-      .localCheckpoint(true)
-    cands.unpersist()
-    releaseBands()
-    // newSig stays cached (when the caller persisted it) so writing
-    // `combined` to storage doesn't re-sign the batch; the caller
-    // unpersists after materializing it. The combined frame carries the
-    // SORTED prior, upgrading legacy signatures on their first
-    // post-upgrade batch.
-    (pairs, priorSorted.unionByName(newSig))
+      // When guarded, ONE action folds the old three barriers (new×new
+      // census, cross census, verify size-gate stats): a full-outer join of
+      // the two bucket censuses yields both pair-budget guards AND the
+      // verify join-strategy gate. Gate UB: a new doc is in a candidate
+      // pair iff its bucket has ≥2 new members or ≥1 prior member; a prior
+      // doc iff its bucket has ≥1 new member. Unguarded callers keep the
+      // old stats-head gate inside jaccardFromSets (same action count).
+      val small: Option[Boolean] = if (guarded) {
+        val bn = newBands.groupBy(col("band"), col("band_hash"))
+          .agg(count(lit(1)).as("nn"), sum(col("sz")).as("sszn"))
+        val bp = priorBands.groupBy(col("band"), col("band_hash"))
+          .agg(count(lit(1)).as("np"), sum(col("sz")).as("sszp"))
+        val jb = bn.join(bp, Seq("band", "band_hash"), "full_outer")
+          .select(coalesce(col("nn"), lit(0L)).as("nn"),
+            coalesce(col("np"), lit(0L)).as("np"),
+            coalesce(col("sszn"), lit(0L)).as("sszn"),
+            coalesce(col("sszp"), lit(0L)).as("sszp"))
+        val census = PairCensus(jb, "nn",
+          col("nn") * col("np"),
+          when(col("nn") >= 2 || col("np") >= 1, col("sszn") * 8L + col("nn") * 48L)
+            .otherwise(lit(0L)) +
+            when(col("nn") >= 1, col("sszp") * 8L + col("np") * 48L).otherwise(lit(0L)))
+        census.enforce("lshCandidatePairs", candidatePairBudget,
+          () => releaseBands())(lshRefusal(candidatePairBudget))
+        val nCross = census.sums(0)
+        if (nCross > candidatePairBudget) {
+          releaseBands()
+          throw new PairBudgetExceeded("nearDupPairsIncremental", nCross,
+            candidatePairBudget, census.hottest,
+            s"$nCross new×prior band-bucket candidate " +
+              s"pairs exceed the budget $candidatePairBudget — a degenerate " +
+              "bucket in the stored corpus is colliding with the whole batch. " +
+              "Strip boilerplate (repeated-substring operators) before " +
+              "signing, or opt in to uncapped-exact with " +
+              "candidatePairBudget <= 0.")
+        }
+        Some(census.sums(1) <= verifyBroadcastBytes)
+      } else None
+      val newNew = pairJoin(newBands, idCol)
+      // new×prior collisions, normalized to the a_id < b_id convention
+      val cross = newBands.select(col("band"), col("band_hash"), col(idCol).as("n_id"))
+        .join(priorBands.select(col("band"), col("band_hash"), col(idCol).as("p_id")),
+          Seq("band", "band_hash"))
+        .select(least(col("n_id"), col("p_id")).as("a_id"),
+          greatest(col("n_id"), col("p_id")).as("b_id"))
+        .filter(col("a_id") =!= col("b_id"))
+        .distinct()
+      // persisted: the verify stage references the candidates both directly
+      // and via its id-scoping — without this the band joins recompute ~2×
+      val cands = newNew.unionByName(cross).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val sets = priorSorted.select(col(idCol), col("shs"), col("sz"))
+        .unionByName(newSig.select(col(idCol), col("shs"), col("sz")))
+      val pairs = jaccardFromSets(sets, idCol, minJaccard, cands,
+        verifyBroadcastBytes, smallHint = small)
+        .localCheckpoint(true)
+      cands.unpersist()
+      releaseBands()
+      pairs
+    } finally newSig.unpersist()
   }
 
   /** Jaccard verify over per-doc hashed shingle sets and candidate pairs:

@@ -29,10 +29,9 @@ object ThetaSketch {
   /** Hash domain: stableHash60 ∈ [0, 2^60). */
   val HMax: Long = 1L << 60
 
-  /** Raw per-group KMV buffer: (group, hs ascending array ≤ k). The
-    * streaming surface (StreamingSketch.kmvSketchStream) maintains exactly
-    * this frame as its state; `withMeta` turns any snapshot of it into the
-    * estimator-ready sketch. */
+  /** Raw per-group KMV buffer: (group, hs ascending array ≤ k).
+    * [[SketchStore]] persists exactly this frame; `withMeta` turns any
+    * snapshot of it into the estimator-ready sketch. */
   def rawSketch(df: DataFrame, groupCol: String, valueCol: String,
                 k: Int, salt: String = "theta"): DataFrame =
     df.select(col(groupCol),

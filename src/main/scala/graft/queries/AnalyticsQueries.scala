@@ -251,12 +251,9 @@ object AnalyticsQueries {
         col("gid").cast("long").as("gid"), col("n_docs"), col("n_tokens"))
       .orderBy(col("gid"), col("lang_g"), col("source_g"))
 
-  /** q104: windowed heavy hitters, batch — top-3 `props.k` values per
-    * event-time hour (count desc, key asc). The EXACT counterpart of
-    * `streaming/StreamingTopK`'s Space-Saving summary: the streaming
-    * operator converges to this query when its capacity exceeds the
-    * window's distinct keys (StreamingTopKSpec pins the parity on this
-    * same fixture). Window starts as epoch-micros to match the stream. */
+  /** q104: windowed heavy hitters — top-3 `props.k` values per
+    * event-time hour (count desc, key asc), exact. Window starts are
+    * epoch-micros. */
   def q104WindowedTopK(spark: SparkSession, dir: String): DataFrame = {
     val hourUs = 3600000000L
     val counts = Tables(spark, dir, "events")

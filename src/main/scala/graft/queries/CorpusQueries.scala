@@ -175,7 +175,7 @@ object CorpusQueries {
       val priorLabels = Clusters.dedupClusters(
         Dedup.nearDupPairsFromSignatures(prior, "doc_id", minJaccard = 0.5,
           b = B, candidatePairBudget = 0L))
-      val (newPairs, _) = Dedup.nearDupPairsIncremental(
+      val newPairs = Dedup.nearDupPairsIncremental(
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", prior,
         k = K, b = B, shingleN = N, minJaccard = 0.5,
         candidatePairBudget = 0L)
@@ -714,7 +714,7 @@ object CorpusQueries {
     val snapB = docs.filter(snap === 1)
     val prior = Dedup.signDocuments(snapA, "doc_id", "text", K, N)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (pairs, _) =
+    val pairs =
       try Dedup.nearDupPairsIncremental(snapB, "doc_id", "text", prior,
         k = K, b = B, shingleN = N, minJaccard = 0.5,
         candidatePairBudget = 0L)

@@ -310,7 +310,7 @@ object DedupQueries {
     // defines; the budget guard's refusal behavior is pinned by
     // DedupSimSpec and exercised on the bench surface by q36/q41's
     // guarded defaults
-    val (pairs, _) =
+    val pairs =
       try Dedup.nearDupPairsIncremental(
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", prior,
         k = K, b = B, shingleN = N, minJaccard = 0.5,

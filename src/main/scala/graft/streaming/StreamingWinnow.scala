@@ -6,8 +6,8 @@ import graft.core.Warehouse
 import graft.operators.Dedup
 
 /** Streaming winnowing-fingerprint ingest into a persistent store — the
-  * containment/plagiarism counterpart of [[StreamingNearDup]]'s signature
-  * store: document batches arrive (file stream → `foreachBatch
+  * containment/plagiarism counterpart of the stored MinHash signatures
+  * `Dedup.nearDupPairsIncremental` reads: document batches arrive (file stream → `foreachBatch
   * (ingestBatch)`), each batch's winnowing fingerprints are extracted
   * ONCE (the expensive row-local text stage) and appended; containment
   * queries are served from the accumulated store without ever re-reading

@@ -39,8 +39,7 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * then 9 reps alternating with the built-in, medians, equal outputs; two
   * passes):
   * 1.15× / 1.24× on 100k events (5 groups, k = 256; this aggregate was
-  * faster in 9 of 9 pairs in each pass). It is also the only formulation
-  * `StreamingSketch` can keep as streaming state.
+  * faster in 9 of 9 pairs in each pass).
   */
 case class KmvMinKAgg(child: Expression, k: Int,
                       override val mutableAggBufferOffset: Int = 0,

@@ -138,52 +138,6 @@ class ExportProfileSpec extends SparkSpec {
     assert(zero.forall(_._4 === 0L))
   }
 
-  test("streaming histogram == batch histogram; streamed snapshots reproduce q135's drift") {
-    import graft.functions.TextFunctions.{fixedPoint, qualityScore}
-    implicit val sqlCtx = spark.sqlContext
-    // the q135 bucketing over the fixture (deciles of the quality score)
-    val bucketed = Tables(spark, sf, "documents")
-      .select(col("doc_id"), col("source"),
-        (fixedPoint(qualityScore(col("text")), 4).cast("long")).as("q_e4"))
-      .select(col("doc_id"), col("source"), expr("q_e4 div 1000").as("decile"))
-      .as[(Long, String, Long)].collect().toSeq
-    def streamedHist(rows: Seq[(Long, String, Long)], name: String) = {
-      val src = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long)]
-      val run = graft.streaming.StreamingProfile.histogramStream(
-          src.toDF().toDF("doc_id", "source", "decile"), "source", "decile")
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .option("checkpointLocation",
-          Files.createTempDirectory(s"graft_sprof_$name").toString)
-        .start()
-      try {
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        src.addData(h1: _*); run.processAllAvailable()
-        src.addData(h2: _*); run.processAllAvailable()
-      } finally run.stop()
-      spark.table(name)
-    }
-    val aRows = bucketed.filter(r => (r._1 / 20) % 2 == 0)
-    val bRows = bucketed.filter(r => (r._1 / 20) % 2 == 1)
-    val histA = streamedHist(aRows, "sprof_a")
-    val histB = streamedHist(bRows, "sprof_b")
-    // streamed state == the batch histogram (the ProfileStore.snapshot agg)
-    val batchA = aRows.toDF("doc_id", "source", "decile")
-      .groupBy(col("source").as("src"), col("decile").as("bk"))
-      .agg(count(lit(1)).as("n"))
-    assert(histA.exceptAll(batchA).isEmpty && batchA.exceptAll(histA).isEmpty)
-    // drift over the two streamed snapshots == the batch q135 rows
-    val counts = histA.select(col("src"), col("bk"), col("n").as("na"), lit(0L).as("nb"))
-      .unionByName(histB.select(col("src"), col("bk"), lit(0L).as("na"), col("n").as("nb")))
-      .groupBy(col("src"), col("bk"))
-      .agg(sum(col("na")).as("na"), sum(col("nb")).as("nb"))
-    val streamedDrift = Profiler.driftFromCounts(counts, "source")
-      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val batchDrift = graft.queries.TextQueries.all("q135_quality_drift")(spark, sf)
-      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(streamedDrift === batchDrift)
-  }
-
   test("empty export with verifyCounts returns an empty manifest, no crash") {
     val out = Files.createTempDirectory("graft_exp0_").toString
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
