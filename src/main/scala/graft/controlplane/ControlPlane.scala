@@ -169,8 +169,13 @@ object ControlPlane {
     * Scale shape: each frame contributes only a constant-width tag row per
     * input row, the union aggregates with map-side partial counts, and the
     * single shuffle carries one row per (source, layer) — at 100 TB the
-    * network cost is O(sources), not O(rows). No driver-side count() chain
-    * (one Spark job total, not one per layer). */
+    * network cost is O(sources), not O(rows). No driver-side count() chain:
+    * an action over the report runs one plan, not one per layer. Under AQE
+    * that plan still starts several jobs, one per shuffle map stage (the
+    * layer frames' own shuffles, such as a `vault_missing` distinct and
+    * anti-join, then this aggregation's shuffle) plus the result job: 4 per
+    * `check_records` in a traced `vault_daily` day. Each action re-runs
+    * them all, so evaluate the report once. */
   def reconcileCounts(layers: Seq[(String, String, DataFrame)]): DataFrame = {
     require(layers.nonEmpty, "reconcileCounts needs at least one layer frame")
     val tagged = layers.map { case (src, layer, df) =>

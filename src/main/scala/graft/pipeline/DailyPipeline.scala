@@ -94,8 +94,10 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     * dag_etlpipeline__root.py:16,55-60): re-count the source, the staged
     * table, and the staged-keys-missing-from-hub anti-join per source, and
     * persist the report to `check.record_count`. Returns the mismatched
-    * source names. Missing staging/hub tables (e.g. an upstream task died —
-    * the task runs under all_done) count as fully short, not as errors. */
+    * source names, taken from the same collected rows that are stored, so
+    * the report is evaluated once. Missing staging/hub tables (e.g. an
+    * upstream task died — the task runs under all_done) count as fully
+    * short, not as errors. */
   private[pipeline] def checkRecords(sources: Seq[SourceSpec], etlDate: String): Seq[String] = {
     val layers = sources.flatMap { s =>
       val keyCols = s.businessKeys.map(col)
@@ -114,9 +116,11 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
         (s.name, "vault_missing", Relational.antiJoin(stagedKeys, hubKeys, s.businessKeys)))
     }
     val report = ControlPlane.reconcileCounts(layers)
-    wh.append("check", "record_count", report.withColumn("etl_date", lit(etlDate)))
-    report.filter(col("status") === "mismatch")
-      .select("source_name").collect().map(_.getString(0)).toSeq
+    val rows = report.collect()
+    wh.append("check", "record_count", spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), report.schema).withColumn("etl_date", lit(etlDate)))
+    rows.collect { case r if r.getAs[String]("status") == "mismatch" =>
+      r.getAs[String]("source_name") }.toSeq
   }
 
   /** Run the full daily pipeline for the next open date. Returns the

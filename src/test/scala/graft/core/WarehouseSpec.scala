@@ -1,8 +1,14 @@
 package graft.core
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DateType
 
 import graft.SparkSpec
 import graft.maintenance.Maintenance
@@ -155,5 +161,78 @@ class WarehouseSpec extends SparkSpec {
     val plan = wh.read("s", "t").filter(col("etl_date") === "2024-01-01")
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("etl_date"))
+  }
+
+  // ---- read schema: taken from a footer on the driver, equal to Spark's inference ----
+
+  private def assertSchemaParity(read: DataFrame, dirs: Seq[String]): Unit =
+    assert(read.schema === spark.read.parquet(dirs: _*).schema)
+
+  test("read schema equals Spark's inference: overwrite, v9/v10 chain, readAt, empty first append") {
+    val wh = freshWh()
+    val typed = Seq((1L, "a", java.sql.Date.valueOf("2024-01-01"), BigDecimal("1.50"), Seq(1, 2)))
+      .toDF("id", "s", "d", "amt", "arr").withColumn("st", struct(col("id"), col("s")))
+    wh.overwrite("s", "t", typed)
+    assertSchemaParity(wh.read("s", "t"), wh.dataDirs("s", "t"))
+    // dirs v8, v9, v10: Spark takes the schema from v10's file, the smallest
+    // path, though v8 is listed first and holds other columns
+    (2 to 8).foreach(_ => wh.overwrite("s", "t", Seq((1L, "a")).toDF("id", "a")))
+    wh.append("s", "t", Seq((2L, "b")).toDF("id", "a"))
+    wh.append("s", "t", Seq((3L, 3.0)).toDF("id", "b"))
+    assert(wh.dataDirs("s", "t").map(_.split("/").last) === Seq("v8", "v9", "v10"))
+    assertSchemaParity(wh.read("s", "t"), wh.dataDirs("s", "t"))
+    assert(wh.read("s", "t").columns.toSeq === Seq("id", "b"))
+    assertSchemaParity(wh.readAt("s", "t", 9), wh.dataDirs("s", "t", 9))
+    assertSchemaParity(wh.readAt("s", "t", 1), wh.dataDirs("s", "t", 1))
+    // a table created by an empty append
+    wh.append("s", "e", Seq.empty[(Long, String)].toDF("id", "v"))
+    wh.append("s", "e", Seq((1L, "a")).toDF("id", "v"))
+    assertSchemaParity(wh.read("s", "e"), wh.dataDirs("s", "e"))
+    assert(wh.read("s", "e").count() === 1)
+  }
+
+  test("read schema equals Spark's inference for registered dirs and partitioned tables") {
+    val wh = freshWh()
+    val ext = Files.createTempDirectory("graft_ext_").toString + "/out"
+    Seq((1, "x")).toDF("k", "w").write.parquet(ext)
+    wh.registerTable("s", "ext", Seq(ext))
+    assertSchemaParity(wh.read("s", "ext"), wh.dataDirs("s", "ext"))
+    // a file Spark did not write carries no Spark schema: inference runs
+    wh.registerTable("s", "foreign", Seq(s"$sf/region.parquet"))
+    assertSchemaParity(wh.read("s", "foreign"), wh.dataDirs("s", "foreign"))
+    // partition column types come from directory names: inference runs
+    wh.overwrite("s", "p", Seq(("2024-01-01", 1)).toDF("etl_date", "v"),
+      partitionBy = Seq("etl_date"))
+    assertSchemaParity(wh.read("s", "p"), wh.dataDirs("s", "p"))
+    assert(wh.read("s", "p").schema("etl_date").dataType === DateType)
+  }
+
+  test("reading an unpartitioned table starts no Spark job") {
+    val wh = freshWh()
+    wh.overwrite("s", "t", Seq((1, "a")).toDF("id", "v"))
+    wh.append("s", "t", Seq((2, "b")).toDF("id", "v"))
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("wh_read", "reads under test")
+      wh.read("s", "t")
+      wh.readAt("s", "t", 1)
+      // listener events arrive in order: once the marker job is seen, every
+      // job the reads started has been seen too
+      sc.setJobGroup("wh_marker", "marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("wh_marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("wh_marker"))
+      assert(groups.asScala.count(_ == "wh_read") === 0)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -176,6 +176,17 @@ class DailyPipelineSpec extends SparkSpec {
       .filter(col("etl_date") === date).select("status").as[String].head() === null)
   }
 
+  test("one run evaluates the source once for staging and once for check_records") {
+    val (_, p) = freshSetup()
+    val evaluated = spark.sparkContext.longAccumulator("source rows evaluated")
+    val rows = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    val counted = p.SourceSpec("counted",
+      load = () => spark.createDataFrame(rows.rdd.map { r => evaluated.add(1); r }, rows.schema),
+      businessKeys = Seq("k"), attrs = Seq("v"))
+    p.run(Seq(counted))._2.assertAllSuccess()
+    assert(evaluated.value === 2 * 3)
+  }
+
   test("schema drift routes to the notification branch and still completes") {
     val (wh, p) = freshSetup()
     val (_, r1) = p.run(Seq(customersSpec(p)))
