@@ -11,10 +11,28 @@ import graft.ops.Relational
   * (`etl_dates`, run registry, task-status log) so every transition is a
   * declarative read→transform→write.
   *
-  * Tables are registry-scale (rows ≈ dates × sources × tasks), so every
-  * join against them broadcasts; nothing here touches the data plane.
+  * Tables are registry-scale (rows ≈ dates × sources × tasks), so the
+  * calendar, resume-gate and report entry points first bring their inputs
+  * into one partition ([[registry]]).
+  * `coalesce(1)` reports a single partition, which satisfies every
+  * clustered, ordered and all-tuples distribution: the aggregates, windows,
+  * sorts and (shuffle-hash hinted) joins above it plan with no exchange,
+  * and each action runs as one Spark job of one task, where a data-plane
+  * plan would pay a job per shuffle stage over a few dozen rows.
+  *
+  * Two groups keep their exchanges. [[reconcileCounts]]'s layer frames
+  * (source, staging, hub) are data-plane, so it keeps its partial-count
+  * shuffle. The registry lifecycle (`registerNew` … `syncRegistry`)
+  * re-reads the registry in every branch, so chained syncs nest: in one
+  * partition every hash aggregate and hash join of the chain would hold
+  * its memory page in the same task at once (a spec of two chained syncs
+  * ran out of aggregation memory at a 4 GiB heap).
   */
 object ControlPlane {
+
+  /** One partition for a registry-scale frame: the plans above it need no
+    * exchange, and a write of it leaves one file. */
+  private[graft] def registry(df: DataFrame): DataFrame = df.coalesce(1)
 
   // ---- ETL calendar (etl_manager.py:43-70,219-268,304-355) ----
 
@@ -22,13 +40,13 @@ object ControlPlane {
     * try/except ORDER BY LIMIT 1 pair collapsed to one aggregate (O1). */
   def nextEtlDate(etlDates: DataFrame): Option[String] =
     Relational.pickNextOrFallback(
-      etlDates, col("holiday_flag") === 0 && col("status").isNull, "etl_date")
+      registry(etlDates), col("holiday_flag") === 0 && col("status").isNull, "etl_date")
       .collect().headOption.flatMap(r => Option(r.getString(0)))
 
   /** Flip current_date_flag: 1 for the chosen date, 0 elsewhere
     * (etl_manager.py:319-337, two UPDATEs → one rewrite). */
   def setCurrentDate(etlDates: DataFrame, etlDate: String): DataFrame =
-    etlDates.withColumn("current_date_flag",
+    registry(etlDates).withColumn("current_date_flag",
       when(col("etl_date") === etlDate, 1).otherwise(0))
 
   /** Close the date: status='success' when every source's latest run
@@ -36,17 +54,19 @@ object ControlPlane {
     * etl_manager.py:219-268). */
   def closeEtlDate(etlDates: DataFrame, runs: DataFrame, etlDate: String): DataFrame = {
     val latest = Relational.latestPerGroup(
-      runs.filter(col("etl_date") === etlDate), Seq("source_name"), "created_at", Seq("run_id"))
+      registry(runs).filter(col("etl_date") === etlDate), Seq("source_name"), "created_at",
+      Seq("run_id"))
     // a date with ZERO runs must stay open — the empty-set-is-success parity
     // applies to task lists within a run, not to "did anything run at all"
     val head = latest.agg(
       Relational.boolAllExpr(col("status") === "success").as("ok"),
       count(lit(1)).as("n")).collect().head
     val allOk = head.getBoolean(0) && head.getLong(1) > 0
+    val dates = registry(etlDates)
     if (allOk)
-      etlDates.withColumn("status",
+      dates.withColumn("status",
         when(col("etl_date") === etlDate, lit("success")).otherwise(col("status")))
-    else etlDates
+    else dates
   }
 
   // ---- Run registry (etl_manager.py:72-102,271-301,358-382) ----
@@ -59,12 +79,13 @@ object ControlPlane {
       .agg(when(Relational.boolAllExpr(col("status").isin("success", "skipped")),
         lit("success")).otherwise(lit("failed")).as("run_status"))
 
-  /** Resume-skip gate: task ids with a prior success for (etl_date, source)
-    * — check_conditions semantics (etl_manager.py:435-468) including the
-    * TRY(split(task_id,'.')[3]) compound-OR match (P3). */
-  def succeededTasks(tasks: DataFrame, etlDate: String, source: String): Set[String] =
-    tasks.filter(col("etl_date") === etlDate && col("source_name") === source &&
-      col("status") === "success")
+  /** Resume-skip gate: task ids with a prior success for etl_date and any
+    * of `sources` — check_conditions semantics (etl_manager.py:435-468)
+    * including the TRY(split(task_id,'.')[3]) compound-OR match (P3). The
+    * reference asks once per source; one collect answers for all of them. */
+  def succeededTasks(tasks: DataFrame, etlDate: String, sources: String*): Set[String] =
+    registry(tasks).filter(col("etl_date") === etlDate &&
+      col("source_name").isin(sources: _*) && col("status") === "success")
       .select(coalesce(
         Relational.tryElementAt(col("task_id"), "\\.", 3), col("task_id")).as("t"))
       .distinct().collect().map(_.getString(0)).toSet
@@ -72,14 +93,21 @@ object ControlPlane {
   // ---- Reporting (send_email.py:409-517 → one grouped pass) ----
 
   /** The per-source completion report: the reference loops ~5 queries × 20
-    * sources; one groupBy computes every count (A2 mapping). */
-  def completionReport(tasks: DataFrame): DataFrame =
-    tasks.groupBy(col("source_name"), col("schema_name"))
-      .agg(
-        countDistinct(col("task_id")).as("n_total"),
-        countDistinct(when(col("status") === "success", col("task_id"))).as("n_success"),
-        (countDistinct(col("task_id")) -
-          countDistinct(when(col("status") === "success", col("task_id")))).as("n_failure"))
+    * sources; one grouped pass computes every count (A2 mapping). The
+    * reference's count(DISTINCT task_id) and count(DISTINCT CASE success)
+    * become a group by task followed by plain counts: a task counts once,
+    * and as a success when any of its rows succeeded; a null task_id counts
+    * nowhere. Distinct aggregates would plan as an Expand, which drops the
+    * one-partition layout and brings back two shuffles. */
+  def completionReport(tasks: DataFrame): DataFrame = {
+    val perTask = registry(tasks)
+      .groupBy(col("source_name"), col("schema_name"), col("task_id"))
+      .agg(Relational.boolAnyExpr(col("status") === "success").as("ok"))
+    val total = count(col("task_id"))
+    val success = count(when(col("ok"), col("task_id")))
+    perTask.groupBy(col("source_name"), col("schema_name"))
+      .agg(total.as("n_total"), success.as("n_success"), (total - success).as("n_failure"))
+  }
 
   /** Render the report rows the reference emails (send_email.py:569-650
     * template replacement, F4) — one HTML table row per source plus a
@@ -117,7 +145,7 @@ object ControlPlane {
   /** Error-summary report (send_email.py:654-667): one row per task not in
     * (success, skipped), per source. */
   def renderErrorSummary(tasks: DataFrame): DataFrame =
-    tasks.filter(!col("status").isin("success", "skipped"))
+    registry(tasks).filter(!col("status").isin("success", "skipped"))
       .select(col("source_name"), col("task_id"), col("status"),
         format_string("<tr><td>%s</td><td>%s</td><td>%s</td></tr>",
           col("source_name"), col("task_id"), col("status")).as("html_row"))
@@ -131,9 +159,11 @@ object ControlPlane {
     * and run-log rows (etl_date, source_name, run_id, created_at). */
   def renderRunDetail(tasks: DataFrame, runLog: DataFrame, etlDate: String): DataFrame = {
     val latest = Relational.argmax(
-      runLog.filter(col("etl_date") === etlDate), Seq("source_name"), "created_at")
+      registry(runLog).filter(col("etl_date") === etlDate), Seq("source_name"), "created_at")
       .select(col("source_name"), col("run_id"))
-    tasks.join(broadcast(latest), Seq("source_name", "run_id"))
+    // both sides are in one partition, where a shuffle-hash join needs no
+    // exchange; the planner's size-based pick would broadcast, a job more
+    registry(tasks).join(latest.hint("shuffle_hash"), Seq("source_name", "run_id"))
       .filter(!col("status").isin("success", "skipped"))
       .select(
         col("source_name"),

@@ -117,8 +117,8 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     }
     val report = ControlPlane.reconcileCounts(layers)
     val rows = report.collect()
-    wh.append("check", "record_count", spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), report.schema).withColumn("etl_date", lit(etlDate)))
+    wh.append("check", "record_count", ControlPlane.registry(spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), report.schema).withColumn("etl_date", lit(etlDate))))
     rows.collect { case r if r.getAs[String]("status") == "mismatch" =>
       r.getAs[String]("source_name") }.toSeq
   }
@@ -131,12 +131,11 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
       .getOrElse(throw new IllegalStateException("empty calendar"))
     wh.overwrite("op_metadata", "etl_dates", ControlPlane.setCurrentDate(calendar, etlDate))
 
-    val priorTasks =
-      if (wh.exists("op_metadata", "task_log")) wh.read("op_metadata", "task_log")
-      else Seq.empty[(String, String, String, String)]
-        .toDF("etl_date", "source_name", "task_id", "status")
-    val done = sources.flatMap(s =>
-      ControlPlane.succeededTasks(priorTasks, etlDate, s.name)).toSet
+    // the resume gate: one collect for every source, none before day 1
+    val done =
+      if (!wh.exists("op_metadata", "task_log")) Set.empty[String]
+      else ControlPlane.succeededTasks(wh.read("op_metadata", "task_log"), etlDate,
+        sources.map(_.name): _*)
 
     val drift = scala.collection.mutable.Map.empty[String, Boolean]
     val shortSources = scala.collection.mutable.Set.empty[String]
@@ -179,10 +178,12 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
       Seq(s"staging_${s.name}", s"drift_check_${s.name}",
         s"notify_drift_${s.name}", s"vault_${s.name}").map(_ -> s.name)
     }.toMap
-    // persist task statuses (the status_etlpipeline_task_airflow table)
-    val taskRows = result.runs.map(r =>
+    // persist task statuses (the status_etlpipeline_task_airflow table);
+    // these locally built rows, like the run rows below, are written by one
+    // task as one file
+    val taskRows = ControlPlane.registry(result.runs.map(r =>
       (etlDate, taskOwner.getOrElse(r.taskId, "pipeline"), r.taskId, r.status))
-      .toDF("etl_date", "source_name", "task_id", "status")
+      .toDF("etl_date", "source_name", "task_id", "status"))
     wh.append("op_metadata", "task_log", taskRows)
     // failed runs also persist the rendered error-summary report rows
     // (send_email.py:654-667 — the email body's source of truth)
@@ -195,7 +196,7 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     // failed date must produce a strictly NEWER run row, or the
     // latest-run-per-source dedup in closeEtlDate could pick the old one.
     val now = System.currentTimeMillis()
-    val runRows = sources.map { s =>
+    val runRows = ControlPlane.registry(sources.map { s =>
       val srcTasks = result.runs.filter(r => taskOwner.get(r.taskId).contains(s.name))
       // a record-count mismatch fails the owning source's run even though
       // check_records itself is a pipeline-level task — the reconciliation
@@ -204,7 +205,7 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
         !shortSources.contains(s.name)
       (etlDate, s.name, java.util.UUID.randomUUID().toString, now,
         if (ok) "success" else "failed")
-    }.toDF("etl_date", "source_name", "run_id", "created_at", "status")
+    }.toDF("etl_date", "source_name", "run_id", "created_at", "status"))
     wh.append("op_metadata", "run_log", runRows)
     wh.overwrite("op_metadata", "etl_dates",
       ControlPlane.closeEtlDate(wh.read("op_metadata", "etl_dates"),

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.controlplane.ControlPlane
 import graft.core.Warehouse
 import graft.vault.Vault
 import graft.workflow.Workflow
@@ -63,9 +64,9 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
       case Some("master_dag") | Some("group") => assigned(source)
       case _ =>
         val runId = java.util.UUID.randomUUID().toString
-        wh.append("op_metadata", "multi_run_log",
+        wh.append("op_metadata", "multi_run_log", ControlPlane.registry(
           Seq((etlDate, source, runId, dagType, "running"))
-            .toDF("etl_date", "source_name", "run_id", "created_by", "status"))
+            .toDF("etl_date", "source_name", "run_id", "created_by", "status")))
         runId
     }
 
@@ -111,9 +112,9 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
     val start = TaskSpec("start", run = () =>
       // the root registers every triggered source's run row up front
       // (insert_into_info_by_sources, dag_etlpipeline__root.py:90-97)
-      wh.append("op_metadata", "multi_run_log",
+      wh.append("op_metadata", "multi_run_log", ControlPlane.registry(
         sources.map(s => (etlDate, s.name, assigned(s.name), "root", "running"))
-          .toDF("etl_date", "source_name", "run_id", "created_by", "status")),
+          .toDF("etl_date", "source_name", "run_id", "created_by", "status"))),
       retries = 5, retryDelayMs = 0L)
 
     val groups = sources.flatMap { s =>
@@ -144,8 +145,8 @@ class MultiSourcePipeline(spark: SparkSession, wh: Warehouse) {
             .forall(id => childResults.get(id).exists(_.allSuccess))
           (etlDate, s.name, assigned(s.name), "root", if (ok) "success" else "failed")
         }
-        wh.append("op_metadata", "multi_run_log",
-          rows.toDF("etl_date", "source_name", "run_id", "created_by", "status"))
+        wh.append("op_metadata", "multi_run_log", ControlPlane.registry(
+          rows.toDF("etl_date", "source_name", "run_id", "created_by", "status")))
       })
 
     val result = Workflow.run(Seq(start) ++ groups :+ end, runTimeoutMs = runTimeoutMs)

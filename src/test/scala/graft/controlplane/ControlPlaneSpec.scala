@@ -1,12 +1,23 @@
 package graft.controlplane
 
+import java.nio.file.Files
+import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.Warehouse
 
 /** Control-plane transition semantics: calendar picking/closing, run
   * rollups with empty-set parity, resume gates, and the registry
-  * add/delete/reused lifecycle. */
+  * add/delete/reused lifecycle; plus the one-partition contract (one Spark
+  * job per action). */
 class ControlPlaneSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,6 +97,114 @@ class ControlPlaneSpec extends SparkSpec {
       .map(r => (r._1, r._2) -> ((r._3, r._4, r._5))).toMap
     assert(rep(("src_a", "staging")) === ((2L, 1L, 1L)))
     assert(rep(("src_b", "vault")) === ((1L, 1L, 0L)))
+  }
+
+  /** The reference's formulation of the completion report: count(DISTINCT)
+    * over task ids and over the successful ones (send_email.py:409-517). */
+  private def completionReportByDistinct(tasks: DataFrame): DataFrame =
+    tasks.groupBy(col("source_name"), col("schema_name"))
+      .agg(
+        countDistinct(col("task_id")).as("n_total"),
+        countDistinct(when(col("status") === "success", col("task_id"))).as("n_success"),
+        (countDistinct(col("task_id")) -
+          countDistinct(when(col("status") === "success", col("task_id")))).as("n_failure"))
+
+  test("completionReport equals the count(distinct) formulation on random task logs") {
+    val statuses = Seq("success", "failed", "skipped", "upstream_failed", null)
+    for (seed <- 1 to 5) {
+      val rnd = new Random(seed)
+      val drawn = Seq.fill(60)((
+        Seq("src_a", "src_b", "src_c")(rnd.nextInt(3)),
+        Seq("staging", "raw_vault")(rnd.nextInt(2)),
+        if (rnd.nextInt(12) == 0) null else s"t${rnd.nextInt(8)}",
+        statuses(rnd.nextInt(statuses.size))))
+      // the edge cases every seed must hold: a duplicated row, a task with
+      // both a success and a failed row, a null task_id, a null status
+      val edges = Seq(
+        ("src_a", "staging", "dup", "failed"), ("src_a", "staging", "dup", "failed"),
+        ("src_b", "staging", "both", "success"), ("src_b", "staging", "both", "failed"),
+        ("src_c", "raw_vault", null, "success"),
+        ("src_c", "raw_vault", "no_status", null))
+      val tasks = rnd.shuffle(drawn ++ edges)
+        .toDF("source_name", "schema_name", "task_id", "status")
+      def rows(df: DataFrame) =
+        df.select("source_name", "schema_name", "n_total", "n_success", "n_failure")
+          .as[(String, String, Long, Long, Long)].collect().sorted.toSeq
+      val got = rows(ControlPlane.completionReport(tasks))
+      assert(got === rows(completionReportByDistinct(tasks)), s"seed $seed")
+      assert(got.exists(r => r._1 == "src_b" && r._2 == "staging" && r._4 >= 1))
+    }
+  }
+
+  /** Spark jobs each action starts, by job group: listener events arrive
+    * in order, so once a marker job is seen, every earlier job has been. */
+  private def jobsPerAction(actions: Seq[(String, () => Unit)]): Map[String, Int] = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      actions.foreach { case (name, body) =>
+        sc.setJobGroup(name, name)
+        body()
+      }
+      sc.setJobGroup("cp_marker", "marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!groups.contains("cp_marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("cp_marker"))
+      actions.map { case (name, _) => name -> groups.asScala.count(_ == name) }.toMap
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("every control-plane action over warehouse tables starts exactly one Spark job") {
+    val wh = new Warehouse(spark, Files.createTempDirectory("graft_cp_wh_").toString)
+    val ts = Timestamp.valueOf("2024-01-01 10:00:00")
+    // three appended versions of each registry table, several rows apiece
+    for (d <- 1 to 3) {
+      val date = s"2024-01-0$d"
+      wh.append("op_metadata", "etl_dates",
+        Seq((date, 0, if (d < 3) "success" else null), (s"2024-02-0$d", 1, null))
+          .toDF("etl_date", "holiday_flag", "status"))
+      wh.append("op_metadata", "task_log", (for {
+        src <- Seq("s1", "s2", "s3"); task <- Seq("staging", "vault", "check")
+      } yield (date, s"r_${src}_$d", src, if (task == "staging") "staging" else "raw_vault",
+        s"10_01__${src}__$task", s"dag.$src.$task",
+        if (src == "s2" && task == "vault") "failed" else "success", ts, ts))
+        .toDF("etl_date", "run_id", "source_name", "schema_name", "dag_id", "task_id",
+          "status", "start_time", "end_time"))
+      wh.append("op_metadata", "run_log", Seq("s1", "s2", "s3").map(src =>
+        (date, src, s"r_${src}_$d", d.toLong, if (src == "s2") "failed" else "success"))
+        .toDF("etl_date", "source_name", "run_id", "created_at", "status"))
+    }
+    def table(t: String) = wh.read("op_metadata", t)
+    val date = "2024-01-03"
+    var out = Map.empty[String, Any]
+    val jobs = jobsPerAction(Seq(
+      "nextEtlDate" -> (() => out += "nextEtlDate" -> ControlPlane.nextEtlDate(table("etl_dates"))),
+      "succeededTasks" -> (() => out += "succeededTasks" ->
+        ControlPlane.succeededTasks(table("task_log"), date, "s1", "s2", "s3")),
+      "closeEtlDate" -> (() =>
+        ControlPlane.closeEtlDate(table("etl_dates"), table("run_log"), date)),
+      "completionReport" -> (() => out += "completionReport" -> ControlPlane
+        .renderCompletionReport(ControlPlane.completionReport(table("task_log"))).collect().length),
+      "renderErrorSummary" -> (() => out += "renderErrorSummary" ->
+        ControlPlane.renderErrorSummary(table("task_log")).collect().length),
+      "renderRunDetail" -> (() => out += "renderRunDetail" ->
+        ControlPlane.renderRunDetail(table("task_log"), table("run_log"), date).collect().length)))
+    assert(jobs === jobs.map { case (k, _) => k -> 1 })
+    // the actions answered over all three versions
+    assert(out("nextEtlDate") === Some(date))
+    assert(out("succeededTasks") === Set("staging", "vault", "check"))
+    assert(out("completionReport") === 7) // (3 sources × 2 schemas) + totals
+    assert(out("renderErrorSummary") === 3)
+    assert(out("renderRunDetail") === 1)
   }
 
   private def registry = Seq(
