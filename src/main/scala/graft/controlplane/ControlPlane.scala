@@ -1,6 +1,7 @@
 package graft.controlplane
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.Relational
@@ -20,13 +21,10 @@ import graft.ops.Relational
   * and each action runs as one Spark job of one task, where a data-plane
   * plan would pay a job per shuffle stage over a few dozen rows.
   *
-  * Two groups keep their exchanges. [[reconcileCounts]]'s layer frames
-  * (source, staging, hub) are data-plane, so it keeps its partial-count
-  * shuffle. The registry lifecycle (`registerNew` … `syncRegistry`)
-  * re-reads the registry in every branch, so chained syncs nest: in one
-  * partition every hash aggregate and hash join of the chain would hold
-  * its memory page in the same task at once (a spec of two chained syncs
-  * ran out of aggregation memory at a 4 GiB heap).
+  * Two entry points keep their exchanges. [[reconcileCounts]]'s layer
+  * frames (source, staging, hub) are data-plane, so it keeps its
+  * partial-count shuffle. [[syncRegistry]] keeps its one shuffle on the
+  * registry keys; no daily-load path calls it.
   */
 object ControlPlane {
 
@@ -223,51 +221,60 @@ object ControlPlane {
 
   // ---- Registry lifecycle (etl_manager.py:779-866,983-1069,1120-1379) ----
 
-  /** Rows of `incoming` not yet in `registry` → to insert with
-    * active_status=1 (J2 left-anti new-pairs idiom). */
-  def registerNew(incoming: DataFrame, registry: DataFrame, keys: Seq[String],
-                  loadDate: Column): DataFrame =
-    Relational.antiJoin(incoming, registry, keys)
+  /** Full sync cycle (J2 register new, J3 retire missing, J4 reactivate
+    * returners, J6 their updates): returns (newRegistry, changeLog rows
+    * with change_type add/delete/reused).
+    *
+    * One pass: the registry rows and the incoming rows are tagged, unioned
+    * and given per-key flags by one window over `keys` (is the key
+    * incoming, registered, active, retired), and both returned frames
+    * derive from that frame. Each reads `registry` and `incoming` once, so
+    * a sync of a sync plans one pass more, not a copy of the first sync
+    * per branch.
+    *  - new: incoming rows whose key is not registered, with their non-key
+    *    columns and duplicates, active_status=1, load_date=`loadDate`;
+    *  - retire: every row of a key that has an active row and is no longer
+    *    incoming gets active_status=0, retire_date=`loadDate`;
+    *  - reactivate: every row of a key that has a retired row and is
+    *    incoming again gets active_status=1, retire_date=null;
+    *  - the change log has one `add` per new row, one `delete` per active
+    *    row that retires and one `reused` per retired row that returns.
+    *
+    * A key with a null part matches nothing, as in an equi-join: an
+    * incoming one is always new, a registered active one retires. */
+  def syncRegistry(registry: DataFrame, incoming: DataFrame, keys: Seq[String],
+                   loadDate: Column): (DataFrame, DataFrame) = {
+    val cols = registry.columns.toSeq.map(col)
+    val fresh = incoming
       .withColumn("active_status", lit(1))
       .withColumn("retire_date", lit(null).cast("string"))
       .withColumn("load_date", loadDate)
-
-  /** Registry rows whose source row disappeared → active_status=0 with
-    * retire_date (J3 reverse-anti + J6 update). */
-  def retireMissing(registry: DataFrame, incoming: DataFrame, keys: Seq[String],
-                    retireDate: Column): DataFrame = {
-    val gone = Relational.antiJoin(
-      registry.filter(col("active_status") === 1).select(keys.map(col): _*),
-      incoming, keys)
-    Relational.updateWhereIn(registry, gone, keys,
-      Map("active_status" -> lit(0), "retire_date" -> retireDate))
-  }
-
-  /** Retired rows that reappeared in the source → reactivate (J4 semi-join
-    * + J6 update; change_type 'reused', etl_manager.py:1353-1376). */
-  def reactivate(registry: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
-    val back = Relational.semiJoin(
-      registry.filter(col("active_status") === 0).select(keys.map(col): _*),
-      incoming, keys)
-    Relational.updateWhereIn(registry, back, keys,
-      Map("active_status" -> lit(1), "retire_date" -> lit(null).cast("string")))
-  }
-
-  /** Full sync cycle: register new, retire missing, reactivate returners —
-    * returns (newRegistry, changeLog rows with change_type add/delete/reused). */
-  def syncRegistry(registry: DataFrame, incoming: DataFrame, keys: Seq[String],
-                   loadDate: Column): (DataFrame, DataFrame) = {
-    val fresh = registerNew(incoming, registry, keys, loadDate)
-    val keyCols = keys.map(col)
-    val adds = fresh.select(keyCols: _*).withColumn("change_type", lit("add"))
-    val goneKeys = Relational.antiJoin(
-      registry.filter(col("active_status") === 1).select(keyCols: _*), incoming, keys)
-      .withColumn("change_type", lit("delete"))
-    val backKeys = Relational.semiJoin(
-      registry.filter(col("active_status") === 0).select(keyCols: _*), incoming, keys)
-      .withColumn("change_type", lit("reused"))
-    val updated = reactivate(retireMissing(registry, incoming, keys, loadDate), incoming, keys)
-    val merged = updated.unionByName(fresh.select(updated.columns.map(col): _*))
-    (merged, adds.unionByName(goneKeys).unionByName(backKeys))
+      .select(cols: _*)
+    val keyed = keys.map(col(_).isNotNull).reduce(_ && _)
+    val byKey = Window.partitionBy(keys.map(col): _*)
+    def anyOfKey(p: Column): Column = when(keyed, max(p).over(byKey)).otherwise(p)
+    val reg = col("__reg")
+    val flagged = registry.withColumn("__reg", lit(true))
+      .unionByName(fresh.withColumn("__reg", lit(false)))
+      .withColumn("__incoming", anyOfKey(!reg))
+      .withColumn("__known", anyOfKey(reg))
+      .withColumn("__active", anyOfKey(reg && coalesce(col("active_status") === 1, lit(false))))
+      .withColumn("__retired", anyOfKey(reg && coalesce(col("active_status") === 0, lit(false))))
+    val back = col("__incoming") && col("__retired")
+    val gone = !col("__incoming") && col("__active")
+    val merged = flagged.filter(reg || !col("__known"))
+      .withColumn("retire_date", when(reg && back, lit(null).cast("string"))
+        .when(reg && gone, loadDate).otherwise(col("retire_date")))
+      .withColumn("active_status", when(reg && back, lit(1))
+        .when(reg && gone, lit(0)).otherwise(col("active_status")))
+      .select(cols: _*)
+    val changes = flagged
+      .select(keys.map(col) :+
+        when(!reg, when(!col("__known"), lit("add")))
+          .when(col("active_status") === 1 && !col("__incoming"), lit("delete"))
+          .when(col("active_status") === 0 && col("__incoming"), lit("reused"))
+          .as("change_type"): _*)
+      .filter(col("change_type").isNotNull)
+    (merged, changes)
   }
 }

@@ -46,8 +46,8 @@ import graft.ops.Relational
   * rewrite over the current version (reference executes them in
   * Trino/Iceberg: utlis/etl_manager.py:195-353, 617-709) — semantics
   * identical for single-writer batch. `merge` commits
-  * Relational.mergeAsRewrite; UPDATE and DELETE are Relational.updateWhereIn
-  * and Relational.antiJoin over `read`, committed with `overwrite`.
+  * Relational.mergeAsRewrite; UPDATE is a `when` rewrite and DELETE a
+  * Relational.antiJoin over `read`, committed with `overwrite`.
   */
 class Warehouse(spark: SparkSession, root: String) {
 

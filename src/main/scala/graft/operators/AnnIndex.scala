@@ -8,19 +8,21 @@ import graft.core.Warehouse
 /** Persistent ANN index lifecycle over the [[Warehouse]] — the serving
   * store that turns the ad-hoc IVF path into production shape: the
   * corpus is quantized and assigned to inverted lists ONCE at build,
-  * new vectors append by assigning ONLY the arriving batch against the
-  * stored centroids, and queries probe the stored lists without ever
-  * touching raw embeddings again.
+  * and queries probe the stored lists without ever touching raw
+  * embeddings again. Every store below (IVF, PQ, IVF+PQ, IVF+SQ8,
+  * Hamming) is written by its `build*` and read by its `topK*`.
   *
-  * Two tables per index: `<name>_centroids` (label, ce) and
-  * `<name>_lists` (id, label, qe, n). Because an IVF assignment depends
-  * only on the centroids, append-then-query is EXACTLY equal to
-  * rebuild-on-the-union — the invariant AnnIndexSpec pins — so the index
-  * never needs a rebuild for correctness, only (eventually) for recall
-  * as the data distribution drifts from the frozen centroids.
+  * Only the IVF lists take appends: [[append]] assigns ONLY the arriving
+  * batch against the stored centroids. Two tables per IVF index:
+  * `<name>_centroids` (label, ce) and `<name>_lists` (id, label, qe, n).
+  * Because an IVF assignment depends only on the centroids,
+  * append-then-query is EXACTLY equal to rebuild-on-the-union — the
+  * invariant AnnIndexSpec pins — so the index never needs a rebuild for
+  * correctness, only (eventually) for recall as the data distribution
+  * drifts from the frozen centroids.
   *
   * 100 TB shape: build is one assignment scan (centroids broadcast);
-  * append is O(batch); a query touches ~|lists probed| stored rows per
+  * an IVF append is O(batch); a query touches ~|lists probed| stored rows per
   * query vector with the query side broadcast — the store itself never
   * shuffles. The lists/codes tables are hive-partitioned by `label`, so
   * a serving read with `probes` lists scans only the probed partition
@@ -123,8 +125,7 @@ object AnnIndex {
 
   // ---- PQ variant: 16× smaller stored payload (m code ints per vector
   // instead of the quantized embedding), ADC serving off the codes alone.
-  // Same append-equals-rebuild invariant: codes depend only on the
-  // frozen codebooks.
+  // Codes depend only on the codebooks, frozen in the store at build.
 
   private def codebooksTable(name: String) = s"${name}_codebooks"
   private def codesTable(name: String) = s"${name}_codes"
@@ -141,23 +142,11 @@ object AnnIndex {
     // pruning is the IVF stage's job), but per-subspace maintenance
     // (rebuild one codebook, audit one subspace) prunes to its dir
     wh.overwrite(schema, codesTable(name),
-      encode(wh, schema, name, corpus, m, dim, idCol, embCol),
+      Similarity.pqEncode(corpus, wh.read(schema, codebooksTable(name)),
+          m, dim, idCol, embCol)
+        .select(col(idCol).as("id"), col("sub"), col("label")),
       partitionBy = Seq("sub"))
   }
-
-  /** Encode ONLY the arriving batch against the stored codebooks and
-    * append — O(batch · m · k) scoring, nothing re-reads the corpus. */
-  def appendPq(wh: Warehouse, schema: String, name: String, newVectors: DataFrame,
-               m: Int, dim: Int, idCol: String = "vec_id",
-               embCol: String = "embedding"): Unit =
-    wh.append(schema, codesTable(name),
-      encode(wh, schema, name, newVectors, m, dim, idCol, embCol))
-
-  private def encode(wh: Warehouse, schema: String, name: String, vectors: DataFrame,
-                     m: Int, dim: Int, idCol: String, embCol: String): DataFrame =
-    Similarity.pqEncode(vectors, wh.read(schema, codebooksTable(name)),
-        m, dim, idCol, embCol)
-      .select(col(idCol).as("id"), col("sub"), col("label"))
 
   /** ADC top-k from the stored codes — identical results to
     * `Similarity.pqTopK` over the same corpus and codebooks. No partition
@@ -177,8 +166,8 @@ object AnnIndex {
   // probes=p serving read scans only the probed `clist=` directories —
   // candidate pruning happens in the FILE LISTING, not after a full code
   // scan (plain topKPq reads every code by design). Both the coarse
-  // assignment and the codes depend only on frozen centroids/codebooks,
-  // so append-equals-rebuild holds exactly as for the simple index.
+  // assignment and the codes depend only on the frozen centroids and
+  // codebooks.
 
   private def ivfPqCodesTable(name: String) = s"${name}_ivfpq_codes"
 
@@ -191,27 +180,14 @@ object AnnIndex {
     wh.overwrite(schema, codebooksTable(name),
       codebooks.select(col("sub"), col("label"), col("ce")))
     wh.overwrite(schema, ivfPqCodesTable(name),
-      encodeIvfPq(wh, schema, name, corpus, m, dim, idCol, embCol),
+      Similarity.pqEncode(corpus, wh.read(schema, codebooksTable(name)),
+          m, dim, idCol, embCol)
+        .join(Similarity.ivfAssign(corpus, wh.read(schema, centroidsTable(name)),
+            probes = 1, idCol, embCol)
+          .select(col(idCol), col("label").as("clist")), Seq(idCol))
+        .select(col(idCol).as("id"), col("sub"), col("label"), col("clist")),
       partitionBy = Seq("clist"))
   }
-
-  /** Assign + encode ONLY the arriving batch against the stored
-    * centroids/codebooks and append — O(batch), corpus never re-read. */
-  def appendIvfPq(wh: Warehouse, schema: String, name: String, newVectors: DataFrame,
-                  m: Int, dim: Int, idCol: String = "vec_id",
-                  embCol: String = "embedding"): Unit =
-    wh.append(schema, ivfPqCodesTable(name),
-      encodeIvfPq(wh, schema, name, newVectors, m, dim, idCol, embCol))
-
-  private def encodeIvfPq(wh: Warehouse, schema: String, name: String,
-                          vectors: DataFrame, m: Int, dim: Int,
-                          idCol: String, embCol: String): DataFrame =
-    Similarity.pqEncode(vectors, wh.read(schema, codebooksTable(name)),
-        m, dim, idCol, embCol)
-      .join(Similarity.ivfAssign(vectors, wh.read(schema, centroidsTable(name)),
-          probes = 1, idCol, embCol)
-        .select(col(idCol), col("label").as("clist")), Seq(idCol))
-      .select(col(idCol).as("id"), col("sub"), col("label"), col("clist"))
 
   /** IVFADC top-k from the store — identical results to
     * `Similarity.ivfPqTopK` over the same corpus, coarse centroids, and
@@ -238,9 +214,8 @@ object AnnIndex {
   // ---- composed IVF+SQ8 store: coarse lists prune, byte codes (4× over
   // raw floats) reconstruct-and-score. The frozen model is the
   // (centroids, bounds) pair — per-dim corpus bounds are as much a model
-  // artifact as a codebook, so they freeze at build and appended batches
-  // encode against them (append-equals-rebuild holds over the frozen
-  // pair, exactly like PQ over its codebooks).
+  // artifact as a codebook, so they freeze at build and the corpus
+  // encodes against the stored pair, as PQ against its codebooks.
 
   private def sq8BoundsTable(name: String) = s"${name}_sq8_bounds"
   private def sq8CodesTable(name: String) = s"${name}_sq8_codes"
@@ -254,23 +229,12 @@ object AnnIndex {
     wh.overwrite(schema, centroidsTable(name), centroids.select(col("label"), col("ce")))
     wh.overwrite(schema, sq8BoundsTable(name), bounds.select(col("lo"), col("hi")))
     wh.overwrite(schema, sq8CodesTable(name),
-      encodeSq8(wh, schema, name, corpus, idCol, embCol),
+      Similarity.ivfSq8Encode(corpus,
+          wh.read(schema, centroidsTable(name)),
+          wh.read(schema, sq8BoundsTable(name)), idCol, embCol)
+        .select(col(idCol).as("id"), col("label"), col("sq_codes")),
       partitionBy = Seq("label"))
   }
-
-  /** Assign + encode ONLY the arriving batch against the stored frozen
-    * (centroids, bounds) and append — O(batch). */
-  def appendSq8(wh: Warehouse, schema: String, name: String, newVectors: DataFrame,
-                idCol: String = "vec_id", embCol: String = "embedding"): Unit =
-    wh.append(schema, sq8CodesTable(name),
-      encodeSq8(wh, schema, name, newVectors, idCol, embCol))
-
-  private def encodeSq8(wh: Warehouse, schema: String, name: String,
-                        vectors: DataFrame, idCol: String, embCol: String): DataFrame =
-    Similarity.ivfSq8Encode(vectors,
-        wh.read(schema, centroidsTable(name)),
-        wh.read(schema, sq8BoundsTable(name)), idCol, embCol)
-      .select(col(idCol).as("id"), col("label"), col("sq_codes"))
 
   /** IVF+SQ8 top-k from the store — identical results to
     * `Similarity.ivfSq8TopK` over the same corpus, centroids, and bounds.
@@ -293,8 +257,7 @@ object AnnIndex {
   // ---- binary sign-word store: 16 bytes of Hamming shortlist state per
   // vector, with the quantized embedding co-stored for the exact rerank.
   // Sign words are a pure row-local function of the vector (centroid- and
-  // codebook-independent), so append-equals-rebuild holds TRIVIALLY — no
-  // frozen model state exists to drift from.
+  // codebook-independent): no frozen model state exists to drift from.
 
   private def signsTable(name: String) = s"${name}_signs"
 
@@ -304,17 +267,10 @@ object AnnIndex {
     * fetches `qe` only for shortlisted candidates. */
   def buildHamming(wh: Warehouse, schema: String, name: String, corpus: DataFrame,
                    idCol: String = "vec_id", embCol: String = "embedding"): Unit =
-    wh.overwrite(schema, signsTable(name), signRows(corpus, idCol, embCol))
-
-  /** Sign ONLY the arriving batch and append — O(batch). */
-  def appendHamming(wh: Warehouse, schema: String, name: String, newVectors: DataFrame,
-                    idCol: String = "vec_id", embCol: String = "embedding"): Unit =
-    wh.append(schema, signsTable(name), signRows(newVectors, idCol, embCol))
-
-  private def signRows(vectors: DataFrame, idCol: String, embCol: String): DataFrame =
-    Similarity.signWords(vectors, "c", idCol, embCol)
-      .select(col("c").as("id"), col("c_w0").as("w0"), col("c_w1").as("w1"),
-        col("c_qe").as("qe"))
+    wh.overwrite(schema, signsTable(name),
+      Similarity.signWords(corpus, "c", idCol, embCol)
+        .select(col("c").as("id"), col("c_w0").as("w0"), col("c_w1").as("w1"),
+          col("c_qe").as("qe")))
 
   /** Binary-shortlist + exact-rerank top-k from the stored sign words —
     * identical results to `Similarity.hammingTopK` over the same corpus.

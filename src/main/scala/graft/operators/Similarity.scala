@@ -443,8 +443,7 @@ object Similarity {
     * from it directly rather than re-scanning the corpus and joining the
     * codes back on id (a second full-corpus exchange for data the assign
     * output already holds). Codes depend only on the frozen (centroids,
-    * bounds) pair, so append-equals-rebuild holds for any store built on
-    * them. */
+    * bounds) pair. */
   def ivfSq8Encode(vectors: DataFrame, centroids: DataFrame, bounds: DataFrame,
                    idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
     ivfAssign(vectors, centroids, probes = 1, idCol, embCol)

@@ -163,19 +163,4 @@ object Relational {
       .filter(col("action").isNotNull)
       .select(keys.map(k => coalesce(col(k), col("__n_" + k)).as(k)) :+ col("action"): _*)
   }
-
-  /** UPDATE .. WHERE key IN (subquery) as read→when→rewrite.
-    * Reference: etl_manager.py:821-866 (J6). Keys dataframe is expected to
-    * be registry-scale → broadcast semi-join, no shuffle of the fact side.
-    */
-  def updateWhereIn(target: DataFrame, keyRows: DataFrame, keys: Seq[String],
-                    assignments: Map[String, Column]): DataFrame = {
-    val marked = target.join(
-      broadcast(keyRows.select(keys.map(col): _*).distinct().withColumn("__hit", lit(1))),
-      keys, "left")
-    val updated = assignments.foldLeft(marked) { case (df, (c, v)) =>
-      df.withColumn(c, when(col("__hit") === 1, v).otherwise(col(c)))
-    }
-    updated.drop("__hit").select(target.columns.map(col): _*)
-  }
 }

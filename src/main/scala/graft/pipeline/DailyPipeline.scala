@@ -124,12 +124,17 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
   }
 
   /** Run the full daily pipeline for the next open date. Returns the
-    * executed date and the task results. */
+    * executed date and the task results.
+    *
+    * `etl_dates` is written once per run, at its end: the closing write
+    * also moves `current_date_flag` to the run's date. Nothing reads the
+    * flag during a run, so a run that dies mid-day leaves it on the last
+    * completed run; [[ControlPlane.nextEtlDate]] picks by `status`, so
+    * the resume is unaffected. */
   def run(sources: Seq[SourceSpec]): (String, Workflow.RunResult) = {
     val calendar = wh.read("op_metadata", "etl_dates")
     val etlDate = ControlPlane.nextEtlDate(calendar)
       .getOrElse(throw new IllegalStateException("empty calendar"))
-    wh.overwrite("op_metadata", "etl_dates", ControlPlane.setCurrentDate(calendar, etlDate))
 
     // the resume gate: one collect for every source, none before day 1
     val done =
@@ -186,11 +191,11 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
       .toDF("etl_date", "source_name", "task_id", "status"))
     wh.append("op_metadata", "task_log", taskRows)
     // failed runs also persist the rendered error-summary report rows
-    // (send_email.py:654-667 — the email body's source of truth)
-    val errorReport = ControlPlane.renderErrorSummary(taskRows)
-    if (!errorReport.isEmpty)
+    // (send_email.py:654-667 — the email body's source of truth); the run
+    // result already says whether any task failed, so the gate starts no job
+    if (!result.allSuccess)
       wh.append("check", "error_report",
-        errorReport.withColumn("etl_date", lit(etlDate)))
+        ControlPlane.renderErrorSummary(taskRows).withColumn("etl_date", lit(etlDate)))
     // roll up to run rows and close the date when all sources succeeded.
     // run_id is a fresh uuid and created_at a real timestamp: re-runs of a
     // failed date must produce a strictly NEWER run row, or the
@@ -208,7 +213,7 @@ class DailyPipeline(spark: SparkSession, wh: Warehouse) {
     }.toDF("etl_date", "source_name", "run_id", "created_at", "status"))
     wh.append("op_metadata", "run_log", runRows)
     wh.overwrite("op_metadata", "etl_dates",
-      ControlPlane.closeEtlDate(wh.read("op_metadata", "etl_dates"),
+      ControlPlane.closeEtlDate(ControlPlane.setCurrentDate(calendar, etlDate),
         wh.read("op_metadata", "run_log"), etlDate))
     (etlDate, result)
   }

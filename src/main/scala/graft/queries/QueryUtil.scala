@@ -20,4 +20,14 @@ private[queries] object QueryUtil {
     finally walk.close()
     out
   }
+
+  /** The one-shot registry form of a store-lifecycle query: run its
+    * `build`, return its `serve`. Bench times the same pair phase by
+    * phase, so the oracle-checked rows and the timed rows share one
+    * definition. */
+  def buildThenServe(pair: (() => Unit, () => DataFrame)): DataFrame = {
+    val (build, serve) = pair
+    build()
+    serve()
+  }
 }

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -285,6 +285,90 @@ class ControlPlaneSpec extends SparkSpec {
       ("a", 4L, 3L, 0L, "mismatch"),   // staging short
       ("b", 4L, 4L, 1L, "mismatch"),   // hub incomplete
       ("c", 4L, 4L, 0L, "match")))
+  }
+
+  /** The five-branch syncRegistry the one-pass version replaced (J2
+    * registerNew, the delete and reused change rows, J3 retireMissing and
+    * J4 reactivate over a J6 keyed update), kept as the parity reference. */
+  private def syncByBranches(registry: DataFrame, incoming: DataFrame, keys: Seq[String],
+                             loadDate: Column): (DataFrame, DataFrame) = {
+    val keyCols = keys.map(col)
+    def updateWhereIn(target: DataFrame, keyRows: DataFrame,
+                      assignments: Map[String, Column]): DataFrame = {
+      val marked = target.join(
+        broadcast(keyRows.select(keyCols: _*).distinct().withColumn("__hit", lit(1))),
+        keys, "left")
+      assignments.foldLeft(marked) { case (df, (c, v)) =>
+        df.withColumn(c, when(col("__hit") === 1, v).otherwise(col(c)))
+      }.drop("__hit").select(target.columns.map(col): _*)
+    }
+    val fresh = incoming.join(registry, keys, "left_anti")
+      .withColumn("active_status", lit(1))
+      .withColumn("retire_date", lit(null).cast("string"))
+      .withColumn("load_date", loadDate)
+    val gone = registry.filter(col("active_status") === 1).select(keyCols: _*)
+      .join(incoming, keys, "left_anti")
+    val retired = updateWhereIn(registry, gone,
+      Map("active_status" -> lit(0), "retire_date" -> loadDate))
+    val back = retired.filter(col("active_status") === 0).select(keyCols: _*)
+      .join(incoming, keys, "left_semi")
+    val updated = updateWhereIn(retired, back,
+      Map("active_status" -> lit(1), "retire_date" -> lit(null).cast("string")))
+    val adds = fresh.select(keyCols: _*).withColumn("change_type", lit("add"))
+    val goneKeys = gone.withColumn("change_type", lit("delete"))
+    val backKeys = registry.filter(col("active_status") === 0).select(keyCols: _*)
+      .join(incoming, keys, "left_semi").withColumn("change_type", lit("reused"))
+    (updated.unionByName(fresh.select(updated.columns.map(col): _*)),
+      adds.unionByName(goneKeys).unionByName(backKeys))
+  }
+
+  private def bag(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
+  test("syncRegistry equals the five-branch formulation on random registries") {
+    val keys = Seq("model", "kind")
+    val seen = scala.collection.mutable.Set.empty[String]
+    (1 to 5).foreach { seed =>
+      val rnd = new Random(seed)
+      val pool = (0 until 12).map(i => (s"m$i", if (i % 3 == 0) "link" else "hub"))
+      // active and retired keys, some registered twice (mixed statuses too)
+      val registry = pool.filter(_ => rnd.nextInt(4) != 0).flatMap { case (m, k) =>
+        (0 until (if (rnd.nextInt(4) == 0) 2 else 1)).map { c =>
+          val active = rnd.nextInt(2)
+          (m, k, s"r$c", active, if (active == 0) "2024-01-02" else null, "2024-01-01")
+        }
+      }.toDF("model", "kind", "note", "active_status", "retire_date", "load_date")
+      // returning, still-present and new keys, some arriving twice
+      val incoming = pool.filter(_ => rnd.nextInt(2) == 0).flatMap { case (m, k) =>
+        (0 until (if (rnd.nextInt(4) == 0) 2 else 1)).map(c => (m, k, s"i$c"))
+      }.toDF("model", "kind", "note")
+      val (merged, changes) = ControlPlane.syncRegistry(registry, incoming, keys, lit("2024-01-05"))
+      val (refMerged, refChanges) = syncByBranches(registry, incoming, keys, lit("2024-01-05"))
+      assert(bag(merged) === bag(refMerged), s"seed $seed registry")
+      assert(bag(changes) === bag(refChanges), s"seed $seed change log")
+      seen ++= changes.select("change_type").as[String].collect()
+    }
+    assert(seen === Set("add", "delete", "reused"))
+  }
+
+  test("three chained syncs read the first registry once and match the reference step by step") {
+    def local(df: DataFrame) = spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    val keys = Seq("model")
+    var chained = registry
+    var reference = registry
+    Seq(Seq("m1", "m3", "m4"), Seq("m1", "m2"), Seq("m2", "m3", "m4", "m5")).zipWithIndex
+      .foreach { case (models, day) =>
+        val incoming = models.toDF("model")
+        val date = lit(s"2024-01-0${day + 5}")
+        val (next, changes) = ControlPlane.syncRegistry(chained, incoming, keys, date)
+        val (refNext, refChanges) = syncByBranches(reference, incoming, keys, date)
+        assert(bag(changes) === bag(refChanges), s"sync ${day + 1} change log")
+        chained = next
+        reference = local(refNext)
+      }
+    // the starting registry and the three incoming frames, one scan each
+    assert(chained.queryExecution.analyzed.collectLeaves().size === 4)
+    assert(bag(chained) === bag(reference))
   }
 
   test("syncRegistry is idempotent on a second identical sync") {

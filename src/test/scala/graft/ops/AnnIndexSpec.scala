@@ -138,22 +138,6 @@ class AnnIndexSpec extends SparkSpec {
       "the scan must list exactly the probed clist directories")
   }
 
-  test("IVF+PQ append-then-query equals rebuild (assignment and codes are model-pure)") {
-    val emb = Tables(spark, sf, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-    val (m, dim) = (4, 64)
-    val coarse = Similarity.kmeansCentroids(emb, k = 8, iters = 2)
-    val cb = Similarity.pqCodebooks(emb, m, k = 8, dim = dim, iters = 2)
-    val incr = freshWh()
-    AnnIndex.buildIvfPq(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 0),
-      coarse, cb, m, dim)
-    AnnIndex.appendIvfPq(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 1), m, dim)
-    val full = freshWh()
-    AnnIndex.buildIvfPq(full, "ann", "emb", emb, coarse, cb, m, dim)
-    assert(rows(AnnIndex.topKIvfPq(incr, "ann", "emb", queries, k = 5, probes = 2, m, dim)) ===
-      rows(AnnIndex.topKIvfPq(full, "ann", "emb", queries, k = 5, probes = 2, m, dim)))
-  }
-
   test("stats: counts track appends, shares sum to ~1, empty lists surface with n=0") {
     val emb = Tables(spark, sf, "embeddings")
     // plant a guaranteed-empty list: label 999 duplicates label 0's
@@ -211,21 +195,6 @@ class AnnIndexSpec extends SparkSpec {
       "the scan must list exactly the probed label directories")
   }
 
-  test("IVF+SQ8 append-then-query equals rebuild (codes are frozen-(centroids,bounds)-pure)") {
-    val emb = Tables(spark, sf, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-    val coarse = Similarity.kmeansCentroids(emb, k = 8, iters = 2)
-    val bounds = Similarity.sq8Bounds(emb) // frozen model: same bounds both stores
-    val incr = freshWh()
-    AnnIndex.buildSq8(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 0),
-      coarse, bounds)
-    AnnIndex.appendSq8(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 1))
-    val full = freshWh()
-    AnnIndex.buildSq8(full, "ann", "emb", emb, coarse, bounds)
-    assert(rows(AnnIndex.topKSq8(incr, "ann", "emb", queries, k = 5, probes = 2)) ===
-      rows(AnnIndex.topKSq8(full, "ann", "emb", queries, k = 5, probes = 2)))
-  }
-
   private def hammingRows(df: org.apache.spark.sql.DataFrame) =
     df.select("q_id", "neighbor_id", "hamming", "cos_e4", "rank")
       .as[(Long, Long, Int, Long, Int)].collect().sortBy(r => (r._1, r._5)).toSeq
@@ -255,31 +224,5 @@ class AnnIndexSpec extends SparkSpec {
       s"one scan must read exactly (id,w0,w1); got $schemas")
     assert(schemas.exists(s => !s.contains("w0") && s.contains("qe")),
       s"the qe fetch must not re-read the words; got $schemas")
-  }
-
-  test("Hamming append-then-query equals rebuild (sign words are row-pure)") {
-    val emb = Tables(spark, sf, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-    val incr = freshWh()
-    AnnIndex.buildHamming(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 0))
-    AnnIndex.appendHamming(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 1))
-    val full = freshWh()
-    AnnIndex.buildHamming(full, "ann", "emb", emb)
-    assert(hammingRows(AnnIndex.topKHamming(incr, "ann", "emb", queries, k = 5)) ===
-      hammingRows(AnnIndex.topKHamming(full, "ann", "emb", queries, k = 5)))
-  }
-
-  test("PQ append-then-query equals rebuild (codes are codebook-pure)") {
-    val emb = Tables(spark, sf, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-    val (m, dim) = (4, 64)
-    val cb = Similarity.pqCodebooks(emb, m, k = 8, dim = dim, iters = 2)
-    val incr = freshWh()
-    AnnIndex.buildPq(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 0), cb, m, dim)
-    AnnIndex.appendPq(incr, "ann", "emb", emb.filter(col("vec_id") % 2 === 1), m, dim)
-    val full = freshWh()
-    AnnIndex.buildPq(full, "ann", "emb", emb, cb, m, dim)
-    assert(rows(AnnIndex.topKPq(incr, "ann", "emb", queries, k = 5, m, dim)) ===
-      rows(AnnIndex.topKPq(full, "ann", "emb", queries, k = 5, m, dim)))
   }
 }

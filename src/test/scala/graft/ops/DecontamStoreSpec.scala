@@ -237,20 +237,6 @@ class DecontamStoreSpec extends SparkSpec {
     assert(DecontamStore.evalGrams(wh, "g", "dc", 4).count() > gramsOnce)
   }
 
-  test("the bench build/serve split yields exactly the registered " +
-    "q169/q177 rows (the split changes WHAT IS TIMED, never the result)") {
-    val (b169, s169) = graft.queries.CorpusQueries.q169BuildServe(spark, sf)
-    b169()
-    assert(s169().collect().toSeq ===
-      graft.queries.CorpusQueries.all("q169_decontam_store")(spark, sf)
-        .collect().toSeq)
-    val (b177, s177) = graft.queries.CorpusQueries.q177BuildServe(spark, sf)
-    b177()
-    assert(s177().collect().toSeq ===
-      graft.queries.CorpusQueries.all("q177_decontam_curve_store")(spark, sf)
-        .collect().toSeq)
-  }
-
   test("attribution accounts for every verdict hit (a corpus gram matching " +
     "k eval docs contributes k attribution rows but one verdict gram)") {
     val wh = new Warehouse(spark, Files.createTempDirectory("graft_dca_wh_").toString)

@@ -88,14 +88,6 @@ class RelationalSpec extends SparkSpec {
     assert(once.collect().toSet == twice.collect().toSet)
   }
 
-  test("updateWhereIn updates only keyed rows") {
-    val target = Seq((1, "a", 0), (2, "b", 0), (3, "c", 0)).toDF("k", "v", "flag")
-    val keys = Seq(Tuple1(2), Tuple1(3)).toDF("k")
-    val got = Relational.updateWhereIn(target, keys, Seq("k"), Map("flag" -> lit(1)))
-      .collect().map(r => (r.getInt(0), r.getInt(2))).toSet
-    assert(got == Set((1, 0), (2, 1), (3, 1)))
-  }
-
   test("mergeAggregates refresh equals recompute, including min/max") {
     val raw = Seq(("a", 1L), ("a", 5L), ("b", 2L), ("a", 3L), ("b", 7L))
       .toDF("k", "v")

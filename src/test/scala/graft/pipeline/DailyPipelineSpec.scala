@@ -58,10 +58,15 @@ class DailyPipelineSpec extends SparkSpec {
   test("second run picks the next date; rerun of a closed day is resume-safe") {
     val (wh, p) = freshSetup()
     val specs = Seq(customersSpec(p))
+    // one etl_dates version per run, its flag on that run's date only
+    def flagged() = wh.read("op_metadata", "etl_dates")
+      .filter(col("current_date_flag") === 1).select("etl_date").as[String].collect().toSeq
     val (d1, r1) = p.run(specs)
     r1.assertAllSuccess()
+    assert(wh.currentVersion("op_metadata", "etl_dates") === 2L && flagged() === Seq(d1))
     val (d2, r2) = p.run(specs)
     r2.assertAllSuccess()
+    assert(wh.currentVersion("op_metadata", "etl_dates") === 3L && flagged() === Seq(d2))
     assert(d1 === "2024-01-01" && d2 === "2024-01-02")
     // hub merge is idempotent across the two runs
     assert(wh.read("raw_vault", "hub_customer").count() ===
