@@ -109,19 +109,25 @@ object ControlPlane {
 
   /** Render the report rows the reference emails (send_email.py:569-650
     * template replacement, F4) — one HTML table row per source plus a
-    * totals row, entirely via format_string (no driver-side string loop). */
+    * totals row, entirely via format_string (no driver-side string loop).
+    * One pass over the report: a single global aggregate collects the
+    * rendered rows and sums the totals, and the rows then the totals row
+    * explode out of it. Report rows are registry-scale (sources ×
+    * schemas), so the collected array is small, and the aggregate over a
+    * one-partition report plans no exchange. An empty report still
+    * renders its totals row, with zeros. */
   def renderCompletionReport(report: DataFrame): DataFrame = {
-    val rows = report.select(
-      col("source_name"), col("schema_name"),
-      format_string("<tr><td>%s</td><td>%s</td><td>%d</td><td>%d</td><td>%d</td></tr>",
-        col("source_name"), col("schema_name"),
-        col("n_total"), col("n_success"), col("n_failure")).as("html_row"))
-    val totals = report.agg(
-      sum(col("n_total")).as("t"), sum(col("n_success")).as("s"), sum(col("n_failure")).as("f"))
-      .select(lit("_total").as("source_name"), lit("").as("schema_name"),
-        format_string("<tr><td>TOTAL</td><td></td><td>%d</td><td>%d</td><td>%d</td></tr>",
-          col("t"), col("s"), col("f")).as("html_row"))
-    rows.unionByName(totals)
+    val counts = Seq("n_total", "n_success", "n_failure")
+    def row(source: Column, schema: Column, label: Column): Column =
+      struct(source.as("source_name"), schema.as("schema_name"),
+        format_string("<tr><td>%s</td><td>%s</td><td>%d</td><td>%d</td><td>%d</td></tr>",
+          label +: schema +: counts.map(col): _*).as("html_row"))
+    report
+      .agg(collect_list(row(col("source_name"), col("schema_name"), col("source_name"))).as("rows"),
+        counts.map(c => coalesce(sum(col(c)), lit(0L)).as(c)): _*)
+      .select(explode(concat(col("rows"),
+        array(row(lit("_total"), lit(""), lit("TOTAL"))))).as("r"))
+      .select("r.*")
   }
 
   /** Drift-detail report (send_email.py:26-63): the schemadrift rows of one

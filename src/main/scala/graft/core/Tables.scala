@@ -9,7 +9,9 @@ import org.apache.spark.sql.types._
   * Every `SparkEntry.queries` entry receives `(spark, sfDir)` and resolves
   * its inputs through here — one place to control scan options. Parquet
   * scans get predicate pushdown + column pruning from Catalyst for free;
-  * nothing is cached here (queries are one-shot in Verify/Bench).
+  * nothing is cached here (queries are one-shot in Verify/Bench). A
+  * fixture Spark wrote opens with its footer schema and starts no Spark
+  * job ([[ParquetFooter]]); any other runs Spark's inference.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,7 +19,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = ParquetFooter.read(spark, Seq(s"$sfDir/$name.parquet"))
     if (name == "events")
       df.withColumn("ts", normalizeEventTs(df.schema("ts").dataType))
     else df

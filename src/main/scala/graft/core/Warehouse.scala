@@ -2,16 +2,9 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
-import scala.util.Try
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.ops.Relational
 
@@ -123,7 +116,7 @@ class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** An unpartitioned table reads with the schema in one data file's
-    * footer ([[footerSchema]]), so opening it starts no Spark job.
+    * footer ([[ParquetFooter]]), so opening it starts no Spark job.
     * A hive-partitioned table appended more than once has SEVERAL
     * partitioned roots (`data/v1/label=…`, `data/v2/label=…`) — Spark's
     * multi-path reader refuses to infer partitions across them
@@ -132,7 +125,7 @@ class Warehouse(spark: SparkSession, root: String) {
     * applies per root (each scan keeps its partition columns). */
   private def readDirs(schema: String, table: String, dirs: Seq[String]): DataFrame =
     if (partitioning(schema, table).isEmpty)
-      footerSchema(dirs).fold(spark.read.parquet(dirs: _*))(spark.read.schema(_).parquet(dirs: _*))
+      ParquetFooter.read(spark, dirs)
     else if (dirs.size > 1) {
       // an empty partitioned write leaves a dir with no parquet footers
       // (no partition values existed to create subdirs) — it contributes
@@ -140,36 +133,12 @@ class Warehouse(spark: SparkSession, root: String) {
       val nonEmpty = dirs.filter { d =>
         val it = fs.listFiles(new Path(d), true)
         var found = false
-        while (!found && it.hasNext) found = isDataFile(it.next().getPath.getName)
+        while (!found && it.hasNext) found = ParquetFooter.isDataFile(it.next().getPath.getName)
         found
       }
       val use = if (nonEmpty.nonEmpty) nonEmpty else dirs
       use.map(spark.read.parquet(_)).reduce(_ unionByName _)
     } else spark.read.parquet(dirs: _*)
-
-  /** Spark's file listing skips `_`- and `.`-prefixed names (`_SUCCESS`,
-    * `.crc` checksums). */
-  private def isDataFile(name: String): Boolean = !name.startsWith("_") && !name.startsWith(".")
-
-  /** The schema `spark.read.parquet(dirs)` infers, read on the driver:
-    * without schema merging Spark takes it from the data file with the
-    * smallest full path, as the Spark schema JSON in that file's footer.
-    * None, and so Spark's own inference job, when schema merging is on,
-    * when there is no data file, or when the footer carries no Spark
-    * schema (a file Spark did not write). */
-  private def footerSchema(dirs: Seq[String]): Option[StructType] =
-    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
-    else dirs.flatMap(d => fs.listStatus(new Path(d)).toSeq)
-      .filter(f => f.isFile && isDataFile(f.getPath.getName))
-      .minByOption(_.getPath.toString)
-      .flatMap { f =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
-          HadoopReadOptions.builder(conf).withMetadataFilter(SKIP_ROW_GROUPS).build())
-        val json = try Option(reader.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")) finally reader.close()
-        json.flatMap(j => Try(DataType.fromJson(j)).toOption).collect { case s: StructType => s }
-      }
 
   private def commit(dir: String, v: Long, rels: Seq[String]): Unit = {
     writeFile(logPath(dir, v), rels.mkString("\n"))

@@ -236,9 +236,12 @@ object Dedup {
     * verify sets' bytes — a conservative gate (may choose shuffles where
     * the exact measure would broadcast; never broadcasts something over
     * budget). The all-docs bound sums band 0's buckets (every doc has
-    * exactly one row per band) — the bound the sampled-curve callers
-    * need, where the verify join scopes to every (sampled) doc rather
-    * than LSH candidates.
+    * exactly one row per band). When it fits the budget the verify skips
+    * candidate scoping altogether and joins the candidates straight
+    * against every doc's broadcast set ([[jaccardFromSets]]'s unscoped
+    * verdict) — read off the same census, so still no extra action. It is
+    * also the bound the sampled-curve callers need, where the verify join
+    * covers every (sampled) doc rather than LSH candidates.
     *
     * An uncapped call with a positive budget refuses exactly as
     * [[lshCandidatePairs]] does: the same census, the same refusal. */
@@ -378,13 +381,20 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel
     // ONE barrier replaces the old census + verify-size-gate pair: the
     // bucket census over the single-exchange band cache guards the pair
-    // budget AND picks the verify join strategy (candidatePairsWithGate)
+    // budget AND picks the verify join strategy (candidatePairsWithGate):
+    // unscoped broadcast, scoped broadcast, or scoped shuffle
     val stage = candidatePairsWithGate(sig, idCol, k, b,
       maxBucketSize, candidatePairBudget)
-    val cands = stage.candidates.persist(StorageLevel.MEMORY_AND_DISK)
+    // when every doc's set fits the broadcast the verify reads the
+    // candidates once (no id scoping), so only the scoped path caches them
+    val allSetsFit = stage.allBytes <= verifyBroadcastBytes
+    val cands =
+      if (allSetsFit) stage.candidates
+      else stage.candidates.persist(StorageLevel.MEMORY_AND_DISK)
     val pairs = jaccardFromSets(
       sig.select(col(idCol), col("shs"), col("sz")), idCol, minJaccard,
-      cands, verifyBroadcastBytes, smallHint = Some(stage.keptBytes <= verifyBroadcastBytes))
+      cands, verifyBroadcastBytes, smallHint = Some(stage.keptBytes <= verifyBroadcastBytes),
+      allSetsFit = allSetsFit)
     // pairs are O(candidates) — tiny next to the inputs; checkpointing them
     // lets the heavyweight caches go before the caller even runs an action
     val out = pairs.localCheckpoint(true)
@@ -533,34 +543,45 @@ object Dedup {
     * sets are md5-60bit long arrays (intersection cardinality identical to
     * string sets, collision odds ~2^-60 per pair), SORTED ascending and
     * distinct per doc (signatureFrame's contract — the verify intersect is
-    * a sorted two-pointer merge), scoped to docs that appear in a candidate
-    * pair. The intermediate is O(|pairs|) rows — never |pairs| × |shingles|
-    * join rows.
+    * a sorted two-pointer merge). The intermediate is O(|pairs|) rows —
+    * never |pairs| × |shingles| join rows.
     *
-    * Size-gated join strategy: the scoped sets' size is measured (8 bytes
-    * per hash + per-row overhead); under `broadcastBudgetBytes` both verify
-    * sides broadcast (zero shuffle — the common case when LSH candidates
-    * are a tiny corpus slice), above it every join runs as a shuffle hash
-    * join on uniform id keys — a boilerplate-heavy 100 TB corpus degrades
-    * to shuffles instead of a driver OOM. */
+    * Join strategy, cheapest first:
+    *   - `allSetsFit` (a census bounds EVERY doc's set under
+    *     `broadcastBudgetBytes`): the candidates join straight against the
+    *     broadcast sets — no candidate-id union, distinct or semi-join.
+    *   - otherwise the sets are scoped to docs that appear in a candidate
+    *     pair and their size is gated (8 bytes per hash + per-row
+    *     overhead): under the budget both verify sides broadcast the scoped
+    *     sets, above it every join runs as a shuffle hash join on uniform
+    *     id keys — a boilerplate-heavy 100 TB corpus degrades to shuffles
+    *     instead of a driver OOM. `smallHint` is a census verdict on the
+    *     scoped sets; without one the gate measures them (one action). */
   private[graft] def jaccardFromSets(sets0: DataFrame, idCol: String,
                                          minJaccard: Double, candidates: DataFrame,
                                          broadcastBudgetBytes: Long = DefaultVerifyBroadcastBytes,
-                                         smallHint: Option[Boolean] = None): DataFrame = {
-    val candidateIds = candidates.select(col("a_id").as(idCol))
-      .union(candidates.select(col("b_id").as(idCol))).distinct()
-    val scoped = sets0.join(candidateIds, Seq(idCol), "left_semi")
+                                         smallHint: Option[Boolean] = None,
+                                         allSetsFit: Boolean = false): DataFrame = {
+    // a census bound on EVERY doc's set under the budget makes scoping
+    // the sets to the candidates' ids pointless: they broadcast whole
+    val sets =
+      if (allSetsFit) sets0
+      else {
+        val candidateIds = candidates.select(col("a_id").as(idCol))
+          .union(candidates.select(col("b_id").as(idCol))).distinct()
+        sets0.join(candidateIds, Seq(idCol), "left_semi")
+      }
     // strategy gate: the envelope callers pass the census-derived verdict
     // (candidatePairsWithGate — no extra barrier); standalone callers pay
     // one cheap agg over the scoped sz column
-    val small = smallHint.getOrElse {
-      val stats = scoped.agg(
+    val small = allSetsFit || smallHint.getOrElse {
+      val stats = sets.agg(
         coalesce(sum(col("sz")), lit(0L)).as("hashes"),
         count(lit(1)).as("docs")).head()
       stats.getLong(0) * 8L + stats.getLong(1) * 48L <= broadcastBudgetBytes
     }
-    val aSide = scoped.select(col(idCol).as("a_id"), col("shs").as("sh_a"), col("sz").as("sz_a"))
-    val bSide = scoped.select(col(idCol).as("b_id"), col("shs").as("sh_b"), col("sz").as("sz_b"))
+    val aSide = sets.select(col(idCol).as("a_id"), col("shs").as("sh_a"), col("sz").as("sz_a"))
+    val bSide = sets.select(col(idCol).as("b_id"), col("shs").as("sh_b"), col("sz").as("sz_b"))
     val joined =
       if (small)
         candidates.select(col("a_id"), col("b_id"))
@@ -586,8 +607,10 @@ object Dedup {
     * n-grams would otherwise pair everything — the standard winnowing
     * deployment step, and the join-size bound at scale: the per-fingerprint
     * fan-out is capped at maxDocFreq²). Fingerprint extraction is
-    * row-local; the only shuffles are the doc-frequency groupBy and the
-    * pair join on uniform 60-bit keys. */
+    * row-local and runs once per call: the doc-frequency cut and the pair
+    * self-join read one hash-by-fingerprint exchange
+    * ([[stopFingerprintCut]]); the pair aggregate is the only other
+    * shuffle, on uniform 60-bit keys. */
   def winnowingPairs(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 5, w: Int = 4, minShared: Long = 10L,
                      maxDocFreq: Long = 30L): DataFrame =
@@ -597,40 +620,38 @@ object Dedup {
 
   /** [[winnowingPairs]] from an ALREADY-EXTRACTED fingerprint frame
     * (idCol, fp) — the [[graft.streaming.StreamingWinnow]] serving seam:
-    * stop-filter, pair aggregate, shared cut; text never touched. */
+    * stop-fingerprint cut, pair aggregate, shared cut; text never touched. */
   def winnowingPairsFromFingerprints(fps: DataFrame, idCol: String,
                                      minShared: Long = 10L,
-                                     maxDocFreq: Long = 30L): DataFrame = {
-    val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDocFreq).select(col("fp"))
-    val scoped = fps.join(keep, Seq("fp"))
-    scoped.select(col("fp"), col(idCol).as("a_id"))
-      .join(scoped.select(col("fp"), col(idCol).as("b_id")), Seq("fp"))
+                                     maxDocFreq: Long = 30L): DataFrame =
+    sharedFingerprintPairs(stopFingerprintCut(fps, maxDocFreq), idCol)
+      .filter(col("shared") >= minShared)
+
+  /** The fingerprint rows (idCol, fp) of every fingerprint that occurs in
+    * at most `maxDocFreq` rows. The rows are hashed by fp once, and both
+    * the doc frequency (a count over a window partitioned by fp) and the
+    * pair self-join above the cut read that one exchange: the fingerprint
+    * frame is shuffled, and its row-local kernel evaluated, once per call.
+    * The exchange is explicit so this holds for a one-partition input too,
+    * where the window alone would plan none and each join side would
+    * re-run the kernel. At scale a hot fingerprint (a boilerplate n-gram
+    * in millions of docs) has its whole group buffered by the window
+    * before the cut drops it; the buffer spills to disk past
+    * `spark.sql.windowExec.buffer.spill.threshold` rows, where an
+    * aggregate would count the group without buffering it. */
+  private def stopFingerprintCut(fps: DataFrame, maxDocFreq: Long): DataFrame =
+    fps.repartition(col("fp")).withColumn("__df",
+      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
+      .filter(col("__df") <= maxDocFreq)
+      .drop("__df")
+
+  /** (a_id, b_id, shared): shared fingerprint rows per doc pair, a_id < b_id. */
+  private def sharedFingerprintPairs(kept: DataFrame, idCol: String): DataFrame =
+    kept.select(col("fp"), col(idCol).as("a_id"))
+      .join(kept.select(col("fp"), col(idCol).as("b_id")), Seq("fp"))
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
-  }
 
-  /** 60-bit SimHash over distinct whitespace tokens: bit j of the signature
-    * is set iff the sum over tokens of (±1 by token-hash bit j) is positive.
-    * Entirely row-local (codegen'd SimHash60 over the token-hash array) —
-    * no explode, no shuffle; docs with zero tokens get signature 0. */
-  /** Directional containment pairs: winnowing-fingerprint candidates
-    * scored by |A∩B| / |A| and |A∩B| / |B| — the asymmetric "is A mostly
-    * INSIDE B" signal symmetric Jaccard structurally misses: a 100-word
-    * quote embedded in a 10k-word page has Jaccard ≈ 0.01 but
-    * containment ≈ 1.0 on the quote side. The quote / syndicated-excerpt
-    * / partial-plagiarism detector, and the right cut for "drop the doc
-    * that is a subset of another" curation. Winnowing (not MinHash) is
-    * the correct candidate stage here — shared selected-min fingerprints
-    * survive asymmetric sizes, while MinHash banding is Jaccard-biased
-    * and misses subset pairs by construction.
-    *
-    * Scale shape: q38's exact plan — row-local fingerprints, stop-fp
-    * filter caps per-fingerprint fan-out at maxDocFreq², pair aggregate
-    * on uniform 60-bit keys; the per-doc fingerprint counts ride the
-    * SAME scoped frame (persisted, scanned twice, released), and the
-    * containment division is two integer DIVs on the pair frame. */
   /** The per-doc winnowing fingerprint rows (idCol, fp) — the expensive
     * row-local stage of the q38/q161 family, exposed as a seam so a
     * STREAMING ingest can extract each document's fingerprints exactly
@@ -647,6 +668,23 @@ object Dedup {
       .repartition(fanoutPartitions(df))
       .select(col(idCol), explode(winnowingFingerprints(col(textCol), n, w)).as("fp"))
 
+  /** Directional containment pairs: winnowing-fingerprint candidates
+    * scored by |A∩B| / |A| and |A∩B| / |B| — the asymmetric "is A mostly
+    * INSIDE B" signal symmetric Jaccard structurally misses: a 100-word
+    * quote embedded in a 10k-word page has Jaccard ≈ 0.01 but
+    * containment ≈ 1.0 on the quote side. The quote / syndicated-excerpt
+    * / partial-plagiarism detector, and the right cut for "drop the doc
+    * that is a subset of another" curation. Winnowing (not MinHash) is
+    * the correct candidate stage here — shared selected-min fingerprints
+    * survive asymmetric sizes, while MinHash banding is Jaccard-biased
+    * and misses subset pairs by construction.
+    *
+    * Scale shape: q38's exact plan — row-local fingerprints, stop-fp
+    * cut capping per-fingerprint fan-out at maxDocFreq², pair aggregate
+    * on uniform 60-bit keys; the per-doc fingerprint counts aggregate the
+    * SAME cut frame (its one fp exchange is reused, so the kernel still
+    * runs once), and the containment division is two integer DIVs on the
+    * pair frame. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 5, w: Int = 4, minShared: Long = 10L,
                        maxDocFreq: Long = 30L, minContainE4: Long = 5000L): DataFrame =
@@ -656,21 +694,17 @@ object Dedup {
 
   /** [[containmentPairs]] from an ALREADY-EXTRACTED fingerprint frame
     * (idCol, fp) — e.g. read back from [[graft.streaming.StreamingWinnow]]'s
-    * store. Same stop-filter, pair aggregate, and containment cuts; text
-    * is never touched. */
+    * store. Same stop-fingerprint cut, pair aggregate, and containment
+    * cuts; text is never touched. The cut frame feeds both the pairs and
+    * the per-doc counts through its one fp exchange, so nothing is cached
+    * and the result stays lazy. */
   def containmentPairsFromFingerprints(fps: DataFrame, idCol: String,
                                        minShared: Long = 10L,
                                        maxDocFreq: Long = 30L,
                                        minContainE4: Long = 5000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDocFreq).select(col("fp"))
-    val scoped = fps.join(keep, Seq("fp")).persist(StorageLevel.MEMORY_AND_DISK)
-    val sizes = scoped.groupBy(col(idCol)).agg(count(lit(1)).as("nf"))
-    val out = scoped.select(col("fp"), col(idCol).as("a_id"))
-      .join(scoped.select(col("fp"), col(idCol).as("b_id")), Seq("fp"))
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("shared"))
+    val kept = stopFingerprintCut(fps, maxDocFreq)
+    val sizes = kept.groupBy(col(idCol)).agg(count(lit(1)).as("nf"))
+    sharedFingerprintPairs(kept, idCol)
       .filter(col("shared") >= minShared)
       .join(sizes.select(col(idCol).as("a_id"), col("nf").as("nf_a")), Seq("a_id"))
       .join(sizes.select(col(idCol).as("b_id"), col("nf").as("nf_b")), Seq("b_id"))
@@ -678,11 +712,12 @@ object Dedup {
         expr("shared * 10000L div nf_a").as("cont_a_e4"),
         expr("shared * 10000L div nf_b").as("cont_b_e4"))
       .filter(greatest(col("cont_a_e4"), col("cont_b_e4")) >= minContainE4)
-      .localCheckpoint(true)
-    scoped.unpersist()
-    out
   }
 
+  /** 60-bit SimHash over distinct whitespace tokens: bit j of the signature
+    * is set iff the sum over tokens of (±1 by token-hash bit j) is positive.
+    * Entirely row-local (codegen'd SimHash60 over the token-hash array) —
+    * no explode, no shuffle; docs with zero tokens get signature 0. */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), col(textCol))
       .repartition(fanoutPartitions(df)) // spread row-local work
@@ -1021,11 +1056,13 @@ object Dedup {
     val universe = broadcast(ids.select(col(idCol).as("a_id")))
       .join(ids.select(col(idCol).as("b_id")), col("a_id") < col("b_id"))
     // one census action serves both the candidate stage's budget guard
-    // and the exact side's verify gate (the universe scopes to EVERY
-    // sampled doc, so the all-docs bound is the right one)
+    // and the exact side's verify gate (the universe covers EVERY sampled
+    // doc, so the all-docs bound is the right one, and scoping the sets to
+    // it would keep them all)
     val stage = candidatePairsWithGate(sig, idCol, k, b, None, PairCensus.DefaultBudget)
+    val allSetsFit = stage.allBytes <= DefaultVerifyBroadcastBytes
     val scored = jaccardFromSets(sig, idCol, minJaccard = 0.0, universe,
-      smallHint = Some(stage.allBytes <= DefaultVerifyBroadcastBytes))
+      smallHint = Some(allSetsFit), allSetsFit = allSetsFit)
     val caught = stage.candidates.withColumn("__caught", lit(1L))
     val nBins = 10000 / binWidthE4
     val out = scored

@@ -136,6 +136,50 @@ class ControlPlaneSpec extends SparkSpec {
     }
   }
 
+  /** The two-branch rendering renderCompletionReport replaced: the rows
+    * and the totals row each read the report, so it is evaluated twice. */
+  private def renderByBranches(report: DataFrame): DataFrame = {
+    val rows = report.select(
+      col("source_name"), col("schema_name"),
+      format_string("<tr><td>%s</td><td>%s</td><td>%d</td><td>%d</td><td>%d</td></tr>",
+        col("source_name"), col("schema_name"),
+        col("n_total"), col("n_success"), col("n_failure")).as("html_row"))
+    val totals = report.agg(
+      sum(col("n_total")).as("t"), sum(col("n_success")).as("s"), sum(col("n_failure")).as("f"))
+      .select(lit("_total").as("source_name"), lit("").as("schema_name"),
+        format_string("<tr><td>TOTAL</td><td></td><td>%d</td><td>%d</td><td>%d</td></tr>",
+          col("t"), col("s"), col("f")).as("html_row"))
+    rows.unionByName(totals)
+  }
+
+  test("renderCompletionReport equals the two-branch rendering; an empty report totals zeros") {
+    def html(df: DataFrame) = df.select("source_name", "schema_name", "html_row")
+      .as[(String, String, String)].collect().sorted.toSeq
+    val statuses = Seq("success", "failed", "skipped", null)
+    val logs = (1 to 5).map { seed =>
+      val rnd = new Random(seed)
+      Seq.fill(40)((
+        Seq("src_a", "src_b", "src_c", "src_d")(rnd.nextInt(4)),
+        Seq("staging", "raw_vault")(rnd.nextInt(2)),
+        if (rnd.nextInt(10) == 0) null else s"t${rnd.nextInt(6)}",
+        statuses(rnd.nextInt(statuses.size))))
+    } :+ Seq( // HousekeepingSpec's completion-report log
+      ("src_a", "staging", "t1", "success"), ("src_a", "staging", "t2", "failed"),
+      ("src_b", "vault", "t1", "success"))
+    logs.zipWithIndex.foreach { case (log, i) =>
+      val report = ControlPlane.completionReport(
+        log.toDF("source_name", "schema_name", "task_id", "status"))
+      val got = html(ControlPlane.renderCompletionReport(report))
+      assert(got === html(renderByBranches(report)), s"log $i")
+      assert(got.count(_._1 == "_total") === 1)
+    }
+    val empty = ControlPlane.completionReport(
+      Seq.empty[(String, String, String, String)]
+        .toDF("source_name", "schema_name", "task_id", "status"))
+    assert(html(ControlPlane.renderCompletionReport(empty)) ===
+      Seq(("_total", "", "<tr><td>TOTAL</td><td></td><td>0</td><td>0</td><td>0</td></tr>")))
+  }
+
   /** Spark jobs each action starts, by job group: listener events arrive
     * in order, so once a marker job is seen, every earlier job has been. */
   private def jobsPerAction(actions: Seq[(String, () => Unit)]): Map[String, Int] = {

@@ -1,11 +1,16 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Union}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, PairBudgetExceeded, Similarity}
+import graft.operators.{Dedup, PairBudgetExceeded, PairCensus, Similarity}
 
 /** Unit semantics for dedup + similarity operators on hand-built data —
   * the invariants the fixtures can't pin (exact survivors, known near-dups,
@@ -340,6 +345,145 @@ class DedupSimSpec extends SparkSpec {
     // signature/candidate intermediates must be gone
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.size <= 1, s"expected at most the checkpoint RDD, got ${added.size} new cached RDDs")
+  }
+
+  /** The stop-fingerprint cut the one-exchange window replaced: a
+    * doc-frequency groupBy(fp) branch joined back onto the rows. */
+  private def keptByJoin(fps: DataFrame, maxDocFreq: Long): DataFrame = {
+    val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= maxDocFreq).select(col("fp"))
+    fps.join(keep, Seq("fp"))
+  }
+
+  private def winnowingByJoin(fps: DataFrame, minShared: Long, maxDocFreq: Long): DataFrame = {
+    val scoped = keptByJoin(fps, maxDocFreq)
+    scoped.select(col("fp"), col("doc_id").as("a_id"))
+      .join(scoped.select(col("fp"), col("doc_id").as("b_id")), Seq("fp"))
+      .filter(col("a_id") < col("b_id"))
+      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= minShared)
+  }
+
+  private def containmentByJoin(fps: DataFrame, minShared: Long, maxDocFreq: Long,
+                                minContainE4: Long): DataFrame = {
+    val sizes = keptByJoin(fps, maxDocFreq).groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
+    winnowingByJoin(fps, minShared, maxDocFreq)
+      .join(sizes.select(col("doc_id").as("a_id"), col("nf").as("nf_a")), Seq("a_id"))
+      .join(sizes.select(col("doc_id").as("b_id"), col("nf").as("nf_b")), Seq("b_id"))
+      .select(col("a_id"), col("b_id"), col("shared"),
+        expr("shared * 10000L div nf_a").as("cont_a_e4"),
+        expr("shared * 10000L div nf_b").as("cont_b_e4"))
+      .filter(greatest(col("cont_a_e4"), col("cont_b_e4")) >= minContainE4)
+  }
+
+  private def rowBag(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  test("stop-fingerprint cut equals the groupBy + join formulation for winnowing and containment") {
+    val maxDocFreq = 3L
+    // fp 100: df == maxDocFreq (kept); fp 101: df == maxDocFreq + 1
+    // (dropped); fp 102: a duplicated (id, fp) row; fp 103: one doc only
+    val edges = Seq((1L, 100L), (2L, 100L), (3L, 100L),
+      (1L, 101L), (2L, 101L), (3L, 101L), (4L, 101L),
+      (1L, 102L), (1L, 102L), (2L, 102L),
+      (5L, 103L))
+    val edgeFps = edges.toDF("doc_id", "fp")
+    assert(Dedup.winnowingPairsFromFingerprints(edgeFps, "doc_id", 1L, maxDocFreq)
+      .as[(Long, Long, Long)].collect().sorted.toSeq === Seq((1L, 2L, 3L), (1L, 3L, 1L), (2L, 3L, 1L)))
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val drawn = Seq.fill(120)((1L + rnd.nextInt(12), 200L + rnd.nextInt(25)))
+      val fps = rnd.shuffle(drawn ++ edges).toDF("doc_id", "fp")
+      for (minShared <- Seq(1L, 2L)) {
+        val w = rowBag(Dedup.winnowingPairsFromFingerprints(fps, "doc_id", minShared, maxDocFreq))
+        assert(w.nonEmpty)
+        assert(w === rowBag(winnowingByJoin(fps, minShared, maxDocFreq)), s"seed $seed")
+        for (minContainE4 <- Seq(0L, 5000L))
+          assert(rowBag(Dedup.containmentPairsFromFingerprints(fps, "doc_id", minShared,
+            maxDocFreq, minContainE4)) ===
+            rowBag(containmentByJoin(fps, minShared, maxDocFreq, minContainE4)),
+            s"seed $seed minShared $minShared minContainE4 $minContainE4")
+      }
+    }
+  }
+
+  /** Query stages of an executed adaptive plan whose own operators (not
+    * those of the stages they read) evaluate an expression named `kernel`;
+    * a reused exchange is a leaf, so a stage read twice counts once. */
+  private def stagesEvaluating(df: DataFrame, kernel: String): Int = {
+    def evaluates(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.prettyName == kernel)) || p.children.exists(evaluates)
+    def roots(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: QueryStageExec => roots(s.plan)
+      case _ => p +: p.collectLeaves().collect { case s: QueryStageExec => s }.flatMap(roots)
+    }
+    val root = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    roots(root).count(evaluates)
+  }
+
+  test("winnowingPairs and containmentPairs evaluate the winnow_mins kernel in one stage per call") {
+    val corpus = docs.union(Seq(
+      (6L, "PREFIX AAA the quick brown fox jumps over the extremely lazy dog again"),
+      (7L, "other start the quick brown fox jumps over the extremely lazy dog again end")
+    ).toDF("doc_id", "text"))
+    val w = Dedup.winnowingPairs(corpus, "doc_id", "text", minShared = 1L, maxDocFreq = 3L)
+    val c = Dedup.containmentPairs(corpus, "doc_id", "text", minShared = 1L, maxDocFreq = 3L,
+      minContainE4 = 0L)
+    for ((name, df) <- Seq("winnowingPairs" -> w, "containmentPairs" -> c)) {
+      assert(df.collect().nonEmpty, name)
+      assert(stagesEvaluating(df, "winnow_mins") === 1, s"$name:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("verify joins the candidates straight against every set when the census says all fit") {
+    val sets = Seq(
+      (1L, Array(10L, 11L, 12L, 13L), 4L),
+      (2L, Array(10L, 11L, 12L, 14L), 4L),
+      (3L, Array(20L, 21L), 2L),
+      (4L, Array(30L, 31L), 2L),
+      (5L, Array(40L, 41L), 2L)
+    ).toDF("doc_id", "shs", "sz")
+    val cands = Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id")
+    def scoping(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case u: Union => u
+      case j: Join if j.joinType == LeftSemi => j
+    }
+    val unscoped = Dedup.jaccardFromSets(sets, "doc_id", 0.5, cands, allSetsFit = true)
+    assert(scoping(unscoped).isEmpty, unscoped.queryExecution.optimizedPlan.toString)
+    assert(unscoped.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"))
+    val scoped = Dedup.jaccardFromSets(sets, "doc_id", 0.5, cands, smallHint = Some(true))
+    assert(scoping(scoped).nonEmpty)
+    val shuffled = Dedup.jaccardFromSets(sets, "doc_id", 0.5, cands, broadcastBudgetBytes = 0L)
+    assert(scoping(shuffled).nonEmpty)
+    val shuffledPlan = shuffled.queryExecution.sparkPlan.toString
+    assert(shuffledPlan.contains("ShuffledHashJoin") && !shuffledPlan.contains("BroadcastExchange"),
+      shuffledPlan)
+    val want = rowBag(scoped)
+    assert(want === Seq("1|2|6000"))
+    assert(rowBag(unscoped) === want && rowBag(shuffled) === want)
+
+    // through the census: the default budget fits every set (unscoped), a
+    // budget of the scoped bound alone broadcasts the scoped sets, and a
+    // zero budget shuffles them — the same verified pairs each way
+    val rnd = new scala.util.Random(7)
+    val corpus = docs.union(Seq.tabulate(20)(i =>
+      (100L + i, Seq.fill(30)(s"w${rnd.nextInt(100000)}").mkString(" "))).toDF("doc_id", "text"))
+    val sig = Dedup.signDocuments(corpus, "doc_id", "text").cache()
+    try {
+      val stage = Dedup.candidatePairsWithGate(sig, "doc_id", 16, 4, None, PairCensus.DefaultBudget)
+      stage.bands.unpersist()
+      assert(stage.keptBytes < stage.allBytes &&
+        stage.allBytes <= Dedup.DefaultVerifyBroadcastBytes, stage.census.toString)
+      def pairs(budget: Long) = Dedup.nearDupPairsFromSignatures(sig, "doc_id",
+        verifyBroadcastBytes = budget).as[(Long, Long, Long)].collect().sorted.toSeq
+      val ref = pairs(Dedup.DefaultVerifyBroadcastBytes)
+      assert(ref.map(p => (p._1, p._2)).contains((1L, 2L)))
+      assert(pairs(stage.keptBytes) === ref)
+      assert(pairs(0L) === ref)
+    } finally sig.unpersist()
   }
 
   test("simhash: identical docs hamming 0; banded pairs ⊆ hamming ≤ 3") {
